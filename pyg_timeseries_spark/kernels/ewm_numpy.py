@@ -74,15 +74,24 @@ def _ewm_sweep(
     holding [t0, t1, t2, t3, w2, n0, n1, valid] AFTER processing each row
     (NaN rows carry valid=0; their trail entries are unused).
 
-    Dispatches to the numba-JIT twin when numba is importable, else to the
-    ctypes-compiled C twin when a system compiler exists (both identical
-    arithmetic, asserted bit-equal in tests); otherwise runs the
-    python-float loop below.
+    Dispatches to the ctypes-compiled C twin (kernels/cnative.py:ewm_sweep
+    — identical arithmetic, asserted bit-equal in tests/test_cnative.py)
+    when a system compiler exists; otherwise runs the python-float loop
+    below, the reference the twin is checked against.
     """
-    if _ewm_sweep_jit is not None or _cnative.available():
-        return _ewm_sweep_fast(a, w, time, wgt, state, upto, track_w2)
     n_rows = a.shape[0]
     s = fresh_state() if state is None else np.asarray(state, dtype=np.float64).copy()
+    if _cnative.available():
+        trail = np.zeros((n_rows, 8))
+        _cnative.ewm_sweep_arrays(
+            np.ascontiguousarray(a, float), w,
+            np.full(n_rows, np.nan) if time is None
+            else np.ascontiguousarray(time, float),
+            np.ones(n_rows) if wgt is None
+            else np.ascontiguousarray(wgt, float),
+            s, upto, track_w2, trail,
+        )
+        return trail, s
     t, t0, t1, t2, t3, w2, n0, n1 = (
         s[_T], s[_T0], s[_T1], s[_T2], s[_T3], s[_W2], s[_N0], s[_N1],
     )
@@ -322,106 +331,16 @@ def _guard_state(state):
     return s
 
 
-def _guarded_sweep_arrays(a, time, wgt, w, exc_zero, mm_arr, min_periods,
-                          min_sample, is_std, bias, s, res):
-    """Array-typed twin of the guarded loop (numba-JIT-able unchanged).
-    mm_arr: per-row max_move (all-0 == off); time all-nan == no clock;
-    wgt all-1 == unweighted.  Mutates s (GSTATE layout) and res."""
-    omw = 1.0 - w
-    t, t0, t1, t2 = s[0], s[1], s[2], s[3]
-    w2, n0, n1 = s[5], s[6], s[7]
-    pv, pa = s[8], s[9]
-    t1u, t2u, prev_res, pa_raw = s[10], s[11], s[12], s[13]
-    for i in range(a.shape[0]):
-        araw = a[i]
-        if araw != araw:
-            continue
-        mm = mm_arr[i]
-        if is_std:
-            bound = prev_res * mm if mm > 0 else 0.0
-            if n0 < min_sample or n1 < min_periods:
-                vol = np.nan
-            elif t0 <= 0:
-                vol = np.nan
-            else:
-                variance = t2u / t0 - (t1u / t0) ** 2
-                if variance < 0:
-                    vol = np.nan
-                elif bias:
-                    vol = np.sqrt(variance)
-                else:
-                    r = 1.0 - w2 / (t0 * t0)
-                    vol = np.sqrt(variance / r) if r > 0 else np.nan
-            clip_ok = mm > 0 and vol > 0 and bound == bound and bound > 0
-        else:
-            vol = 0.0 if t0 == 0 else np.sqrt(t2u / t0)
-            bound = vol * mm
-            clip_ok = mm > 0 and vol > 0
-        ai = min(max(araw, -bound), bound) if clip_ok else araw
-        vi = omw * wgt[i]
-        ti = time[i]
-        if exc_zero and ai == 0:
-            pass
-        elif ti == t:
-            t0 = t0 + vi - pv
-            t1 = t1 + vi * ai - pv * pa
-            t2 = t2 + vi * ai * ai - pv * pa * pa
-            t1u = t1u + vi * araw - pv * pa_raw
-            t2u = t2u + vi * araw * araw - pv * pa_raw * pa_raw
-        else:
-            if ti != ti or t != t:
-                p = w
-            else:
-                p = w ** (ti - t)
-            n1 += 1.0
-            n0 = n0 * p + omw
-            w2 = w2 * p * p + vi * vi
-            t0 = t0 * p + vi
-            t1 = t1 * p + vi * ai
-            t2 = t2 * p + vi * ai * ai
-            t1u = t1u * p + vi * araw
-            t2u = t2u * p + vi * araw * araw
-            t = ti
-        pv, pa, pa_raw = vi, ai, araw
-        if is_std:
-            if n0 < min_sample or n1 < min_periods:
-                res[i] = np.nan
-            elif t0 <= 0:
-                res[i] = np.nan
-            else:
-                variance = t2 / t0 - (t1 / t0) ** 2
-                if variance < 0:
-                    res[i] = np.nan
-                elif bias:
-                    res[i] = np.sqrt(variance)
-                else:
-                    r = 1.0 - w2 / (t0 * t0)
-                    res[i] = np.sqrt(variance / r) if r > 0 else np.nan
-        else:
-            res[i] = np.nan if (t0 == 0 or n1 < min_periods) else np.sqrt(t2 / t0)
-        prev_res = res[i]
-    s[0], s[1], s[2], s[3] = t, t0, t1, t2
-    s[5], s[6], s[7], s[8], s[9] = w2, n0, n1, pv, pa
-    s[10], s[11], s[12], s[13] = t1u, t2u, prev_res, pa_raw
-
-
-try:  # pragma: no cover - exercised only on hosts with numba installed
-    import numba as _numba_g
-
-    _guarded_sweep_jit = _numba_g.njit(nogil=True, cache=True)(_guarded_sweep_arrays)
-except ImportError:
-    _guarded_sweep_jit = None
-
-
 def _guarded_sweep(a, n, time, wgt, state, exc_zero, max_move, min_periods,
                    min_sample, mode, bias=False):
-    """mode: 'rms' or 'std'.  Dispatches to the numba or C twin when
-    available."""
-    if _guarded_sweep_jit is not None or _cnative.available():
-        w = decay_weight(n)
-        s = _guard_state(state)
-        n_rows = a.shape[0]
-        res = np.full(n_rows, np.nan)
+    """mode: 'rms' or 'std'.  Dispatches to the C twin
+    (kernels/cnative.py:guarded_sweep) when available, else runs the loop
+    below."""
+    w = decay_weight(n)
+    s = _guard_state(state)
+    n_rows = a.shape[0]
+    res = np.full(n_rows, np.nan)
+    if _cnative.available():
         time_arr = np.full(n_rows, np.nan) if time is None else np.ascontiguousarray(time, float)
         wgt_arr = np.ones(n_rows) if wgt is None else np.ascontiguousarray(wgt, float)
         if max_move is None:
@@ -430,23 +349,17 @@ def _guarded_sweep(a, n, time, wgt, state, exc_zero, max_move, min_periods,
             mm = np.ascontiguousarray(max_move, float)
         else:
             mm = np.full(n_rows, float(max_move))
-        fn = (_guarded_sweep_jit if _guarded_sweep_jit is not None
-              else _cnative.guarded_sweep_arrays)
-        fn(
+        _cnative.guarded_sweep_arrays(
             np.ascontiguousarray(a, float), time_arr, wgt_arr, w,
             bool(exc_zero), mm, float(min_periods), float(min_sample),
             mode == "std", bool(bias), s, res,
         )
         return res, s
-    w = decay_weight(n)
     omw = 1.0 - w
-    s = _guard_state(state)
     t, t0, t1, t2 = s[_T], s[_T0], s[_T1], s[_T2]
     w2, n0, n1 = s[_W2], s[_N0], s[_N1]
     pv, pa = s[_PV], s[_PA]
     t1u, t2u, prev_res, pa_raw = s[_GT1U], s[_GT2U], s[_GPREV_RES], s[_GPA_RAW]
-    n_rows = a.shape[0]
-    res = np.full(n_rows, np.nan)
     have_time = time is not None
     have_wgt = wgt is not None
     mm_arr = max_move if isinstance(max_move, np.ndarray) else None
@@ -518,110 +431,3 @@ def _std_calc_scalar(t0, t1, t2, w2, bias):
         return np.sqrt(variance)
     r = 1.0 - w2 / (t0 * t0)
     return np.sqrt(variance / r) if r > 0 else np.nan
-
-
-# ---- numba-optional fast path ------------------------------------------------
-# The array-typed twin of _ewm_sweep: identical arithmetic, ndarray-only
-# signature (no None/lists) so numba can JIT it unchanged on clusters that
-# have numba installed (est. 30-100x).  Bit-parity with the list-based loop
-# is asserted in tests; without numba the list loop stays the default (it is
-# faster than interpreted ndarray indexing).
-
-def _ewm_sweep_arrays(a, w, time, wgt, s, upto, track_w2, trail):
-    """a/time/wgt: float64[:] (time all-nan for 'no clock', wgt all-1 for
-    unweighted); s: float64[STATE_LEN] (mutated); trail: (n, 8) float64
-    (mutated).  Returns nothing — outputs via s and trail."""
-    one_minus_w = 1.0 - w
-    t = s[0]
-    t0 = s[1]
-    t1 = s[2]
-    t2 = s[3]
-    t3 = s[4]
-    w2 = s[5]
-    n0 = s[6]
-    n1 = s[7]
-    pv = s[8]
-    pa = s[9]
-    for i in range(a.shape[0]):
-        ai = a[i]
-        if ai != ai:
-            continue
-        vi = one_minus_w * wgt[i]
-        ti = time[i]
-        if ti == t:  # nan never equals nan → only true for real clocks
-            t0 = t0 + vi - pv
-            t1 = t1 + vi * ai - pv * pa
-            if upto >= 2:
-                t2 = t2 + vi * ai * ai - pv * pa * pa
-            if upto >= 3:
-                t3 = t3 + vi * ai * ai * ai - pv * pa * pa * pa
-        else:
-            if ti != ti or t != t:
-                p = w
-            else:
-                p = w ** (ti - t)
-            n1 += 1.0
-            n0 = n0 * p + one_minus_w
-            t0 = t0 * p + vi
-            t1 = t1 * p + vi * ai
-            if upto >= 2:
-                t2 = t2 * p + vi * ai * ai
-            if upto >= 3:
-                t3 = t3 * p + vi * ai * ai * ai
-            if track_w2:
-                w2 = w2 * p * p + vi * vi
-            t = ti
-        pv = vi
-        pa = ai
-        trail[i, 0] = t0
-        trail[i, 1] = t1
-        # untracked moment columns stay 0 (bit-parity with _ewm_sweep,
-        # whose loop only writes the tracked columns)
-        if upto >= 2:
-            trail[i, 2] = t2
-        if upto >= 3:
-            trail[i, 3] = t3
-        if track_w2:
-            trail[i, 4] = w2
-        trail[i, 5] = n0
-        trail[i, 6] = n1
-        trail[i, 7] = 1.0
-    s[0] = t
-    s[1] = t0
-    s[2] = t1
-    s[3] = t2
-    s[4] = t3
-    s[5] = w2
-    s[6] = n0
-    s[7] = n1
-    s[8] = pv
-    s[9] = pa
-
-
-try:  # pragma: no cover - exercised only on hosts with numba installed
-    import numba as _numba
-
-    _ewm_sweep_jit = _numba.njit(nogil=True, cache=True)(_ewm_sweep_arrays)
-except ImportError:
-    _ewm_sweep_jit = None
-
-
-def _ewm_sweep_fast(a, w, time=None, wgt=None, state=None, upto=1,
-                    track_w2=False):
-    """JIT/C-dispatching sweep with the same contract as _ewm_sweep."""
-    n_rows = a.shape[0]
-    s = fresh_state() if state is None else np.asarray(state, float).copy()
-    trail = np.zeros((n_rows, 8))
-    time_arr = np.full(n_rows, np.nan) if time is None else np.asarray(time, float)
-    wgt_arr = np.ones(n_rows) if wgt is None else np.asarray(wgt, float)
-    if _ewm_sweep_jit is not None:
-        fn = _ewm_sweep_jit
-    elif _cnative.available():
-        fn = _cnative.ewm_sweep_arrays
-        time_arr = np.ascontiguousarray(time_arr)
-        wgt_arr = np.ascontiguousarray(wgt_arr)
-    else:
-        fn = _ewm_sweep_arrays
-    fn(np.ascontiguousarray(a, float), w, time_arr, wgt_arr, s, upto,
-       track_w2, trail)
-    return trail, s

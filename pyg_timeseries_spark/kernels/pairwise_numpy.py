@@ -34,79 +34,21 @@ def fresh_xstate() -> np.ndarray:
     return s
 
 
-def _xsweep_arrays(a, b, w, time, s, trail):
-    """Array-typed twin of _xsweep: identical arithmetic, ndarray-only
-    signature so numba can JIT it unchanged (time all-nan == 'no clock').
-    Mutates s and trail in place."""
-    one_minus_w = 1.0 - w
-    t, t0, a1, a2 = s[0], s[1], s[2], s[3]
-    b1, b2, ab, w2 = s[4], s[5], s[6], s[7]
-    n0, n1, pa, pb = s[8], s[9], s[10], s[11]
-    for i in range(a.shape[0]):
-        ai, bi = a[i], b[i]
-        if ai != ai or bi != bi:
-            continue
-        ti = time[i]
-        if ti == t:  # nan never equals nan → only true for real clocks
-            a1 = a1 + one_minus_w * (ai - pa)
-            a2 = a2 + one_minus_w * (ai * ai - pa * pa)
-            b1 = b1 + one_minus_w * (bi - pb)
-            b2 = b2 + one_minus_w * (bi * bi - pb * pb)
-            ab = ab + one_minus_w * (ai * bi - pa * pb)
-        else:
-            if ti != ti or t != t:
-                p = w
-            else:
-                p = w ** (ti - t)
-            n1 += 1.0
-            n0 = n0 * p + one_minus_w
-            t0 = t0 * p + one_minus_w
-            a1 = a1 * p + one_minus_w * ai
-            a2 = a2 * p + one_minus_w * ai * ai
-            b1 = b1 * p + one_minus_w * bi
-            b2 = b2 * p + one_minus_w * bi * bi
-            ab = ab * p + one_minus_w * ai * bi
-            w2 = w2 * p * p + one_minus_w * one_minus_w
-            t = ti
-        pa, pb = ai, bi
-        trail[i, 0] = t0
-        trail[i, 1] = a1
-        trail[i, 2] = a2
-        trail[i, 3] = b1
-        trail[i, 4] = b2
-        trail[i, 5] = ab
-        trail[i, 6] = w2
-        trail[i, 7] = n0
-        trail[i, 8] = n1
-        trail[i, 9] = 1.0
-    s[0], s[1], s[2], s[3] = t, t0, a1, a2
-    s[4], s[5], s[6], s[7] = b1, b2, ab, w2
-    s[8], s[9], s[10], s[11] = n0, n1, pa, pb
-
-
-try:  # pragma: no cover - exercised only on hosts with numba installed
-    import numba as _numba
-
-    _xsweep_jit = _numba.njit(nogil=True, cache=True)(_xsweep_arrays)
-except ImportError:
-    _xsweep_jit = None
-
-
 def _xsweep(a, b, w, time=None, state=None):
+    """Pairwise moment-trail sweep: the C twin (kernels/cnative.py:xsweep)
+    when available, else the loop below.  Returns (trail, state)."""
     s = fresh_xstate() if state is None else np.asarray(state, float).copy()
-    if _xsweep_jit is not None or _cnative.available():
-        n_rows = a.shape[0]
-        trail = np.zeros((n_rows, 10))
+    n_rows = a.shape[0]
+    trail = np.zeros((n_rows, 10))
+    if _cnative.available():
         time_arr = (np.full(n_rows, np.nan) if time is None
                     else np.ascontiguousarray(time, float))
-        fn = _xsweep_jit if _xsweep_jit is not None else _cnative.xsweep_arrays
-        fn(np.ascontiguousarray(a, float), np.ascontiguousarray(b, float),
-           w, time_arr, s, trail)
+        _cnative.xsweep_arrays(np.ascontiguousarray(a, float),
+                               np.ascontiguousarray(b, float), w, time_arr,
+                               s, trail)
         return trail, s
     t, t0, a1, a2, b1, b2, ab, w2, n0, n1, pa, pb = s
     one_minus_w = 1.0 - w
-    n_rows = a.shape[0]
-    trail = np.zeros((n_rows, 10))
     have_time = time is not None
     for i in range(n_rows):
         ai, bi = a[i], b[i]

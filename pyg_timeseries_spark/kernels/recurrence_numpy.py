@@ -23,46 +23,6 @@ def _c_round(x: float) -> float:
     return np.floor(abs(x) + 0.5) * (1.0 if x >= 0 else -1.0)
 
 
-def _zmooth_arrays(a, smooth, w, max_move, exc_zero, s, res):
-    """Array-typed twin of the zmooth loop (numba-JIT-able unchanged;
-    smooth all-nan == 'no smooth').  Mutates s ([t0, t2, prev]) and res."""
-    one_minus_w = 1.0 - w
-    t0, t2, prev = s[0], s[1], s[2]
-    vol = 0.0 if t0 == 0 else np.sqrt(t2 / t0)
-    for i in range(a.shape[0]):
-        ai = a[i]
-        if ai != ai:
-            continue
-        if prev != prev:
-            res[i] = ai
-        else:
-            v = ai - prev
-            sign = np.sign(v)
-            if vol > 0 and abs(v) > max_move * vol:
-                si = smooth[i]
-                if si != si:
-                    v = sign * max_move * vol
-                elif np.sign(si - prev) == sign:
-                    v = si - prev
-                else:
-                    v = 0.0
-            res[i] = prev + v
-            if not (exc_zero and v == 0):
-                t0 = t0 * w + one_minus_w
-                t2 = t2 * w + one_minus_w * v * v
-                vol = 0.0 if t0 == 0 else np.sqrt(t2 / t0)
-        prev = res[i]
-    s[0], s[1], s[2] = t0, t2, prev
-
-
-try:  # pragma: no cover - exercised only on hosts with numba installed
-    import numba as _numba
-
-    _zmooth_jit = _numba.njit(nogil=True, cache=True)(_zmooth_arrays)
-except ImportError:
-    _zmooth_jit = None
-
-
 def zmooth(a, n, smooth=None, max_move=4.2, exc_zero=False, state=None):
     """Z-filter + median-smooth outlier clamp with EWM vol state.
 
@@ -78,16 +38,14 @@ def zmooth(a, n, smooth=None, max_move=4.2, exc_zero=False, state=None):
         t0, t2, prev = 0.0, 0.0, np.nan
     else:
         t0, t2, prev = (float(x) for x in state)
-    if _zmooth_jit is not None or _cnative.available():
+    res = np.full(a.shape[0], np.nan)
+    if _cnative.available():
         s = np.array([t0, t2, prev])
-        res = np.full(a.shape[0], np.nan)
         sm = (np.full(a.shape[0], np.nan) if smooth is None
               else np.ascontiguousarray(smooth, float))
-        fn = _zmooth_jit if _zmooth_jit is not None else _cnative.zmooth_arrays
-        fn(np.ascontiguousarray(a, float), sm, w, float(max_move),
-           bool(exc_zero), s, res)
+        _cnative.zmooth_arrays(np.ascontiguousarray(a, float), sm, w,
+                               float(max_move), bool(exc_zero), s, res)
         return res, s
-    res = np.full(a.shape[0], np.nan)
     vol = 0.0 if t0 == 0 else np.sqrt(t2 / t0)
     have_smooth = smooth is not None
     for i in range(a.shape[0]):
@@ -116,45 +74,6 @@ def zmooth(a, n, smooth=None, max_move=4.2, exc_zero=False, state=None):
     return res, np.array([t0, t2, prev])
 
 
-def _buffer_arrays(a, band, unit, rounding_band, s, res):
-    """Array-typed twin of the buffer loop (band always per-row).  Mutates
-    s ([pos, band_carry]) and res."""
-    pos, b = s[0], s[1]
-    if pos != pos:
-        pos = 0.0
-    for i in range(a.shape[0]):
-        ai = a[i]
-        if ai != ai:
-            continue
-        bi = band[i]
-        if bi == bi:
-            b = bi
-        if unit:
-            b_in_unit = max(b / unit, rounding_band)
-            a_in_unit = ai / unit
-            lb = (np.floor(abs(a_in_unit - b_in_unit) + 0.5)
-                  * (1.0 if a_in_unit - b_in_unit >= 0 else -1.0)) * unit
-            ub = (np.floor(abs(a_in_unit + b_in_unit) + 0.5)
-                  * (1.0 if a_in_unit + b_in_unit >= 0 else -1.0)) * unit
-        else:
-            lb = ai - b
-            ub = ai + b
-        if pos < lb:
-            pos = lb
-        elif pos > ub:
-            pos = ub
-        res[i] = pos
-    s[0], s[1] = pos, b
-
-
-try:  # pragma: no cover - exercised only on hosts with numba installed
-    import numba as _numba2
-
-    _buffer_jit = _numba2.njit(nogil=True, cache=True)(_buffer_arrays)
-except ImportError:
-    _buffer_jit = None
-
-
 def buffer(a, band, unit=0.0, rounding_band=0.0, state=None):
     """Hysteresis band: hold the previous position while the target stays
     inside [a-band, a+band]; optional unit rounding of the band edges."""
@@ -166,13 +85,12 @@ def buffer(a, band, unit=0.0, rounding_band=0.0, state=None):
         pos = 0.0
     res = np.full(a.shape[0], np.nan)
     scalar_band = np.isscalar(band)
-    if _buffer_jit is not None or _cnative.available():
+    if _cnative.available():
         s = np.array([pos, b])
         band_arr = (np.full(a.shape[0], float(band)) if scalar_band
                     else np.ascontiguousarray(band, float))
-        fn = _buffer_jit if _buffer_jit is not None else _cnative.buffer_arrays
-        fn(np.ascontiguousarray(a, float), band_arr, float(unit),
-           float(rounding_band), s, res)
+        _cnative.buffer_arrays(np.ascontiguousarray(a, float), band_arr,
+                               float(unit), float(rounding_band), s, res)
         return res, s
     for i in range(a.shape[0]):
         ai = a[i]
@@ -261,7 +179,8 @@ def rolling_tover(a, n=256, interval=None, state=None):
         total_variance = float(state[2 * n + 1])
         total_trades = float(state[2 * n + 2])
     res = np.empty(a.shape[0])
-    prev = positions[j]
+    # the last position written sits one slot behind the write cursor j
+    prev = positions[(j - 1) % n]
     total_years = n * interval
     for i in range(a.shape[0]):
         jj = (j + 1) % n

@@ -1,12 +1,14 @@
-"""EWM operators over long-format frames — Arrow-batched ``applyInPandas``
-around the sequential kernels in kernels/ewm_numpy.py.
+"""EWM operators over long-format frames — the sequential kernels in
+kernels/ewm_numpy.py run through ``_core.kernel_map``.
 
-This is the engine's one JVM↔Python boundary (SURVEY.md §3.4): per key the
-group arrives as a pandas DataFrame over Arrow, is swept once by the NumPy
+``kernel_map`` is the engine's one JVM↔Python boundary (SURVEY.md §3.4): per
+key the group arrives as a pandas DataFrame over Arrow, is swept once by the
 kernel, and returns the output column plus (for the ``*_`` stateful variants)
 one packed state row.  No per-row Python anywhere (input_hint requirement) —
 the kernel loop is per-row *inside* one vectorized batch, the same shape as
-the reference's numba kernels.
+the reference's kernels; where the reference JITs them with numba, this
+engine (which does not use numba) runs each loop's C twin
+(kernels/cnative.py), falling back to the Python loop.
 
 Scale notes:
 * groupBy(key).applyInPandas shuffles once on key; a group must fit in one
@@ -24,18 +26,13 @@ convention _decorators.py:21-31.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import ewm_numpy
-from pyg_timeseries_spark.kernels.ewm_numpy import STATE_LEN
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, VAL, f64, kernel_map, split_state,
+)
 
 
 def state_schema(key: str = KEY) -> T.StructType:
@@ -47,66 +44,22 @@ def state_schema(key: str = KEY) -> T.StructType:
     )
 
 
-def _with_prior(df: DataFrame, state_df: DataFrame | None, key: str) -> DataFrame:
-    if state_df is None:
-        return df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-    # state is one small row per key — always broadcast, never shuffle the fact side
-    return df.join(F.broadcast(prior), on=key, how="left")
-
-
-def _ewm_combined(
-    df: DataFrame,
-    kernel_name: str,
-    n: float,
-    key: str,
-    ts: str,
-    v: str,
-    out: str,
-    time_col: str | None,
-    state_df: DataFrame | None,
-    kernel_kwargs: dict,
-    wgt_col: str | None = None,
-) -> DataFrame:
-    """One applyInPandas pass emitting data rows + a packed state column that
-    is non-null only on the group's last row."""
+def _ewm_map(df, kernel_name, n, key, ts, v, out, time_col, wgt_col,
+             state_df, kernel_kwargs, with_state):
     kernel = ewm_numpy.KERNELS[kernel_name]
-    src = _with_prior(df, state_df, key)
-    out_fields = [f for f in df.schema.fields] + [
-        T.StructField(out, T.DoubleType()),
-        T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-    ]
-    out_schema = T.StructType(out_fields)
-    in_cols = [f.name for f in df.schema.fields]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        time = (
-            pdf[time_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if time_col
-            else None
+    def run(pdf, state):
+        return kernel(
+            f64(pdf, v), n,
+            time=f64(pdf, time_col) if time_col else None,
+            wgt=f64(pdf, wgt_col) if wgt_col else None,
+            state=state, **kernel_kwargs,
         )
-        wgt = (
-            pdf[wgt_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if wgt_col
-            else None
-        )
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None
-            and len(list(prior)) in (STATE_LEN, ewm_numpy.GSTATE_LEN)
-            else None
-        )
-        res, s = kernel(a, n, time=time, wgt=wgt, state=state, **kernel_kwargs)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
 
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(
+        df, key, ts, [out], run, state_df, with_state,
+        state_lens=(ewm_numpy.STATE_LEN, ewm_numpy.GSTATE_LEN),
+    )
 
 
 def _make_op(kernel_name: str, default_out: str):
@@ -122,11 +75,8 @@ def _make_op(kernel_name: str, default_out: str):
         state_df: DataFrame | None = None,
         **kernel_kwargs,
     ) -> DataFrame:
-        combined = _ewm_combined(
-            df, kernel_name, n, key, ts, v, out, time_col, state_df,
-            kernel_kwargs, wgt_col=wgt_col,
-        )
-        return combined.drop(_STATE_COL)
+        return _ewm_map(df, kernel_name, n, key, ts, v, out, time_col,
+                        wgt_col, state_df, kernel_kwargs, with_state=False)
 
     def op_(
         df: DataFrame,
@@ -144,18 +94,9 @@ def _make_op(kernel_name: str, default_out: str):
         """Stateful variant: returns (data, state) — the reference's
         ``Dict(data=…, state=…)`` pair (_decorators.py:21-31).  The combined
         frame is persisted so data and state come from one computation."""
-        combined = _ewm_combined(
-            df, kernel_name, n, key, ts, v, out, time_col, state_df,
-            kernel_kwargs, wgt_col=wgt_col,
-        )
-        if persist:
-            combined = combined.persist()
-        data = combined.drop(_STATE_COL)
-        state = (
-            combined.filter(F.col(_STATE_COL).isNotNull())
-            .select(F.col(key), F.col(_STATE_COL).alias("state"))
-        )
-        return data, state
+        combined = _ewm_map(df, kernel_name, n, key, ts, v, out, time_col,
+                            wgt_col, state_df, kernel_kwargs, with_state=True)
+        return split_state(combined, key, persist)
 
     op.__name__ = kernel_name
     op_.__name__ = kernel_name + "_"

@@ -14,24 +14,21 @@ the sequential scalar recurrence makes (head, then tail from head's
 state) bit-identical to one sweep, so plans/partitioning.py's segmented
 execution applies unchanged.
 
-Same execution shape as operators/ewm.py: one groupBy(key).applyInPandas
-pass (the engine's single JVM↔Python boundary), state = 3 doubles
+Same execution shape as operators/ewm.py: one ``_core.kernel_map`` pass
+(the engine's single JVM↔Python boundary), state = 3 doubles
 packable to array<double>.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import cnative as _cnative
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, VAL, f64, kernel_map, split_state,
+)
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 HOLT_STATE_LEN = 3  # [seen, level, trend]
 
 
@@ -72,41 +69,13 @@ def holt_kernel(
     return out, np.array([seen, lvl, trd], dtype=np.float64)
 
 
-def _holt_combined(df, alpha, beta, horizon, key, ts, v, out, state_df):
-    src = df
-    if state_df is None:
-        src = src.withColumn(
-            _PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType()))
-        )
-    else:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = src.join(F.broadcast(prior), on=key, how="left")
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(out, T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
+def _holt_map(df, alpha, beta, horizon, key, ts, v, out, state_df,
+              with_state):
+    def run(pdf, state):
+        return holt_kernel(f64(pdf, v), alpha, beta, horizon, state=state)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == HOLT_STATE_LEN
-            else None
-        )
-        res, s = holt_kernel(a, alpha, beta, horizon, state=state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(HOLT_STATE_LEN,))
 
 
 def holt(
@@ -121,9 +90,8 @@ def holt(
     state_df: DataFrame | None = None,
 ) -> DataFrame:
     """Fitted Holt level (or h-step forecast) per row."""
-    return _holt_combined(
-        df, alpha, beta, horizon, key, ts, v, out, state_df
-    ).drop(_STATE_COL)
+    return _holt_map(df, alpha, beta, horizon, key, ts, v, out, state_df,
+                     with_state=False)
 
 
 def holt_(
@@ -139,16 +107,9 @@ def holt_(
     persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stateful variant: (data, state) pair, resumable bit-for-bit."""
-    combined = _holt_combined(
-        df, alpha, beta, horizon, key, ts, v, out, state_df
-    )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _holt_map(df, alpha, beta, horizon, key, ts, v, out, state_df,
+                         with_state=True)
+    return split_state(combined, key, persist)
 
 
 # ---------------------------------------------------------------------------
@@ -226,42 +187,14 @@ def holt_winters_kernel(
     return out, np.concatenate(([seen, lvl, trd], sea))
 
 
-def _hw_combined(df, alpha, beta, gamma, m, key, ts, v, out, state_df):
-    src = df
-    if state_df is None:
-        src = src.withColumn(
-            _PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType()))
-        )
-    else:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = src.join(F.broadcast(prior), on=key, how="left")
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [
-            T.StructField(out, T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
-        ]
-    )
-    in_cols = [f.name for f in df.schema.fields]
-    state_len = 3 + m
+def _hw_map(df, alpha, beta, gamma, m, key, ts, v, out, state_df,
+            with_state):
+    def run(pdf, state):
+        return holt_winters_kernel(f64(pdf, v), alpha, beta, gamma, m,
+                                   state=state)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == state_len
-            else None
-        )
-        res, s = holt_winters_kernel(a, alpha, beta, gamma, m, state=state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(3 + m,))
 
 
 def holt_winters(
@@ -278,9 +211,8 @@ def holt_winters(
 ) -> DataFrame:
     """Additive Holt-Winters fitted level+season per row (warm-up rows
     pass x through — convention in holt_winters_kernel)."""
-    return _hw_combined(
-        df, alpha, beta, gamma, m, key, ts, v, out, state_df
-    ).drop(_STATE_COL)
+    return _hw_map(df, alpha, beta, gamma, m, key, ts, v, out, state_df,
+                   with_state=False)
 
 
 def holt_winters_(
@@ -297,13 +229,6 @@ def holt_winters_(
     persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stateful variant: (data, state) pair, resumable bit-for-bit."""
-    combined = _hw_combined(
-        df, alpha, beta, gamma, m, key, ts, v, out, state_df
-    )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _hw_map(df, alpha, beta, gamma, m, key, ts, v, out, state_df,
+                       with_state=True)
+    return split_state(combined, key, persist)

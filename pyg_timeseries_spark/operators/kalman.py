@@ -21,7 +21,7 @@ time-varying gain instead of ewma's fixed one, which is why users
 reach for it on short/restarting series.
 
 Execution matches the engine's EWM family (operators/ewm.py,
-operators/holt.py): one groupBy(key).applyInPandas pass — the single
+operators/holt.py): one ``_core.kernel_map`` pass — the single
 sanctioned JVM<->Python boundary — with NaN-skip semantics (NULL rows
 emit NULL, state untouched) and a (data, state) resumable variant whose
 (head, then tail from head's state) replay is bit-identical to one
@@ -32,16 +32,13 @@ unchanged.  State = 3 doubles.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import cnative as _cnative
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, VAL, f64, kernel_map, split_state,
+)
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
 KALMAN_STATE_LEN = 3  # [seen, level, P]
 
 
@@ -84,43 +81,12 @@ def kalman_kernel(
     return out, np.array([seen, lvl, p], dtype=np.float64)
 
 
-def _kalman_combined(df, q, r, key, ts, v, out, state_df, with_state=True):
-    """``with_state=False`` (the plain :func:`kalman` path) keeps the
-    nullable ``array<double>`` state column out of BOTH Arrow transfers —
-    object-typed columns cost far more to (de)serialize than the value
-    columns, and the stateless caller drops the column unread anyway."""
-    src = df
-    if state_df is None:
-        has_prior = False
-    else:
-        has_prior = True
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = src.join(F.broadcast(prior), on=key, how="left")
-    out_fields = [T.StructField(out, T.DoubleType())]
-    if with_state:
-        out_fields.append(
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))
-        )
-    out_schema = T.StructType(list(df.schema.fields) + out_fields)
-    in_cols = [f.name for f in df.schema.fields]
+def _kalman_map(df, q, r, key, ts, v, out, state_df, with_state):
+    def run(pdf, state):
+        return kalman_kernel(f64(pdf, v), q, r, state=state)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        state = None
-        if has_prior:
-            prior = pdf[_PRIOR_COL].iloc[0]
-            if prior is not None and len(list(prior)) == KALMAN_STATE_LEN:
-                state = np.asarray(list(prior), dtype=np.float64)
-        res, s = kalman_kernel(a, q, r, state=state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        if with_state:
-            outp[_STATE_COL] = None
-            outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(KALMAN_STATE_LEN,))
 
 
 def kalman(
@@ -135,8 +101,7 @@ def kalman(
 ) -> DataFrame:
     """Filtered level per row (local-level model, process var ``q``,
     observation var ``r``)."""
-    return _kalman_combined(df, q, r, key, ts, v, out, state_df,
-                            with_state=False)
+    return _kalman_map(df, q, r, key, ts, v, out, state_df, with_state=False)
 
 
 def kalman_(
@@ -151,11 +116,6 @@ def kalman_(
     persist: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stateful variant: (data, state) pair, resumable bit-for-bit."""
-    combined = _kalman_combined(df, q, r, key, ts, v, out, state_df)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _kalman_map(df, q, r, key, ts, v, out, state_df,
+                           with_state=True)
+    return split_state(combined, key, persist)

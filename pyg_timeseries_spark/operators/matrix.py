@@ -4,61 +4,54 @@
 Reference: ewmAAi `_ewm.py:936-980, 1917-1937`; ewmGLM `_ewm.py:983-1123,
 1940-2020`.  The feature vector per (key, ts) row is the long-format
 rendition of the reference's panel row; outputs are flattened row-major
-arrays (melt with posexplode when relational access is wanted).
+arrays (melt with posexplode when relational access is wanted).  Every
+operator is one ``_core.kernel_map`` pass.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import matrix_numpy as MK
-from pyg_timeseries_spark.operators._core import KEY, TS
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
-
-
-def _matrix_apply(df, key, ts, build_inputs, run, out, state_df, state_len):
-    if state_df is not None:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out, T.ArrayType(T.DoubleType())),
-           T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        inputs = build_inputs(pdf)
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), float)
-            if prior is not None and (state_len < 0 or len(list(prior)) == state_len)
-            else None
-        )
-        res, s = run(*inputs, state)
-        outp = pdf[in_cols].copy()
-        outp[out] = [
-            None if np.isnan(r).all() else [float(x) for x in r.ravel()]
-            for r in res
-        ]
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, f64, kernel_map, split_state,
+)
 
 
 def _features_matrix(pdf, features):
     return np.array([np.asarray(r, float) for r in pdf[features]])
+
+
+def _matrix_map(df, key, ts, out, state_df, with_state, features, b,
+                state_len, kernel):
+    """``kernel(A[, b], state)`` per key.  The state length depends on the
+    feature count m, so a prior state is checked against ``state_len(m)``
+    inside the group."""
+
+    def run(pdf, state):
+        A = _features_matrix(pdf, features)
+        if state is not None and len(state) != state_len(A.shape[1]):
+            state = None
+        inputs = (A,) if b is None else (A, f64(pdf, b))
+        res, s = kernel(*inputs, state)
+        cells = [None if np.isnan(r).all() else [float(x) for x in r.ravel()]
+                 for r in res]
+        return cells, s
+
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      out_type=T.ArrayType(T.DoubleType()))
+
+
+def _aai_map(df, n, features, key, ts, out, min_sample, overlapping,
+             state_df, with_state):
+    return _matrix_map(
+        df, key, ts, out, state_df, with_state, features, None,
+        lambda m: MK.aai_state_len(m, overlapping),
+        lambda A, state: MK.ewmAAi(A, n, state=state, min_sample=min_sample,
+                                   overlapping=overlapping),
+    )
 
 
 def ewmAAi(df: DataFrame, n: float, features: str = "features",
@@ -67,45 +60,28 @@ def ewmAAi(df: DataFrame, n: float, features: str = "features",
            state_df: DataFrame | None = None) -> DataFrame:
     """Rolling inv(E(dAᵀdA)) per row; output flattened (m·m) row-major.
     ``overlapping`` k differences against the value k valid rows back."""
-
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    # state length depends on m, so validate inside the kernel call
-    def run2(A, state):
-        if state is not None and len(state) != MK.aai_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmAAi(A, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _aai_map(df, n, features, key, ts, out, min_sample, overlapping,
+                    state_df, with_state=False)
 
 
 def ewmAAi_(df: DataFrame, n: float, features: str = "features",
             key: str = KEY, ts: str = TS, out: str = "aai",
             min_sample: float = 0.25, overlapping: int = 1,
             state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
+    combined = _aai_map(df, n, features, key, ts, out, min_sample,
+                        overlapping, state_df, with_state=True)
+    return split_state(combined, key, persist)
 
-    def run2(A, state):
-        if state is not None and len(state) != MK.aai_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmAAi(A, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
 
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
+def _glm_map(df, n, features, b, key, ts, out, min_sample, overlapping,
+             state_df, with_state):
+    return _matrix_map(
+        df, key, ts, out, state_df, with_state, features, b,
+        lambda m: MK.glm_state_len(m, overlapping),
+        lambda A, bv, state: MK.ewmGLM(A, bv, n, state=state,
+                                       min_sample=min_sample,
+                                       overlapping=overlapping),
     )
-    return data, state
 
 
 def ewmGLM(df: DataFrame, n: float, features: str = "features",
@@ -113,48 +89,29 @@ def ewmGLM(df: DataFrame, n: float, features: str = "features",
            min_sample: float = 0.25, overlapping: int = 1,
            state_df: DataFrame | None = None) -> DataFrame:
     """EWM linear-model betas of db ~ dA per row; output (m,) array."""
-
-    def build(pdf):
-        A = _features_matrix(pdf, features)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        return (A, bv)
-
-    def run2(A, bv, state):
-        if state is not None and len(state) != MK.glm_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmGLM(A, bv, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _glm_map(df, n, features, b, key, ts, out, min_sample, overlapping,
+                    state_df, with_state=False)
 
 
 def ewmGLM_(df: DataFrame, n: float, features: str = "features",
             b: str = "v", key: str = KEY, ts: str = TS, out: str = "betas",
             min_sample: float = 0.25, overlapping: int = 1,
             state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        A = _features_matrix(pdf, features)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        return (A, bv)
+    combined = _glm_map(df, n, features, b, key, ts, out, min_sample,
+                        overlapping, state_df, with_state=True)
+    return split_state(combined, key, persist)
 
-    def run2(A, bv, state):
-        if state is not None and len(state) != MK.glm_state_len(
-                A.shape[1], overlapping):
-            state = None
-        return MK.ewmGLM(A, bv, n, state=state, min_sample=min_sample,
-                         overlapping=overlapping)
 
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
+def _psd_map(df, n, features, key, ts, out, min_sample, min_periods, demean,
+             shrinkage, state_df, with_state):
+    return _matrix_map(
+        df, key, ts, out, state_df, with_state, features, None,
+        MK.psd_state_len,
+        lambda A, state: MK.ewmcorr_psd(A, n, min_sample=min_sample,
+                                        min_periods=min_periods,
+                                        demean=demean, shrinkage=shrinkage,
+                                        state=state),
     )
-    return data, state
 
 
 def ewmcorr_psd(df: DataFrame, n: float = 128, features: str = "features",
@@ -164,20 +121,8 @@ def ewmcorr_psd(df: DataFrame, n: float = 128, features: str = "features",
                 state_df: DataFrame | None = None) -> DataFrame:
     """PSD-by-construction EWM correlation per row (flattened m·m);
     reference `_ewm_psd.py:43-287` (overlapping=1 path)."""
-
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    def run2(A, state):
-        if state is not None and len(state) != MK.psd_state_len(A.shape[1]):
-            state = None
-        return MK.ewmcorr_psd(A, n, min_sample=min_sample,
-                              min_periods=min_periods, demean=demean,
-                              shrinkage=shrinkage, state=state)
-
-    return _matrix_apply(
-        df, key, ts, build, run2, out, state_df, state_len=-1
-    ).drop(_STATE_COL)
+    return _psd_map(df, n, features, key, ts, out, min_sample, min_periods,
+                    demean, shrinkage, state_df, with_state=False)
 
 
 def ewmcorr_psd_(df: DataFrame, n: float = 128, features: str = "features",
@@ -185,21 +130,7 @@ def ewmcorr_psd_(df: DataFrame, n: float = 128, features: str = "features",
                  min_sample: float = 0.25, min_periods: int = 1,
                  demean: bool = True, shrinkage: float = 0.0,
                  state_df: DataFrame | None = None, persist: bool = True):
-    def build(pdf):
-        return (_features_matrix(pdf, features),)
-
-    def run2(A, state):
-        if state is not None and len(state) != MK.psd_state_len(A.shape[1]):
-            state = None
-        return MK.ewmcorr_psd(A, n, min_sample=min_sample,
-                              min_periods=min_periods, demean=demean,
-                              shrinkage=shrinkage, state=state)
-
-    combined = _matrix_apply(df, key, ts, build, run2, out, state_df, state_len=-1)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    combined = _psd_map(df, n, features, key, ts, out, min_sample,
+                        min_periods, demean, shrinkage, state_df,
+                        with_state=True)
+    return split_state(combined, key, persist)

@@ -27,10 +27,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import multibuffer_numpy as MB
-from pyg_timeseries_spark.operators._core import KEY, TS
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
+from pyg_timeseries_spark.operators._core import (
+    KEY, PRIOR_COL, STATE_COL, TS, split_state,
+)
 
 
 def _out_schema(key: str, ts_field: T.StructField) -> T.StructType:
@@ -42,7 +41,7 @@ def _out_schema(key: str, ts_field: T.StructField) -> T.StructType:
             T.StructField("pos", T.DoubleType()),
             T.StructField("mult", T.DoubleType()),
             T.StructField("mismatch", T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
+            T.StructField(STATE_COL, T.ArrayType(T.DoubleType())),
         ]
     )
 
@@ -61,10 +60,10 @@ def _multibuffer_combined(
     out_schema = _out_schema(key, ts_field)
     near = corr if isinstance(corr, (int, float)) or corr is None else None
     if state_df is not None:
-        pr = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
+        pr = state_df.select(F.col(key), F.col("state").alias(PRIOR_COL))
         df = df.join(F.broadcast(pr), on=key, how="left")
     else:
-        df = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
+        df = df.withColumn(PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
 
     def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pos_pdf) == 0:
@@ -116,7 +115,7 @@ def _multibuffer_combined(
                     if i is None or j is None:
                         continue
                     C[i, j] = C[j, i] = r.cor
-        pr = pos_pdf[_PRIOR_COL].iloc[0]
+        pr = pos_pdf[PRIOR_COL].iloc[0]
         st = np.asarray(list(pr), float) if pr is not None else None
         if st is not None and len(st) != kk + 1:
             st = None  # asset set changed — restart
@@ -135,12 +134,12 @@ def _multibuffer_combined(
                         "pos": positions[:, ai],
                         "mult": mult,
                         "mismatch": mismatch,
-                        _STATE_COL: None,
+                        STATE_COL: None,
                     }
                 )
             )
         out = pd.concat(frames, ignore_index=True)
-        out.at[len(out) - 1, _STATE_COL] = [float(x) for x in s_out]
+        out.at[len(out) - 1, STATE_COL] = [float(x) for x in s_out]
         return out
 
     if isinstance(corr, DataFrame):
@@ -171,7 +170,7 @@ def multibuffer(
     melted frame (key[, ts], asset_i, asset_j, cor)."""
     return _multibuffer_combined(
         df, corr, key, ts, unit, risk_band, rounding_band, state_df
-    ).drop(_STATE_COL)
+    ).drop(STATE_COL)
 
 
 def multibuffer_(
@@ -190,10 +189,4 @@ def multibuffer_(
     combined = _multibuffer_combined(
         df, corr, key, ts, unit, risk_band, rounding_band, state_df
     )
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+    return split_state(combined, key, persist)

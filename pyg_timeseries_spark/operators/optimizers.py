@@ -23,10 +23,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import opt_numpy as OPT
-from pyg_timeseries_spark.operators._core import TS
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
+from pyg_timeseries_spark.operators._core import (
+    PRIOR_COL, STATE_COL, TS, split_state,
+)
 
 
 def _pivot_matrix(pdf: pd.DataFrame, ts: str, val: str):
@@ -164,14 +163,14 @@ def minimize_tracking_error(
             T.StructField(asset, T.StringType()),
             T.StructField("pos", T.DoubleType()),
             T.StructField("err", T.DoubleType()),
-            T.StructField(_STATE_COL, T.ArrayType(T.DoubleType())),
+            T.StructField(STATE_COL, T.ArrayType(T.DoubleType())),
         ]
     )
     if state_df is not None:
-        pr = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
+        pr = state_df.select(F.col(key), F.col("state").alias(PRIOR_COL))
         df = df.join(F.broadcast(pr), on=key, how="left")
     else:
-        df = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
+        df = df.withColumn(PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
 
     def run(pos_pdf: pd.DataFrame, cor_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pos_pdf) == 0:
@@ -190,7 +189,7 @@ def minimize_tracking_error(
             if i is None or j is None:
                 continue
             C[i, j] = C[j, i] = getattr(r, val)
-        pr = pos_pdf[_PRIOR_COL].iloc[0]
+        pr = pos_pdf[PRIOR_COL].iloc[0]
         st = np.asarray(list(pr), float) if pr is not None else None
         if st is not None and len(st) != kk:
             st = None
@@ -201,24 +200,18 @@ def minimize_tracking_error(
         for ai, a in enumerate(assets):
             frames.append(pd.DataFrame({
                 key: k_val, ts: times, asset: a,
-                "pos": pos[:, ai], "err": errs, _STATE_COL: None,
+                "pos": pos[:, ai], "err": errs, STATE_COL: None,
             }))
         o = pd.concat(frames, ignore_index=True)
-        o.at[len(o) - 1, _STATE_COL] = [float(x) for x in s_out]
+        o.at[len(o) - 1, STATE_COL] = [float(x) for x in s_out]
         return o
 
     combined = (
         df.groupBy(key).cogroup(cov.groupBy(key)).applyInPandas(run, out_schema)
     )
     if not stateful:
-        return combined.drop(_STATE_COL)
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        key, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+        return combined.drop(STATE_COL)
+    return split_state(combined, key, persist)
 
 
 def minimize_tracking_error_(df, cov, **kw):

@@ -9,178 +9,106 @@
   not data volume), then each (key_i, key_j) group runs the pairwise kernel.
 
 At scale: the self-join shuffles on ts once; pair groups are independent and
-parallel.  For m in the hundreds (the reference's own regime, a (7000,
-200, 200) tensor) this is ~20k pair-series of bucketed length — exactly the
-applyInPandas group-size envelope the engine is designed for.
+parallel, each one ``_core.kernel_map`` group.  For m in the hundreds (the
+reference's own regime, a (7000, 200, 200) tensor) this is ~20k pair-series
+of bucketed length — exactly the applyInPandas group-size envelope the
+engine is designed for.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import pairwise_numpy as PK
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, VAL, f64, kernel_map, split_state,
+)
 
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
-
-
-def _pair_apply(df, key_cols, ts, a, b, out_cols, state_df, run,
-                time_col=None):
-    if state_df is not None:
-        prior = state_df.select(*key_cols, F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key_cols, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(c, T.DoubleType()) for c in out_cols]
-        + [T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        av = pdf[a].to_numpy(dtype=np.float64, na_value=np.nan)
-        bv = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        tv = (
-            pdf[time_col].to_numpy(dtype=np.float64, na_value=np.nan)
-            if time_col
-            else None
-        )
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), float)
-            if prior is not None and len(list(prior)) == PK.XSTATE_LEN
-            else None
-        )
-        results, s = run(av, bv, state, tv)
-        outp = pdf[in_cols].copy()
-        for c, r in zip(out_cols, results):
-            outp[c] = r
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(*key_cols).applyInPandas(fn, schema=out_schema)
+_PAIR_KEYS = ["key_i", "key_j"]
 
 
-def _split_state(combined: DataFrame, key_cols: list, persist: bool):
-    """(data, state) from one combined frame — one computation, reference
-    (data, state) contract (_decorators.py:21-31)."""
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        *key_cols, F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+def _pair_map(df, keys, ts, a, b, outs, state_df, with_state, kernel, n,
+              time_col=None, **kernel_kwargs):
+    def run(pdf, state):
+        tv = f64(pdf, time_col) if time_col else None
+        return kernel(f64(pdf, a), f64(pdf, b), n, time=tv, state=state,
+                      **kernel_kwargs)
+
+    return kernel_map(df, keys, ts, outs, run, state_df, with_state,
+                      state_lens=(PK.XSTATE_LEN,))
 
 
 def ewmxcor(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
             ts: str = TS, out: str = "ewmxcor", bias: bool = False,
             time_col: str | None = None,
             state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
-    return _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_map(df, key, ts, a, b, [out], state_df, False, PK.ewmxcor,
+                     n, time_col, bias=bias)
 
 
 def ewmxcor_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
              ts: str = TS, out: str = "ewmxcor", bias: bool = False,
              time_col: str | None = None,
              state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_map(df, key, ts, a, b, [out], state_df, True,
+                         PK.ewmxcor, n, time_col, bias=bias)
+    return split_state(combined, key, persist)
 
 
 def ewmxcovar(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
               ts: str = TS, out: str = "ewmxcovar",
               time_col: str | None = None,
               state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
-    return _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_map(df, key, ts, a, b, [out], state_df, False,
+                     PK.ewmxcovar, n, time_col)
 
 
 def ewmxcovar_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
                ts: str = TS, out: str = "ewmxcovar",
                time_col: str | None = None,
                state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_map(df, key, ts, a, b, [out], state_df, True,
+                         PK.ewmxcovar, n, time_col)
+    return split_state(combined, key, persist)
 
 
 def ewmxLR(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
            ts: str = TS, out_c: str = "lr_c", out_m: str = "lr_m",
            bias: bool = False, time_col: str | None = None,
            state_df: DataFrame | None = None) -> DataFrame:
-    def run(av, bv, state, tv):
-        c, m, s = PK.ewmxLR(av, bv, n, time=tv, state=state, bias=bias)
-        return [c, m], s
-
-    return _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df, run,
-                       time_col=time_col).drop(_STATE_COL)
+    return _pair_map(df, key, ts, a, b, [out_c, out_m], state_df, False,
+                     PK.ewmxLR, n, time_col, bias=bias)
 
 
 def ewmxLR_(df: DataFrame, n: float, a: str, b: str, key: str = KEY,
             ts: str = TS, out_c: str = "lr_c", out_m: str = "lr_m",
             bias: bool = False, time_col: str | None = None,
             state_df: DataFrame | None = None, persist: bool = True):
-    def run(av, bv, state, tv):
-        c, m, s = PK.ewmxLR(av, bv, n, time=tv, state=state, bias=bias)
-        return [c, m], s
-
-    combined = _pair_apply(df, [key], ts, a, b, [out_c, out_m], state_df, run,
-                           time_col=time_col)
-    return _split_state(combined, [key], persist)
+    combined = _pair_map(df, key, ts, a, b, [out_c, out_m], state_df, True,
+                         PK.ewmxLR, n, time_col, bias=bias)
+    return split_state(combined, key, persist)
 
 
 # ---- melted (t, m, m) tensors ----------------------------------------------
 
 
 def _melt_pairs(df: DataFrame, key: str, ts: str, v: str,
-                upper_only: bool = True) -> DataFrame:
+                diagonal: bool = False) -> DataFrame:
+    """(ts, key_i, v_i, key_j, v_j) rows for key_i < key_j (<= with the
+    diagonal)."""
     left = df.select(F.col(ts), F.col(key).alias("key_i"), F.col(v).alias("v_i"))
     right = df.select(F.col(ts), F.col(key).alias("key_j"), F.col(v).alias("v_j"))
     pairs = left.join(right, on=ts)
-    if upper_only:
-        pairs = pairs.filter(F.col("key_i") < F.col("key_j"))
-    else:
-        pairs = pairs.filter(F.col("key_i") != F.col("key_j"))
-    return pairs
+    if diagonal:
+        return pairs.filter(F.col("key_i") <= F.col("key_j"))
+    return pairs.filter(F.col("key_i") < F.col("key_j"))
 
 
-def _correlation_combined(df, n, key, ts, v, bias, state_df, out):
-    pairs = _melt_pairs(df, key, ts, v)
-
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcor(av, bv, n, time=tv, state=state, bias=bias)
-        return [res], s
-
-    return _pair_apply(
-        pairs, ["key_i", "key_j"], ts, "v_i", "v_j", [out], state_df, run
-    )
+def _correlation_map(df, n, key, ts, v, bias, state_df, out, with_state):
+    return _pair_map(_melt_pairs(df, key, ts, v), _PAIR_KEYS, ts, "v_i",
+                     "v_j", [out], state_df, with_state, PK.ewmxcor, n,
+                     bias=bias)
 
 
 def ewmcorrelation(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -189,7 +117,7 @@ def ewmcorrelation(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                    out: str = "cor") -> DataFrame:
     """Melted EWM correlation tensor: rows (ts, key_i, key_j, cor) for
     key_i < key_j (symmetric; diagonal ≡ 1).  Reference `_ewm.py:688-921`."""
-    return _correlation_combined(df, n, key, ts, v, bias, state_df, out).drop(_STATE_COL)
+    return _correlation_map(df, n, key, ts, v, bias, state_df, out, False)
 
 
 def ewmcorrelation_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -199,22 +127,14 @@ def ewmcorrelation_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
     """Stateful melted correlation tensor: (data, state) where state holds
     one packed XSTATE row per (key_i, key_j) pair — resume is bit-exact
     (reference ewmcorrelation_ `_ewm.py:688-770`)."""
-    combined = _correlation_combined(df, n, key, ts, v, bias, state_df, out)
-    return _split_state(combined, ["key_i", "key_j"], persist)
+    combined = _correlation_map(df, n, key, ts, v, bias, state_df, out, True)
+    return split_state(combined, _PAIR_KEYS, persist)
 
 
-def _covariance_combined(df, n, key, ts, v, state_df, out):
-    left = df.select(F.col(ts), F.col(key).alias("key_i"), F.col(v).alias("v_i"))
-    right = df.select(F.col(ts), F.col(key).alias("key_j"), F.col(v).alias("v_j"))
-    pairs = left.join(right, on=ts).filter(F.col("key_i") <= F.col("key_j"))
-
-    def run(av, bv, state, tv):
-        res, s = PK.ewmxcovar(av, bv, n, time=tv, state=state)
-        return [res], s
-
-    return _pair_apply(
-        pairs, ["key_i", "key_j"], ts, "v_i", "v_j", [out], state_df, run
-    )
+def _covariance_map(df, n, key, ts, v, state_df, out, with_state):
+    return _pair_map(_melt_pairs(df, key, ts, v, diagonal=True), _PAIR_KEYS,
+                     ts, "v_i", "v_j", [out], state_df, with_state,
+                     PK.ewmxcovar, n)
 
 
 def ewmcovariance(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -222,7 +142,7 @@ def ewmcovariance(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                   out: str = "cov") -> DataFrame:
     """Melted EWM covariance tensor incl. the diagonal (variances).
     Reference `_ewm.py:535-685`."""
-    return _covariance_combined(df, n, key, ts, v, state_df, out).drop(_STATE_COL)
+    return _covariance_map(df, n, key, ts, v, state_df, out, False)
 
 
 def ewmcovariance_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
@@ -230,5 +150,5 @@ def ewmcovariance_(df: DataFrame, n: float, key: str = KEY, ts: str = TS,
                    out: str = "cov", persist: bool = True):
     """Stateful melted covariance tensor: (data, state) keyed on
     (key_i, key_j) (reference ewmcovariance_ `_ewm.py:535-614`)."""
-    combined = _covariance_combined(df, n, key, ts, v, state_df, out)
-    return _split_state(combined, ["key_i", "key_j"], persist)
+    combined = _covariance_map(df, n, key, ts, v, state_df, out, True)
+    return split_state(combined, _PAIR_KEYS, persist)

@@ -1,143 +1,85 @@
-"""Spark wrappers for the path-dependent recurrence kernels (zmooth, buffer)
-— same applyInPandas shape as operators/ewm.py, with auxiliary input columns
-(the smooth series / the band series) carried into the kernel.
+"""Spark wrappers for the path-dependent recurrence kernels (zmooth, buffer,
+rolling_tover) — the same ``_core.kernel_map`` pass as operators/ewm.py, with
+auxiliary input columns (the smooth series / the band series) carried into
+the kernel.
 
 Reference: zmooth `_zmooth.py:8-115`; buffer `_rolling.py:294-332, 872-942`.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from pyg_timeseries_spark.kernels import recurrence_numpy as RK
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
-
-_STATE_COL = "__state"
-_PRIOR_COL = "__prior_state"
-
-
-def _apply_recurrence(
-    df: DataFrame,
-    key: str,
-    ts: str,
-    v: str,
-    out: str,
-    aux: list[str],
-    state_df: DataFrame | None,
-    state_len: int,
-    run,  # (a, aux_arrays, state|None) -> (res, state_vec)
-) -> DataFrame:
-    if state_df is not None:
-        prior = state_df.select(F.col(key), F.col("state").alias(_PRIOR_COL))
-        src = df.join(F.broadcast(prior), on=key, how="left")
-    else:
-        src = df.withColumn(_PRIOR_COL, F.lit(None).cast(T.ArrayType(T.DoubleType())))
-    in_cols = [f.name for f in df.schema.fields]
-    out_schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out, T.DoubleType()),
-           T.StructField(_STATE_COL, T.ArrayType(T.DoubleType()))]
-    )
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        aux_arrays = [
-            pdf[c].to_numpy(dtype=np.float64, na_value=np.nan) for c in aux
-        ]
-        prior = pdf[_PRIOR_COL].iloc[0]
-        state = (
-            np.asarray(list(prior), dtype=np.float64)
-            if prior is not None and len(list(prior)) == state_len
-            else None
-        )
-        res, s = run(a, aux_arrays, state)
-        outp = pdf[in_cols].copy()
-        outp[out] = res
-        outp[_STATE_COL] = None
-        outp.at[len(outp) - 1, _STATE_COL] = [float(x) for x in s]
-        return outp
-
-    return src.groupBy(key).applyInPandas(fn, schema=out_schema)
+from pyg_timeseries_spark.operators._core import (
+    KEY, TS, VAL, f64, kernel_map, split_state,
+)
 
 
-def _split(combined: DataFrame, key: str, persist: bool):
-    if persist:
-        combined = combined.persist()
-    data = combined.drop(_STATE_COL)
-    state = combined.filter(F.col(_STATE_COL).isNotNull()).select(
-        F.col(key), F.col(_STATE_COL).alias("state")
-    )
-    return data, state
+def _zmooth_map(df, n, smooth_col, max_move, exc_zero, key, ts, v, out,
+                state_df, with_state):
+    def run(pdf, state):
+        smooth = f64(pdf, smooth_col) if smooth_col else None
+        return RK.zmooth(f64(pdf, v), n, smooth=smooth, max_move=max_move,
+                         exc_zero=exc_zero, state=state)
+
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(RK.ZMOOTH_STATE_LEN,))
 
 
 def zmooth(df: DataFrame, n: float, smooth_col: str | None = None,
            max_move: float = 4.2, exc_zero: bool = False, key: str = KEY,
            ts: str = TS, v: str = VAL, out: str = "zmooth",
            state_df: DataFrame | None = None) -> DataFrame:
-    aux = [smooth_col] if smooth_col else []
-
-    def run(a, aux_arrays, state):
-        smooth = aux_arrays[0] if aux_arrays else None
-        return RK.zmooth(a, n, smooth=smooth, max_move=max_move,
-                         exc_zero=exc_zero, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.ZMOOTH_STATE_LEN, run
-    ).drop(_STATE_COL)
+    return _zmooth_map(df, n, smooth_col, max_move, exc_zero, key, ts, v,
+                       out, state_df, with_state=False)
 
 
 def zmooth_(df: DataFrame, n: float, smooth_col: str | None = None,
             max_move: float = 4.2, exc_zero: bool = False, key: str = KEY,
             ts: str = TS, v: str = VAL, out: str = "zmooth",
             state_df: DataFrame | None = None, persist: bool = True):
-    aux = [smooth_col] if smooth_col else []
+    combined = _zmooth_map(df, n, smooth_col, max_move, exc_zero, key, ts, v,
+                           out, state_df, with_state=True)
+    return split_state(combined, key, persist)
 
-    def run(a, aux_arrays, state):
-        smooth = aux_arrays[0] if aux_arrays else None
-        return RK.zmooth(a, n, smooth=smooth, max_move=max_move,
-                         exc_zero=exc_zero, state=state)
 
-    combined = _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.ZMOOTH_STATE_LEN, run
-    )
-    return _split(combined, key, persist)
+def _buffer_map(df, band, unit, rounding_band, key, ts, v, out, state_df,
+                with_state):
+    const_band = None if isinstance(band, str) else float(band)
+
+    def run(pdf, state):
+        b = f64(pdf, band) if const_band is None else const_band
+        return RK.buffer(f64(pdf, v), b, unit=unit,
+                         rounding_band=rounding_band, state=state)
+
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(RK.BUFFER_STATE_LEN,))
 
 
 def buffer(df: DataFrame, band, unit: float = 0.0, rounding_band: float = 0.0,
            key: str = KEY, ts: str = TS, v: str = VAL, out: str = "buffer",
            state_df: DataFrame | None = None) -> DataFrame:
     """``band`` is a float or the name of a band column."""
-    aux = [band] if isinstance(band, str) else []
-    const_band = None if isinstance(band, str) else float(band)
-
-    def run(a, aux_arrays, state):
-        b = aux_arrays[0] if aux_arrays else const_band
-        return RK.buffer(a, b, unit=unit, rounding_band=rounding_band, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.BUFFER_STATE_LEN, run
-    ).drop(_STATE_COL)
+    return _buffer_map(df, band, unit, rounding_band, key, ts, v, out,
+                       state_df, with_state=False)
 
 
 def buffer_(df: DataFrame, band, unit: float = 0.0, rounding_band: float = 0.0,
             key: str = KEY, ts: str = TS, v: str = VAL, out: str = "buffer",
             state_df: DataFrame | None = None, persist: bool = True):
-    aux = [band] if isinstance(band, str) else []
-    const_band = None if isinstance(band, str) else float(band)
+    combined = _buffer_map(df, band, unit, rounding_band, key, ts, v, out,
+                           state_df, with_state=True)
+    return split_state(combined, key, persist)
 
-    def run(a, aux_arrays, state):
-        b = aux_arrays[0] if aux_arrays else const_band
-        return RK.buffer(a, b, unit=unit, rounding_band=rounding_band, state=state)
 
-    combined = _apply_recurrence(
-        df, key, ts, v, out, aux, state_df, RK.BUFFER_STATE_LEN, run
-    )
-    return _split(combined, key, persist)
+def _tover_map(df, n, interval, key, ts, v, out, state_df, with_state):
+    def run(pdf, state):
+        return RK.rolling_tover(f64(pdf, v), n=n, interval=interval,
+                                state=state)
+
+    return kernel_map(df, key, ts, [out], run, state_df, with_state,
+                      state_lens=(2 * n + 3,))
 
 
 def rolling_tover(df: DataFrame, n: int = 256, interval: float | None = None,
@@ -146,20 +88,14 @@ def rolling_tover(df: DataFrame, n: int = 256, interval: float | None = None,
                   state_df: DataFrame | None = None) -> DataFrame:
     """Rolling turnover / annualized-risk ratio (reference
     `_rolling.py:417-443`)."""
-    def run(a, aux_arrays, state):
-        return RK.rolling_tover(a, n=n, interval=interval, state=state)
-
-    return _apply_recurrence(
-        df, key, ts, v, out, [], state_df, 2 * n + 3, run
-    ).drop(_STATE_COL)
+    return _tover_map(df, n, interval, key, ts, v, out, state_df,
+                      with_state=False)
 
 
 def rolling_tover_(df: DataFrame, n: int = 256, interval: float | None = None,
                    key: str = KEY, ts: str = TS, v: str = VAL,
                    out: str = "rolling_tover",
                    state_df: DataFrame | None = None, persist: bool = True):
-    def run(a, aux_arrays, state):
-        return RK.rolling_tover(a, n=n, interval=interval, state=state)
-
-    combined = _apply_recurrence(df, key, ts, v, out, [], state_df, 2 * n + 3, run)
-    return _split(combined, key, persist)
+    combined = _tover_map(df, n, interval, key, ts, v, out, state_df,
+                          with_state=True)
+    return split_state(combined, key, persist)

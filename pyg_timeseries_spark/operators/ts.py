@@ -294,26 +294,11 @@ def ts_argmin(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL,
     )
 
 
-def ts_acf(df: DataFrame, lags=(1,), key: str = KEY, ts: str = TS,
-           v: str = VAL, prefix: str = "acf") -> DataFrame:
-    """Per-key sample autocorrelation at the requested positive lags over
-    the valid series (NULLs skipped, count-lag semantics like the rolling
-    family): r_k = sum_{t>k} (x_t - m)(x_{t-k} - m) / sum_t (x_t - m)^2
-    with the full-series mean ``m`` — the standard biased ACF estimator
-    (Box-Jenkins; statsmodels ``acf`` default).  One row per key with a
-    ``{prefix}_{k}`` column per lag.
-
-    The cross term expands to raw sums so everything reduces in a single
-    partial+final hash aggregate: sum(x_t x_{t-k}) - m*sum_{t>k}(x_t) -
-    m*sum_{t>k}(x_{t-k}) + (n-k) m^2.  One Window pass builds every lag
-    column, and the groupBy reuses the window's per-key hash
-    partitioning — the whole operator is ONE Exchange regardless of how
-    many lags are requested."""
-    from pyg_timeseries_spark.operators._core import wspec
-
-    lags = [int(k) for k in lags]
-    if not lags or any(k < 1 for k in lags):
-        raise ValueError("lags must be positive integers")
+def _acf_sums(df: DataFrame, lags, key, ts, v) -> DataFrame:
+    """Per-key raw sums behind the sample ACF at ``lags``: __n, __s, __s2
+    and, per lag k, __xy{k} = sum(x_t x_{t-k}), __sx{k} = sum_{t>k} x_t,
+    __sy{k} = sum_{t>k} x_{t-k} — one Window pass builds every lag column
+    and one partial+final hash aggregate reduces (one Exchange)."""
     c = F.col(v)
     w = wspec(key, ts)
     valid = df.filter(c.isNotNull()).select(
@@ -331,7 +316,28 @@ def ts_acf(df: DataFrame, lags=(1,), key: str = KEY, ts: str = TS,
             F.sum(F.when(lk.isNotNull(), c)).alias(f"__sx{k}"),
             F.sum(lk).alias(f"__sy{k}"),
         ]
-    m = valid.groupBy(key).agg(*aggs)
+    return valid.groupBy(key).agg(*aggs)
+
+
+def ts_acf(df: DataFrame, lags=(1,), key: str = KEY, ts: str = TS,
+           v: str = VAL, prefix: str = "acf") -> DataFrame:
+    """Per-key sample autocorrelation at the requested positive lags over
+    the valid series (NULLs skipped, count-lag semantics like the rolling
+    family): r_k = sum_{t>k} (x_t - m)(x_{t-k} - m) / sum_t (x_t - m)^2
+    with the full-series mean ``m`` — the standard biased ACF estimator
+    (Box-Jenkins; statsmodels ``acf`` default).  One row per key with a
+    ``{prefix}_{k}`` column per lag.
+
+    The cross term expands to raw sums so everything reduces in a single
+    partial+final hash aggregate: sum(x_t x_{t-k}) - m*sum_{t>k}(x_t) -
+    m*sum_{t>k}(x_{t-k}) + (n-k) m^2.  One Window pass builds every lag
+    column, and the groupBy reuses the window's per-key hash
+    partitioning — the whole operator is ONE Exchange regardless of how
+    many lags are requested."""
+    lags = [int(k) for k in lags]
+    if not lags or any(k < 1 for k in lags):
+        raise ValueError("lags must be positive integers")
+    m = _acf_sums(df, lags, key, ts, v)
     mean = F.col("__s") / F.col("__n")
     den = F.col("__s2") - F.col("__n") * mean * mean
     out = [F.col(key) if isinstance(key, str) else key]
@@ -461,24 +467,7 @@ def ts_ljungbox(df: DataFrame, lags=(1, 2, 5), key: str = KEY, ts: str = TS,
     autocorrelations, so it inherits the one-Window-pass + one-Exchange
     shape.  Emits Q plus the per-key sample size n."""
     lags = [int(k) for k in lags]
-    c = F.col(v)
-    w = wspec(key, ts)
-    valid = df.filter(c.isNotNull()).select(
-        key, v, *[F.lag(c, k).over(w).alias(f"__l{k}") for k in lags]
-    )
-    aggs = [
-        F.count(c).cast("double").alias("__n"),
-        F.sum(c).alias("__s"),
-        F.sum(c * c).alias("__s2"),
-    ]
-    for k in lags:
-        lk = F.col(f"__l{k}")
-        aggs += [
-            F.sum(c * lk).alias(f"__xy{k}"),
-            F.sum(F.when(lk.isNotNull(), c)).alias(f"__sx{k}"),
-            F.sum(lk).alias(f"__sy{k}"),
-        ]
-    m = valid.groupBy(key).agg(*aggs)
+    m = _acf_sums(df, lags, key, ts, v)
     n = F.col("__n")
     mean = F.col("__s") / n
     den = F.col("__s2") - n * mean * mean

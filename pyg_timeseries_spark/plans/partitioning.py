@@ -102,7 +102,11 @@ def run_segmented(
         if hi is not None:
             seg = seg.filter(F.col(ts) < F.lit(hi))
         data, seg_state = op_(seg, ts=ts, state_df=state, **op_kwargs)
-        state = merge_state(state, seg_state, key)
+        # cut the lineage: each segment's state plan embeds the previous
+        # one three times (prior join, merge, anti-join), so an uncut
+        # chain grows ~3^k and planning 6 segments alone can exhaust the
+        # JVM heap.  The state is one small row per key.
+        state = merge_state(state, seg_state, key).localCheckpoint()
         out_parts.append(data)
     out = out_parts[0]
     for p in out_parts[1:]:

@@ -17,6 +17,23 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 10_000
 
 
+def _host_cpus() -> int:
+    """Cores this process may run on (the affinity mask where the OS has
+    one, else the machine's count)."""
+    if hasattr(os, "sched_getaffinity"):
+        return len(os.sched_getaffinity(0))
+    return os.cpu_count() or 1
+
+
+def _default_jvm_mem() -> str:
+    """About a third of physical RAM, in whole GiB (at least 1g)."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "4g"
+    return f"{max(1, ram // 3 // 2**30)}g"
+
+
 def get_spark(
     app_name: str = "pyg_timeseries_spark",
     master: str | None = None,
@@ -25,11 +42,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
-    ``shuffle_partitions`` defaults to the local core count — at cluster
-    scale you would set this to ~2-3x total executor cores instead.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env; unset → the
+    host's usable cores).  ``shuffle_partitions`` defaults to the local
+    core count — at cluster scale you would set this to ~2-3x total
+    executor cores instead.  JVM memory is ``$SPARK_DRIVER_MEM`` (unset →
+    about a third of physical RAM).
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or _host_cpus())
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -50,7 +69,8 @@ def get_spark(
             "spark.sql.execution.arrow.maxRecordsPerBatch",
             str(ARROW_BATCH_ROWS),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_jvm_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")

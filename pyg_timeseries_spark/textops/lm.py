@@ -128,7 +128,12 @@ def _doc_bigram_counts(docs: DataFrame, id_col: str, text: str) -> DataFrame:
     )
 
 
-def _score_counts(bg, model, id_col, k, out, broadcast_rows):
+def _score_counts(bg, model, id_col, k, out, broadcast_rows,
+                  op="perplexity_score"):
+    """Add-k smoothed bigram cross-entropy of pre-aggregated per-id pair
+    counts ``bg`` (id, prev, cur, __c) under ``model`` (prev, cur, n);
+    shared by perplexity_score and textops/tokenstats.token_xent.  ``op``
+    names the caller in the empty-model error."""
     # The model is REFERENCED three times below (context sums feed both the
     # probability and the floor tables) plus once by the stats action; a
     # localCheckpoint materializes its tiny frame (≤ |charset|² rows) once
@@ -139,7 +144,7 @@ def _score_counts(bg, model, id_col, k, out, broadcast_rows):
     ).first()
     n_model, v = stats["rows"], stats["v"]
     if v == 0 or v is None:
-        raise ValueError("perplexity_score: empty bigram model")
+        raise ValueError(f"{op}: empty bigram model")
     _bcast = (lambda d: F.broadcast(d)) if n_model <= broadcast_rows else (lambda d: d)
     ctx = model.groupBy("prev").agg(F.sum("n").alias("n_prev"))
     probs = model.join(ctx, "prev").select(

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyg_timeseries_spark.textops.lm import _score_counts
+
 
 def _adjacent_pairs(tokens_col):
     """array<struct<prev:int, cur:int>> of adjacent token-id pairs.
@@ -185,7 +187,8 @@ def token_xent(
     (a 50k-vocab corpus can reach ~10⁹ observed pairs — past the
     threshold the join shuffles on the slim int pair keys instead)."""
     bg = _doc_pair_counts(seqs, id_col, tokens)
-    return _score_token_counts(bg, model, id_col, k, out, broadcast_rows)
+    return _score_counts(bg, model, id_col, k, out, broadcast_rows,
+                         op="token_xent")
 
 
 def token_xent_self(
@@ -204,7 +207,8 @@ def token_xent_self(
     passes in the naive composition)."""
     bg = _doc_pair_counts(seqs, id_col, tokens).persist()
     model = bg.groupBy("prev", "cur").agg(F.sum("__c").alias("n"))
-    return _score_token_counts(bg, model, id_col, k, out, broadcast_rows)
+    return _score_counts(bg, model, id_col, k, out, broadcast_rows,
+                         op="token_xent")
 
 
 def _doc_pair_counts(seqs, id_col, tokens):
@@ -217,37 +221,3 @@ def _doc_pair_counts(seqs, id_col, tokens):
         .groupBy("id", F.col("pr.prev").alias("prev"), F.col("pr.cur").alias("cur"))
         .agg(F.count(F.lit(1)).alias("__c"))
     )
-
-
-def _score_token_counts(bg, model, id_col, k, out, broadcast_rows):
-    # the model is referenced 3x below plus the stats action — checkpoint
-    # its tiny frame once instead of re-running the corpus aggregate per
-    # reference (textops/lm.py:_score_counts, same rationale)
-    model = model.localCheckpoint(eager=True)
-    stats = model.agg(
-        F.count(F.lit(1)).alias("rows"), F.count_distinct("cur").alias("v")
-    ).first()
-    n_model, v = stats["rows"], stats["v"]
-    if not v:
-        raise ValueError("token_xent: empty bigram model")
-    _bcast = (lambda d: F.broadcast(d)) if n_model <= broadcast_rows else (lambda d: d)
-    ctx = model.groupBy("prev").agg(F.sum("n").alias("n_prev"))
-    probs = model.join(ctx, "prev").select(
-        "prev", "cur",
-        ((F.col("n") + F.lit(k)) / (F.col("n_prev") + F.lit(k * v))).alias("p"),
-    )
-    floor_ctx = ctx.select(
-        "prev", (F.lit(k) / (F.col("n_prev") + F.lit(k * v))).alias("p_floor")
-    )
-    scored = (
-        bg.join(_bcast(probs), ["prev", "cur"], "left")
-        .join(_bcast(floor_ctx), "prev", "left")
-        .select(
-            "id", "__c",
-            F.coalesce(F.col("p"), F.col("p_floor"), F.lit(1.0 / v)).alias("__p"),
-        )
-    )
-    return scored.groupBy("id").agg(
-        F.sum("__c").alias("n_bigrams"),
-        (-(F.sum(F.col("__c") * F.log("__p")) / F.sum("__c"))).alias(out),
-    ).select(F.col("id").alias(id_col), "n_bigrams", out)

@@ -2,8 +2,10 @@
 the reference's tests (tests/test_ts_ewm.py:19-32, 132-151)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from pyg_timeseries_spark.kernels import cnative
 from pyg_timeseries_spark.kernels import ewm_numpy as K
 from pyg_timeseries_spark.operators.ewm import ewmrms
 
@@ -103,12 +105,11 @@ def test_wgt_col_spark(spark, series_df):
     assert np.allclose(g, b, atol=1e-12, equal_nan=True)
 
 
+@pytest.mark.skipif(not cnative.available(), reason="no C compiler")
 def test_array_twin_bit_parity():
-    """The numba-targeted array sweep must be bit-identical to the canonical
-    list-based loop (on numba hosts the JIT compiles the twin unchanged)."""
-    from pyg_timeseries_spark.kernels.ewm_numpy import (
-        _ewm_sweep, _ewm_sweep_fast, decay_weight, fresh_state,
-    )
+    """The compiled sweep the dispatcher picks must be bit-identical to the
+    canonical list-based loop, with clocks (bucketed) and weights."""
+    from pyg_timeseries_spark.kernels.ewm_numpy import _ewm_sweep, decay_weight
 
     rng = np.random.default_rng(7)
     a = rng.normal(0, 1, 500)
@@ -122,7 +123,8 @@ def test_array_twin_bit_parity():
         dict(wgt=wgt),
         dict(time=time, wgt=wgt, upto=3, track_w2=True),
     ]:
-        t1, s1 = _ewm_sweep(a, w, **kw)
-        t2, s2 = _ewm_sweep_fast(a, w, **kw)
+        with cnative.disabled():
+            t1, s1 = _ewm_sweep(a, w, **kw)
+        t2, s2 = _ewm_sweep(a, w, **kw)
         assert np.array_equal(t1, t2, equal_nan=True), kw
         assert np.array_equal(s1, s2, equal_nan=True), kw

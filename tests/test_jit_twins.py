@@ -1,7 +1,8 @@
-"""Bit-parity of the array-typed (numba-JIT-able) kernel twins with the
-plain-python loops.  Without numba the twins still run as interpreted
-python — so parity is asserted in CI regardless of whether the JIT is
-active on the host."""
+"""Bit-parity of the compiled C twins' raw array entry points
+(kernels/cnative.py ``*_arrays``), called directly with the normalized
+inputs the dispatchers build (time all-NaN == no clock, wgt all-1,
+max_move all-0 == off), with the plain-python loops.  tests/test_cnative.py
+checks the same twins through the kernels' own dispatch."""
 
 import numpy as np
 import pytest
@@ -10,6 +11,10 @@ from pyg_timeseries_spark.kernels import cnative
 from pyg_timeseries_spark.kernels import ewm_numpy as EW
 from pyg_timeseries_spark.kernels import pairwise_numpy as PK
 from pyg_timeseries_spark.kernels import recurrence_numpy as RK
+
+pytestmark = pytest.mark.skipif(
+    not cnative.available(), reason="no C compiler on this host"
+)
 
 
 def _series(n=400, seed=0, nan_frac=0.2, with_zeros=False):
@@ -35,7 +40,11 @@ def test_ewm_sweep_twin_parity(upto, track_w2, with_time):
     w = 10 / 11
     with cnative.disabled():
         trail_ref, s_ref = EW._ewm_sweep(a, w, time=time, upto=upto, track_w2=track_w2)
-    trail_tw, s_tw = EW._ewm_sweep_fast(a, w, time=time, upto=upto, track_w2=track_w2)
+    s_tw = EW.fresh_state()
+    trail_tw = np.zeros((len(a), 8))
+    t_arr = np.full(len(a), np.nan) if time is None else time
+    cnative.ewm_sweep_arrays(a, w, t_arr, np.ones(len(a)), s_tw, upto,
+                             track_w2, trail_tw)
     assert np.array_equal(trail_ref, trail_tw, equal_nan=True)
     assert np.array_equal(s_ref, s_tw, equal_nan=True)
 
@@ -50,7 +59,7 @@ def test_xsweep_twin_parity(with_time):
     s = PK.fresh_xstate()
     trail_tw = np.zeros((len(a), 10))
     t_arr = np.full(len(a), np.nan) if time is None else time
-    PK._xsweep_arrays(a, b, w, t_arr, s, trail_tw)
+    cnative.xsweep_arrays(a, b, w, t_arr, s, trail_tw)
     assert np.array_equal(trail_ref, trail_tw, equal_nan=True)
     assert np.array_equal(s_ref, s, equal_nan=True)
 
@@ -63,7 +72,7 @@ def test_zmooth_twin_parity():
     w = 10 / 11
     s = np.array([0.0, 0.0, np.nan])
     res_tw = np.full(len(a), np.nan)
-    RK._zmooth_arrays(a, smooth, w, 2.0, False, s, res_tw)
+    cnative.zmooth_arrays(a, smooth, w, 2.0, False, s, res_tw)
     assert np.array_equal(res_ref, res_tw, equal_nan=True)
     assert np.array_equal(s_ref, s, equal_nan=True)
 
@@ -76,7 +85,7 @@ def test_buffer_twin_parity(unit, rounding):
         res_ref, s_ref = RK.buffer(a, band, unit=unit, rounding_band=rounding)
     s = np.array([0.0, 0.0])
     res_tw = np.full(len(a), np.nan)
-    RK._buffer_arrays(a, band, unit, rounding, s, res_tw)
+    cnative.buffer_arrays(a, band, unit, rounding, s, res_tw)
     assert np.array_equal(res_ref, res_tw, equal_nan=True)
     assert np.array_equal(s_ref, s, equal_nan=True)
 
@@ -99,8 +108,8 @@ def test_guarded_twin_parity(mode, bias, exc_zero, max_move, with_time):
     t_arr = np.full(len(a), np.nan) if time is None else time
     mm = (np.zeros(len(a)) if max_move is None
           else np.full(len(a), float(max_move)))
-    EW._guarded_sweep_arrays(a, t_arr, np.ones(len(a)), w, exc_zero, mm,
-                             3.0, 0.25, mode == "std", bias, s, res_tw)
+    cnative.guarded_sweep_arrays(a, t_arr, np.ones(len(a)), w, exc_zero, mm,
+                                 3.0, 0.25, mode == "std", bias, s, res_tw)
     assert np.array_equal(res_ref, res_tw, equal_nan=True)
     assert np.array_equal(s_ref, s, equal_nan=True)
 
