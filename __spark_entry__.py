@@ -1614,8 +1614,9 @@ def q_components_incremental(spark, sf_dir):
     dedup_components arrive in TWO batches (both-endpoints < 250 first,
     the rest after); each batch merges into stored (node, component)
     labels via union-find over COMPONENT ids — closed components are
-    never recomputed and untouched label partitions are hard-linked into
-    the new snapshot, not rewritten.  Min-label CC is order-free, so the
+    never recomputed, and untouched label partitions keep referencing
+    their earlier commit in the store's manifest, not rewritten.
+    Min-label CC is order-free, so the
     oracle is the one-shot recursive-CTE reachability over ALL edges —
     the batched store must land on identical labels."""
     import tempfile

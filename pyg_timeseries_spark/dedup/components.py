@@ -38,15 +38,20 @@ def connected_components(
     """(node, component) for every node, where component is the smallest
     node id reachable through the undirected ``edges``.  ``nodes``
     (optional, column ``node_col`` or its only column) adds isolated
-    nodes — each its own singleton component.
+    nodes — each its own singleton component.  ``max_iter`` bounds the
+    rounds of the two propagation tiers; the driver tier does not iterate.
 
     Three execution tiers, picked by measured graph size (each produces
     the identical min-reachable-id labeling — the fixpoint is unique and
     order-free):
 
     * ``edges ≤ driver_uf_edges``: union-find WITH path compression on
-      the driver (one collect of the deduplicated edge list, ≤ ~16 MB at
-      the default cap), remap re-attached as a broadcast.  An iterative
+      the driver (one collect of the deduplicated edge list), remap
+      re-attached as a broadcast.  Driver cost at the default cap,
+      measured with tracemalloc over the whole tier (collected Rows,
+      parent dict, (node, component) tuples and their conversion into
+      the result frame): 275 MB peak for 500k disjoint edges over 1M
+      ids, 226 MB for 500k random edges over ≤1M ids.  An iterative
       CC run is job-latency-bound, not data-bound, at this size — each
       propagation round costs 2 broadcasts + a checkpoint + a count (~8
       driver jobs for a diameter-3 graph) versus ONE collect here

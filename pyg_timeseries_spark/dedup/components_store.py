@@ -14,26 +14,26 @@ back onto only the store partitions holding members of merged
 components.  Closed components — the overwhelming majority at a steady
 state — are never read, never recomputed, never rewritten.
 
-Store layout (versioned snapshots, Iceberg-style commit without a
-catalog):
+Store layout (versioned snapshots through the one commit primitive of
+plans/manifest.py):
 
 * ``labels/``  (node, component), hash-partitioned by
   ``npart = pmod(xxhash64(node), P)``.  Point lookups of a batch's
-  endpoints prune to the ≤ batch_size partitions their node hashes land
-  in.  Because npart keys on the NODE, a relabel never moves a row
-  across partitions — updates rewrite partitions in place.
+  endpoints read only the ≤ batch_size partition directories their node
+  hashes land in.  Because npart keys on the NODE, a relabel never moves
+  a row across partitions — updates rewrite partitions in place.
 * ``cindex/``  (component, npart) distinct pairs, hash-partitioned by
   ``cpart = pmod(xxhash64(component), P)`` — the inverted index that
   answers "which label partitions hold members of component c" without
   scanning labels.  A merge reads only the cparts of the merged
   components.
 
-Each ``add_batch`` writes a NEW version directory containing freshly
-written parquet for the touched partitions and hard-links (a metadata-
-only constant-per-partition op; with a real table format this is the
-manifest re-pointing Iceberg/Delta do natively) for the untouched ones,
-then atomically bumps ``manifest.json``.  A crash mid-write leaves a
-dangling un-referenced version dir; the committed version is unaffected.
+Each ``add_batch`` writes fresh parquet for the touched partitions of both
+tables only; the manifest re-points those partitions and every untouched
+one keeps referencing the commit that last wrote it, so a batch costs no
+work per untouched partition.  Both tables land in one atomic manifest
+swap; a crash before it leaves an unreferenced commit directory that
+readers never see and the next ``gc`` deletes.
 
 Scale: per batch the work is O(batch) lookup + CC on the component graph
 + O(members-of-merged-components) rewrite.  The worst case — one giant
@@ -49,91 +49,50 @@ algorithm: union-find / label propagation, Kiveris et al. 2014).
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyg_timeseries_spark.dedup.components import connected_components
+from pyg_timeseries_spark.plans.manifest import Manifest
 
 
 class ComponentStore:
     def __init__(self, path: str, spark: SparkSession, n_parts: int = 256,
                  gc_keep: int | None = 8):
         """``gc_keep``: snapshot versions retained; every ``add_batch``
-        auto-gc's older version dirs (hard-linked files shared with
-        retained versions survive — unlink only drops directory refs).
+        auto-gc's the commit dirs no retained version references.
         ``None`` disables auto-gc for callers that pin old snapshots."""
         self.path = path
         self.spark = spark
         self.n_parts = n_parts
         self.gc_keep = gc_keep
-        os.makedirs(path, exist_ok=True)
-        self._manifest = os.path.join(path, "manifest.json")
+        self._m = Manifest(path, spark)
 
     # -- snapshot plumbing ---------------------------------------------------
     def version(self) -> int:
         """Committed snapshot version; 0 = empty store."""
-        if not os.path.exists(self._manifest):
-            return 0
-        with open(self._manifest) as f:
-            return json.load(f)["version"]
-
-    def _vdir(self, version: int, table: str) -> str:
-        return os.path.join(self.path, f"v{version:06d}", table)
-
-    def _commit(self, version: int) -> None:
-        tmp = self._manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version}, f)
-        os.replace(tmp, self._manifest)
+        return self._m.version("labels")
 
     def _hpart(self, col):
         return F.pmod(F.xxhash64(col.cast("string")), F.lit(self.n_parts))
 
-    def _link_untouched(self, table: str, old_v: int, new_v: int,
-                        pcol: str, touched: set[int]) -> None:
-        """Hard-link every partition dir of ``old_v`` whose partition value
-        is not in ``touched`` into the new version (metadata-only reuse —
-        the local-FS stand-in for a table format's manifest re-point)."""
-        src_root = self._vdir(old_v, table)
-        dst_root = self._vdir(new_v, table)
-        os.makedirs(dst_root, exist_ok=True)
-        for entry in os.listdir(src_root):
-            if not entry.startswith(f"{pcol}="):
-                continue
-            pval = int(entry.split("=", 1)[1])
-            if pval in touched:
-                continue
-            src, dst = os.path.join(src_root, entry), os.path.join(dst_root, entry)
-            os.makedirs(dst, exist_ok=True)
-            for fn in os.listdir(src):
-                os.link(os.path.join(src, fn), os.path.join(dst, fn))
-
     def labels(self, version: int | None = None,
                nparts: list[int] | None = None) -> DataFrame | None:
         """(node, component) at ``version`` (default: current), optionally
-        pruned to ``nparts`` (partition filter)."""
-        v = self.version() if version is None else version
-        if v == 0:
+        pruned to the ``nparts`` partition directories."""
+        df = self._m.read("labels", version, nparts)
+        if df is None:
             return None
-        df = self.spark.read.parquet(self._vdir(v, "labels"))
-        if nparts is not None:
-            df = df.filter(F.col("npart").isin(nparts))
-        return df.select("node", "component", "npart")
+        return df.select("node", "component",
+                         self._hpart(F.col("node")).cast("int").alias("npart"))
 
     def _write_first(self, labs: DataFrame) -> None:
         labs = labs.withColumn("npart", self._hpart(F.col("node")))
-        labs.repartition(F.col("npart")).write.mode("overwrite").\
-            partitionBy("npart").parquet(self._vdir(1, "labels"))
         cix = labs.select("component", "npart").distinct().\
             withColumn("cpart", self._hpart(F.col("component")))
-        cix.repartition(F.col("cpart")).write.mode("overwrite").\
-            partitionBy("cpart").parquet(self._vdir(1, "cindex"))
-        self._commit(1)
+        with self._m.operation():
+            self._m.commit("labels", labs.repartition(F.col("npart")), "npart")
+            self._m.commit("cindex", cix.repartition(F.col("cpart")), "cpart")
 
     # -- the incremental step ------------------------------------------------
     def add_batch(
@@ -208,13 +167,9 @@ class ComponentStore:
         dom = remap.select("old_comp").withColumn(
             "cpart", self._hpart(F.col("old_comp")))
         dom_cparts = [r[0] for r in dom.select("cpart").distinct().collect()]
-        cix_cur = self.spark.read.parquet(self._vdir(cur_v, "cindex"))
-        dom_rows = (
-            cix_cur.filter(F.col("cpart").isin(dom_cparts))
-            .join(F.broadcast(remap),
-                  F.col("component") == F.col("old_comp"), "left_semi")
-            if dom_cparts else cix_cur.filter(F.lit(False))
-        )
+        dom_rows = self._m.read("cindex", parts=dom_cparts).join(
+            F.broadcast(remap), F.col("component") == F.col("old_comp"),
+            "left_semi")
         # merged-member nparts and new-node nparts in ONE driver job (the
         # two sources are independent, so the union collapses two small
         # sequential collects into one)
@@ -226,7 +181,6 @@ class ComponentStore:
             .collect()
         }
 
-        new_v = cur_v + 1
         if not touched_nparts:
             # nothing merged, nothing inserted — no new snapshot needed;
             # every endpoint's current label is already final
@@ -237,7 +191,7 @@ class ComponentStore:
             return batch
 
         # 4. rewrite ONLY the touched label partitions
-        old_rows = self.labels(version=cur_v, nparts=sorted(touched_nparts))
+        old_rows = self.labels(nparts=sorted(touched_nparts))
         updated = (
             old_rows.join(F.broadcast(remap),
                           old_rows["component"] == remap["old_comp"], "left")
@@ -257,10 +211,7 @@ class ComponentStore:
                 "npart",
             )
         )
-        out_rows = updated.unionByName(fresh)
-        out_rows.repartition(F.col("npart")).write.mode("overwrite").\
-            partitionBy("npart").parquet(self._vdir(new_v, "labels"))
-        self._link_untouched("labels", cur_v, new_v, "npart", touched_nparts)
+        out_rows = updated.unionByName(fresh).repartition(F.col("npart"))
 
         # 5. cindex: drop absorbed comps, re-point their rows at the
         # winner, add new-node rows — only in the affected cparts
@@ -277,35 +228,31 @@ class ComponentStore:
         add_cparts = {r[0] for r in add_rows.select("cpart").distinct().collect()}
         touched_cparts = set(dom_cparts) | add_cparts
         keep_rows = (
-            cix_cur.filter(F.col("cpart").isin(sorted(touched_cparts)))
+            self._m.read("cindex", parts=sorted(touched_cparts))
             .join(F.broadcast(remap),
                   F.col("component") == F.col("old_comp"), "left_anti")
-            .select("component", "npart", "cpart")
+            .withColumn("cpart", self._hpart(F.col("component")))
         )
         cix_out = keep_rows.unionByName(add_rows).distinct()
-        cix_out.repartition(F.col("cpart")).write.mode("overwrite").\
-            partitionBy("cpart").parquet(self._vdir(new_v, "cindex"))
-        self._link_untouched("cindex", cur_v, new_v, "cpart", touched_cparts)
-
-        self._commit(new_v)
         batch = (
             ep_lab.join(F.broadcast(remap),
                         ep_lab["cur"] == remap["old_comp"], "left")
             .select("node", F.coalesce("new_comp", "cur").alias("component"))
         )
         batch = batch.localCheckpoint()
+
+        # both tables, and the gc below, land in one manifest swap
+        with self._m.operation():
+            self._m.commit("labels", out_rows, "npart", sorted(touched_nparts))
+            self._m.commit("cindex", cix_out.repartition(F.col("cpart")),
+                           "cpart", sorted(touched_cparts))
+            if self.gc_keep is not None:
+                self.gc(keep=self.gc_keep)
         for df in (ep, ep_lab):
             df.unpersist()
-        if self.gc_keep is not None:
-            self.gc(keep=self.gc_keep)
         return batch
 
     def gc(self, keep: int = 2) -> None:
-        """Remove snapshot dirs older than the newest ``keep`` versions
-        (hard-linked files stay alive while any retained version points at
-        them — unlink only drops the dir's references)."""
-        cur = self.version()
-        for entry in os.listdir(self.path):
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) <= cur - keep:
-                    shutil.rmtree(os.path.join(self.path, entry))
+        """Keep the newest ``keep`` snapshot versions and delete the commit
+        dirs none of them references."""
+        self._m.gc(keep)

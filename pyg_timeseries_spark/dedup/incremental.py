@@ -3,7 +3,8 @@ production shape for a continuously-ingested training corpus: each new
 batch dedups against EVERYTHING seen so far without ever reprocessing the
 historical corpus text.
 
-Store layout (round 4: partition-pruned).  Two parquet tables, both
+Store layout (partition-pruned).  Two parquet append tables committed
+through the one commit primitive of plans/manifest.py, both
 hash-partitioned so a batch's candidate join reads ONLY the partitions its
 own hashes touch — the per-batch scan is O(store-fraction-touched), not
 O(store):
@@ -27,15 +28,13 @@ P=2048 keeps a 10-doc batch under 4% of store partitions; a production
 store fed 1e4-doc batches wants P in the 1e5 range — P only costs one
 driver-side list of ≤P ints per batch, so err large).  Appends create ≤P
 files per batch per table; run :meth:`compact` periodically to rewrite
-each partition into one file and purge uncommitted orphans.
+each partition into one file.
 
-Crash safety (round 5): the two appends are not atomic, so each batch
-writes its rows tagged with a fresh batch token and the token is recorded
-in a store-level manifest (atomic rename) only AFTER both appends
-succeed.  Reads filter to committed tokens — a crash between the bucket
-and exact appends leaves orphan rows that are invisible forever (and
-physically removed at the next compact()), instead of a permanently
-half-committed batch the old exact/_SUCCESS gate could not detect.
+Crash safety: each batch writes both tables as new commit directories and
+publishes them in ONE atomic manifest swap; reads list only the
+directories the manifest references.  A crash before the swap leaves
+unreferenced directories that readers never see, that a retry of the
+batch overwrites, and that the next compact() deletes.
 
 Drop rule (same greedy order-based rule as neardup.minhash_dedup, made
 incremental-safe): a document is dropped iff
@@ -55,13 +54,10 @@ extends the pipeline the same way dedup/neardup.py does.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from pyg_timeseries_spark.plans.manifest import Manifest
 
 
 class IncrementalDeduper:
@@ -85,27 +81,7 @@ class IncrementalDeduper:
         self.shingle_k = shingle_k
         self.hash_fn = hash_fn
         self.n_parts = n_parts
-        os.makedirs(path, exist_ok=True)
-        self._exact_dir = os.path.join(path, "exact")
-        self._bucket_dir = os.path.join(path, "buckets")
-        self._manifest = os.path.join(path, "manifest.json")
-
-    # -- commit manifest -----------------------------------------------------
-    def _committed(self) -> list[str]:
-        """Batch tokens whose bucket AND exact appends both completed."""
-        if not os.path.exists(self._manifest):
-            return []
-        with open(self._manifest) as f:
-            return json.load(f)["batches"]
-
-    def _record_commit(self, token: str) -> None:
-        """Append ``token`` to the manifest via write-temp + atomic rename —
-        the batch becomes visible only once both table appends are durable."""
-        batches = self._committed() + [token]
-        tmp = self._manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batches": batches}, f)
-        os.replace(tmp, self._manifest)
+        self._m = Manifest(path, spark)
 
     # -- signature construction (same families as dedup/neardup.py) ---------
     def _signatures(self, docs: DataFrame, id_col: str, text: str) -> DataFrame:
@@ -166,33 +142,15 @@ class IncrementalDeduper:
         )
         return out.withColumn("part", self._epart(F.col("bucket")))
 
-    def _has_store(self) -> bool:
-        # a store exists iff the manifest records ≥1 fully-committed batch —
-        # a half-written first batch (appends without the manifest record)
-        # reads as "no store yet" for both tables
-        return bool(self._committed())
-
     def store_exact(self, eparts: list[int] | None = None) -> DataFrame | None:
-        """The exact-hash table, pruned to ``eparts`` (partition filter —
-        the scan's PartitionFilters carries the IN list) and to committed
-        batch tokens (orphans from crashed appends are invisible)."""
-        committed = self._committed()
-        if not committed:
-            return None
-        df = self.spark.read.parquet(self._exact_dir)
-        if eparts is not None:
-            df = df.filter(F.col("epart").isin(eparts))
-        return df.filter(F.col("batch").isin(committed))
+        """The committed exact-hash table (h_exact, id), reading only the
+        ``eparts`` partition directories when given."""
+        return self._m.read("exact", parts=eparts)
 
     def store_buckets(self, parts: list[int] | None = None) -> DataFrame | None:
-        """The band-bucket table, pruned to ``parts`` and committed batches."""
-        committed = self._committed()
-        if not committed:
-            return None
-        df = self.spark.read.parquet(self._bucket_dir)
-        if parts is not None:
-            df = df.filter(F.col("part").isin(parts))
-        return df.filter(F.col("batch").isin(committed))
+        """The committed band-bucket table (id, h.., band, bucket), reading
+        only the ``parts`` partition directories when given."""
+        return self._m.read("buckets", parts=parts)
 
     # -- the incremental step -----------------------------------------------
     def add_batch(self, docs: DataFrame, id_col: str = "doc_id",
@@ -200,10 +158,9 @@ class IncrementalDeduper:
         """Dedup ``docs`` against the store + itself and append the batch's
         signatures.  Returns (id, dropped, reason) for every batch doc
         (reason 'exact' | 'near' | NULL)."""
-        token = f"b{len(self._committed()) + 1:06d}_{uuid.uuid4().hex[:8]}"
         sig_b = self._signatures(docs, id_col, text).persist()
-        eb = self._exact_rows(sig_b).withColumn("batch", F.lit(token))
-        bb = self._bucket_rows(sig_b).withColumn("batch", F.lit(token))
+        eb = self._exact_rows(sig_b)
+        bb = self._bucket_rows(sig_b)
 
         # Partition sets the batch touches: ≤ n_parts small ints, collected
         # driver-side once per batch — this is what makes the store read
@@ -214,7 +171,7 @@ class IncrementalDeduper:
         # exact layer: an earlier doc with the same content hash (store
         # partitions pruned to the batch's eparts, plus the batch itself)
         se = self.store_exact(eparts)
-        earlier_exact = eb if se is None else se.unionByName(eb)
+        earlier_exact = eb if se is None else se.unionByName(eb.drop("epart"))
         exact_drop = (
             sig_b.join(
                 earlier_exact.select(F.col("h_exact").alias("e_h"),
@@ -231,7 +188,7 @@ class IncrementalDeduper:
         # persisted sig_b.
         hcols = [f"h{p}" for p in range(self.n_hashes)]
         sb = self.store_buckets(parts)
-        earlier_b = bb if sb is None else sb.unionByName(bb)
+        earlier_b = bb if sb is None else sb.unionByName(bb.drop("part"))
         cand = (
             bb.select("band", "bucket", "id")
             .join(
@@ -265,18 +222,12 @@ class IncrementalDeduper:
         )
         out = out.persist()
         out.count()  # materialize the verdicts BEFORE the store grows
-        # Commit protocol: append both tables tagged with this batch's
-        # token, THEN record the token in the manifest (atomic rename).  A
-        # crash anywhere before the manifest write leaves orphan rows that
-        # reads never see (filtered to committed tokens) and compact()
-        # physically removes; the recovery contract is simply RETRY THE
-        # BATCH — the retry gets a fresh token, and even a double-committed
-        # retry is verdict-idempotent (the exact layer is a semi-join and
-        # the near layer dedups candidate pairs, so duplicate store rows
-        # change nothing).
-        bb.write.mode("append").partitionBy("part").parquet(self._bucket_dir)
-        eb.write.mode("append").partitionBy("epart").parquet(self._exact_dir)
-        self._record_commit(token)
+        # Commit protocol: both appends land in ONE manifest swap.  A crash
+        # before it leaves commit dirs no read lists; the recovery contract
+        # is simply RETRY THE BATCH, which rewrites those same dirs.
+        with self._m.operation():
+            self._m.commit("buckets", bb, "part", append=True)
+            self._m.commit("exact", eb, "epart", append=True)
         sig_b.unpersist()
         return out
 
@@ -292,43 +243,18 @@ class IncrementalDeduper:
         table per batch, so after B batches a partition holds up to B file
         fragments.  Compaction rewrites every committed row into ONE file
         per store partition (repartition on the partition column before
-        write — each task owns whole partitions) and physically drops
-        orphan rows from crashed, never-committed batches.  All committed
-        rows are re-tagged under a single fresh token so the manifest's
-        committed list resets to length 1 (the read-path isin filter stays
-        O(1) no matter how many batches preceded the compact).
-
-        Swap protocol: write both compacted tables to side directories,
-        then rename old→trash / new→live / remove trash, and rewrite the
-        manifest last.  A crash mid-swap can lose the LIVE directory for
-        the instant between the two renames — run compaction from a single
-        maintenance job, not concurrently with add_batch (documented
-        contract, same as any parquet table swap without a catalog)."""
-        committed = self._committed()
-        if not committed:
+        write — each task owns whole partitions) as one replace commit of
+        both tables in one manifest swap, then deletes every commit dir the
+        new manifest does not reference: the appended fragments and the
+        orphans of crashed batches.  A crash at any step leaves the store
+        reading either the old or the compacted tables."""
+        if not self._m.version("exact"):
             return
-        token = f"c{uuid.uuid4().hex[:8]}"
-        swaps = []
-        for live, pcol in ((self._bucket_dir, "part"), (self._exact_dir, "epart")):
-            new = live + ".compact"
-            if os.path.exists(new):
-                shutil.rmtree(new)
-            (
-                self.spark.read.parquet(live)
-                .filter(F.col("batch").isin(committed))
-                .withColumn("batch", F.lit(token))
-                .repartition(F.col(pcol))
-                .write.mode("overwrite").partitionBy(pcol).parquet(new)
-            )
-            swaps.append((live, new))
-        for live, new in swaps:
-            trash = live + ".old"
-            if os.path.exists(trash):
-                shutil.rmtree(trash)
-            os.replace(live, trash)
-            os.replace(new, live)
-            shutil.rmtree(trash)
-        tmp = self._manifest + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"batches": [token]}, f)
-        os.replace(tmp, self._manifest)
+        with self._m.operation():
+            for name, pcol, pval in (
+                ("buckets", "part", self._epart(F.col("bucket"))),
+                ("exact", "epart", self._epart(F.col("h_exact"))),
+            ):
+                df = self._m.read(name).withColumn(pcol, pval)
+                self._m.commit(name, df.repartition(F.col(pcol)), pcol)
+            self._m.gc(keep=1)

@@ -8,18 +8,22 @@ bit-identical to recomputing from all raw rows (CI-enforced invariant,
 SURVEY.md §7.0).
 
 Storage is a manifest-versioned parquet layout — the Iceberg contract in
-miniature: immutable commit directories, an atomic pointer swap, and a
-per-partition manifest so a commit rewrites ONLY the day-partitions its
-delta touches.  Time-travel = read an older manifest.  When Iceberg jars are
-on the classpath the same operations map to ``writeTo(...).append()`` /
-``MERGE INTO`` — gated behind an import-try in sources/tables.py; the sandbox
-image has no Iceberg runtime, so the parquet backend is the tested path.
+miniature, through the one commit primitive of plans/manifest.py:
+immutable commit directories, one atomic manifest swap per store operation
+(``ingest`` commits every tier, the retained raw, the lineage and the batch
+counter together), and a per-partition manifest so a commit rewrites ONLY
+the day-partitions its delta touches.  Time-travel = read an older
+manifest.  When Iceberg jars are on the classpath the same operations map
+to ``writeTo(...).append()`` / ``MERGE INTO`` — gated behind an import-try
+in sources/tables.py; the sandbox image has no Iceberg runtime, so the
+parquet backend is the tested path.
 
 O(delta) ingest (the engine's core scale claim — at 10^12 sequences the
 rollup history is petabytes; re-aggregating it per batch is the scale-killer):
 
 * the existing tier is READ only for the day-partitions the delta touches
-  (manifest + parquet partition pruning — cold history is never scanned);
+  (the manifest lists only their directories — cold history is never
+  scanned);
 * only (source, bucket) cells present in the delta are re-aggregated; other
   rows in the touched partitions are carried through untouched;
 * coarser tiers are recomputed from the merged child tier restricted to the
@@ -33,21 +37,22 @@ rollup history is petabytes; re-aggregating it per batch is the scale-killer):
 Layout::
 
     store/
-      meta.json                    # manifests: {tier: {p_day: version}}
+      manifest.json                # {table: {version, snapshots: {N:
+                                   #   {parts: {p_day: [commit]}, schema}}}}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
-      state/{op}/v{N}/*.parquet    # operator state rows (key, state[])
-      lineage/*.parquet            # per-batch per-partition row counts
+      state_{op}/v{N}/*.parquet    # operator state rows (key, state[])
+      lineage/v{N}/*.parquet       # per-stage per-partition row counts
 """
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyg_timeseries_spark.plans.manifest import Manifest
 from pyg_timeseries_spark.plans.rollup import (
     MAX_TOKENS_PER_ROW, bucket_col, merge_rollup, merge_token_chunks,
     rollup_cascade, rollup_from_raw, token_chunk_rows, tokens_at_tier,
@@ -68,67 +73,31 @@ class RollupStore:
     def __init__(self, path: str, spark: SparkSession):
         self.path = path
         self.spark = spark
-        os.makedirs(path, exist_ok=True)
-        self.meta_path = os.path.join(path, "meta.json")
-        self.meta = self._load_meta()
+        self._m = Manifest(path, spark, {"batches": 0, "raw_complete": None})
         self.last_ingest_stats: dict = {}
         self.last_expire_stats: dict = {}
 
-    # -- meta ---------------------------------------------------------------
-    def _load_meta(self) -> dict:
-        if os.path.exists(self.meta_path):
-            with open(self.meta_path) as f:
-                return json.load(f)
-        return {"tables": {}, "batches": 0, "raw_complete": None}
-
-    def _save_meta(self) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f, indent=1)
-        os.replace(tmp, self.meta_path)  # atomic pointer swap
+    @property
+    def meta(self) -> dict:
+        """The store's metadata: tables plus ``batches``, ``raw_complete``
+        and operator watermarks; what is set here lands with the next
+        store operation's commit swap."""
+        return self._m.meta
 
     # -- snapshot io (simple whole-table tables: states, chunks) -------------
     def _table_dir(self, name: str, version: int) -> str:
-        return os.path.join(self.path, name, f"v{version}")
+        return self._m.table_dir(name, version)
 
     def write_table(self, name: str, df: DataFrame) -> int:
-        cur = self.meta["tables"].get(name, {}).get("version", 0)
-        new = cur + 1
-        df.write.mode("overwrite").parquet(self._table_dir(name, new))
-        self.meta["tables"].setdefault(name, {})["version"] = new
-        self._save_meta()
-        return new
+        return self._m.commit(name, df)
 
     # -- partitioned tables (rollup tiers) ------------------------------------
-    def _manifest(self, name: str, version: int | None = None) -> dict:
-        info = self.meta["tables"].get(name)
-        if not info or "manifests" not in info:
-            return {}
-        v = version or info["version"]
-        return info["manifests"].get(str(v), {})
-
-    def commit_partitions(
-        self, name: str, df: DataFrame, touched_parts: list[str],
-        drop_missing: bool = False,
-    ) -> int:
+    def commit_partitions(self, name: str, df: DataFrame,
+                          touched_parts: list[str]) -> int:
         """Write ``df`` (the full new content of ``touched_parts``) as an
-        immutable commit and flip those partitions' manifest entries.  With
-        ``drop_missing`` the new manifest covers ONLY ``touched_parts``
-        (full-rewrite semantics, used by expire/compact)."""
-        info = self.meta["tables"].setdefault(
-            name, {"version": 0, "manifests": {}}
-        )
-        new = info["version"] + 1
-        _with_pday(df).write.partitionBy(PART_COL).mode("overwrite").parquet(
-            self._table_dir(name, new)
-        )
-        man = {} if drop_missing else dict(self._manifest(name))
-        for p in touched_parts:
-            man[p] = new
-        info["version"] = new
-        info.setdefault("manifests", {})[str(new)] = man
-        self._save_meta()
-        return new
+        immutable commit and flip those partitions' manifest entries; a
+        touched partition with no rows in ``df`` leaves the manifest."""
+        return self._m.commit(name, _with_pday(df), PART_COL, touched_parts)
 
     def drop_partitions(self, name: str, parts: list[str]) -> int:
         """Metadata-only commit: remove ``parts`` from the live manifest.
@@ -136,49 +105,22 @@ class RollupStore:
         delete-by-partition-predicate analog (a new manifest simply stops
         referencing the expired day-partitions; expire_snapshots later GCs
         commit dirs nothing references)."""
-        info = self.meta["tables"][name]
-        new = info["version"] + 1
-        drop = set(parts)
-        man = {p: v for p, v in self._manifest(name).items() if p not in drop}
-        info["version"] = new
-        info.setdefault("manifests", {})[str(new)] = man
-        self._save_meta()
-        return new
+        return self._m.drop(name, parts)
 
     def read_table(self, name: str, version: int | None = None,
                    parts: list[str] | None = None) -> DataFrame | None:
         """Current (or time-travel ``version``) view of a table.  For
         partitioned tables, ``parts`` restricts the read to those
-        day-partitions — manifest planning + parquet partition pruning means
-        untouched history is never scanned."""
-        info = self.meta["tables"].get(name)
-        if not info:
+        day-partitions — the scan lists only their commit directories, so
+        untouched history is never scanned.  None when nothing matches."""
+        if not self._m.dirs(name, version, parts):
             return None
-        if "manifests" not in info:
-            v = version or info["version"]
-            return self.spark.read.parquet(self._table_dir(name, v))
-        man = self._manifest(name, version)
-        if parts is not None:
-            man = {p: v for p, v in man.items() if p in set(parts)}
-        if not man:
-            return None
-        by_ver: dict[int, list[str]] = {}
-        for p, v in man.items():
-            by_ver.setdefault(v, []).append(p)
-        pieces = [
-            self.spark.read.parquet(self._table_dir(name, v))
-            .filter(F.col(PART_COL).isin(ps))
-            for v, ps in sorted(by_ver.items())
-        ]
-        out = pieces[0]
-        for p in pieces[1:]:
-            out = out.unionByName(p)
-        return out.drop(PART_COL)
+        return self._m.read(name, version, parts)
 
     # -- lineage ------------------------------------------------------------
     def record_lineage(self, batch_id: int, stage: str, df: DataFrame) -> None:
         """Per-partition row counts for the stage input — every stage emits
-        lineage (north_rule).  One tiny parquet append per batch."""
+        lineage (north_rule).  One tiny append commit per stage."""
         counts = (
             df.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count(F.lit(1)).alias("rows"))
@@ -186,10 +128,10 @@ class RollupStore:
             .withColumn("stage", F.lit(stage))
             .withColumn("wall_ts", F.lit(time.time()))
         )
-        counts.write.mode("append").parquet(os.path.join(self.path, "lineage"))
+        self._m.commit("lineage", counts, append=True)
 
-    def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self.path, "lineage"))
+    def lineage(self) -> DataFrame | None:
+        return self.read_table("lineage")
 
     # -- the incremental driver --------------------------------------------
     def ingest(
@@ -243,144 +185,148 @@ class RollupStore:
         the tier rows — concatenated per bucket, so a hot (source, day) at
         the 1d tier becomes ONE unbounded row; use only at small scale.
         """
-        batch_id = self.meta["batches"] + 1
-        if with_lineage:
-            self.record_lineage(batch_id, "raw", raw)
-        complete = self.meta.get("raw_complete")
-        self.meta["raw_complete"] = exact_rebuild if complete is None else (
-            complete and exact_rebuild
-        )
-        if exact_rebuild:
-            raw.write.mode("append").parquet(os.path.join(self.path, "raw"))
+        # every table this batch changes, and the batch counter, land in
+        # one manifest swap: a crash at any step leaves the store as it was
+        with self._m.operation():
+            batch_id = self.meta["batches"] + 1
+            if with_lineage:
+                self.record_lineage(batch_id, "raw", raw)
+            complete = self.meta.get("raw_complete")
+            self.meta["raw_complete"] = exact_rebuild if complete is None else (
+                complete and exact_rebuild
+            )
+            if exact_rebuild:
+                self._m.commit("raw", raw, append=True)
 
-        chunked = tokens is not None and token_mode == "chunked"
-        tier_tokens = None if chunked else tokens
-        delta = rollup_from_raw(raw, "1m", ts=ts, v=v, tokens=tier_tokens,
-                                key=key, sketch_id=sketch_id)
-        delta = delta.persist()
-        touched_parts = [
-            r[0] for r in _with_pday(delta).select(PART_COL).distinct().collect()
-        ]
-        self.last_ingest_stats = {"touched_parts": touched_parts}
-        out: dict[str, DataFrame] = {}
-        if not touched_parts:  # empty batch: nothing to merge or commit
+            chunked = tokens is not None and token_mode == "chunked"
+            tier_tokens = None if chunked else tokens
+            delta = rollup_from_raw(raw, "1m", ts=ts, v=v, tokens=tier_tokens,
+                                    key=key, sketch_id=sketch_id)
+            delta = delta.persist()
+            touched_parts = [
+                r[0] for r in _with_pday(delta).select(PART_COL).distinct().collect()
+            ]
+            self.last_ingest_stats = {"touched_parts": touched_parts}
+            out: dict[str, DataFrame] = {}
+            if not touched_parts:  # empty batch: nothing to merge or commit
+                delta.unpersist()
+                self.meta["batches"] = batch_id
+                for tier in ("1m", "1h", "1d"):
+                    out[tier] = self.read_table(f"rollup_{tier}")
+                return out
+
+            # -- 1m: merge or rebuild delta-touched cells ------------------------
+            prev = self.read_table("rollup_1m", parts=touched_parts)
+            if prev is None:
+                content_1m = delta
+            else:
+                prev = prev.persist()
+                cells = delta.select(*_CELL)
+                overlap = prev.join(F.broadcast(cells), _CELL, "left_semi")
+                keep = prev.join(F.broadcast(cells), _CELL, "left_anti")
+                if exact_rebuild:
+                    merged_cells = self._rebuild_overlaps(
+                        overlap, delta, lambda r: rollup_from_raw(
+                            r, "1m", ts=ts, v=v, tokens=tier_tokens, key=key,
+                            sketch_id=sketch_id), ts, key)
+                else:
+                    merged_cells = merge_rollup(
+                        overlap, delta, with_tokens=tier_tokens is not None
+                    )
+                content_1m = keep.unionByName(merged_cells)
+                if with_scan_stats:
+                    # extra count action over the (pruned) prev scan — diagnostic
+                    # only, so a production batch runs one job per committed table
+                    self.last_ingest_stats["prev_rows_scanned_1m"] = prev.count()
+            self.commit_partitions("rollup_1m", content_1m, touched_parts)
+            if prev is not None:
+                prev.unpersist()
+            out["1m"] = self.read_table("rollup_1m")
+            if with_lineage:
+                self.record_lineage(
+                    batch_id, "commit_1m",
+                    self.read_table("rollup_1m", parts=touched_parts),
+                )
+
+            # -- chunked token payload: one bounded-row table at 1m granularity --
+            if chunked:
+                delta_chunks = token_chunk_rows(
+                    raw, ts=ts, tokens=tokens, key=key, cap=chunk_cap
+                ).persist()
+                prev_c = self.read_table("tokens_1m", parts=touched_parts)
+                if prev_c is None:
+                    content_c = delta_chunks
+                else:
+                    c_cells = delta_chunks.select(*_CELL).distinct()
+                    overlap_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_semi")
+                    keep_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_anti")
+                    if exact_rebuild:
+                        merged_c = self._rebuild_overlaps(
+                            overlap_c, delta_chunks, lambda r: token_chunk_rows(
+                                r, ts=ts, tokens=tokens, key=key, cap=chunk_cap),
+                            ts, key)
+                    else:
+                        merged_c = merge_token_chunks(overlap_c, delta_chunks,
+                                                      cap=chunk_cap)
+                    content_c = keep_c.unionByName(merged_c)
+                self.commit_partitions("tokens_1m", content_c, touched_parts)
+                delta_chunks.unpersist()
+                out["tokens_1m"] = self.read_table("tokens_1m")
+
+            # -- coarser tiers: rebuild affected parent cells from the child ----
+            child_tier, delta_cells = "1m", delta.select(*_CELL)
+            tier_has_tokens = tier_tokens is not None
+            for tier in ("1h", "1d"):
+                parent_cells = delta_cells.select(
+                    "source", bucket_col("bucket", tier, delta_cells).alias("bucket")
+                ).distinct()
+                child_now = self.read_table(f"rollup_{child_tier}", parts=touched_parts)
+                child_subset = child_now.join(
+                    F.broadcast(
+                        parent_cells.select(
+                            F.col("source").alias("_ps"), F.col("bucket").alias("_pb")
+                        )
+                    ),
+                    (F.col("source") == F.col("_ps"))
+                    & (bucket_col("bucket", tier, child_now) == F.col("_pb")),
+                    "left_semi",
+                )
+                recomputed = rollup_cascade(
+                    child_subset, tier, with_tokens=tier_has_tokens
+                )
+                prev_t = self.read_table(f"rollup_{tier}", parts=touched_parts)
+                if prev_t is None:
+                    content = recomputed
+                else:
+                    keep_t = prev_t.join(F.broadcast(parent_cells), _CELL, "left_anti")
+                    content = keep_t.unionByName(recomputed)
+                    if with_scan_stats:
+                        self.last_ingest_stats[f"prev_rows_scanned_{tier}"] = (
+                            prev_t.count())
+                self.commit_partitions(f"rollup_{tier}", content, touched_parts)
+                out[tier] = self.read_table(f"rollup_{tier}")
+                if with_lineage:
+                    # per-stage lineage over the COMMIT content (delta-touched
+                    # partitions only — never a full-tier read)
+                    self.record_lineage(
+                        batch_id, f"commit_{tier}",
+                        self.read_table(f"rollup_{tier}", parts=touched_parts),
+                    )
+                child_tier, delta_cells = tier, parent_cells
+
             delta.unpersist()
             self.meta["batches"] = batch_id
-            self._save_meta()
-            for tier in ("1m", "1h", "1d"):
-                out[tier] = self.read_table(f"rollup_{tier}")
             return out
 
-        # -- 1m: merge or rebuild delta-touched cells ------------------------
-        prev = self.read_table("rollup_1m", parts=touched_parts)
-        if prev is None:
-            content_1m = delta
-        else:
-            prev = prev.persist()
-            cells = delta.select(*_CELL)
-            overlap = prev.join(F.broadcast(cells), _CELL, "left_semi")
-            keep = prev.join(F.broadcast(cells), _CELL, "left_anti")
-            if exact_rebuild:
-                merged_cells = self._rebuild_overlaps(
-                    overlap, delta, ts=ts, v=v, tokens=tier_tokens, key=key,
-                    sketch_id=sketch_id,
-                )
-            else:
-                merged_cells = merge_rollup(
-                    overlap, delta, with_tokens=tier_tokens is not None
-                )
-            content_1m = keep.unionByName(merged_cells)
-            if with_scan_stats:
-                # extra count action over the (pruned) prev scan — diagnostic
-                # only, so a production batch runs one job per committed table
-                self.last_ingest_stats["prev_rows_scanned_1m"] = prev.count()
-        self.commit_partitions("rollup_1m", content_1m, touched_parts)
-        if prev is not None:
-            prev.unpersist()
-        out["1m"] = self.read_table("rollup_1m")
-        if with_lineage:
-            self.record_lineage(
-                batch_id, "commit_1m",
-                self.read_table("rollup_1m", parts=touched_parts),
-            )
-
-        # -- chunked token payload: one bounded-row table at 1m granularity --
-        if chunked:
-            delta_chunks = token_chunk_rows(
-                raw, ts=ts, tokens=tokens, key=key, cap=chunk_cap
-            ).persist()
-            prev_c = self.read_table("tokens_1m", parts=touched_parts)
-            if prev_c is None:
-                content_c = delta_chunks
-            else:
-                c_cells = delta_chunks.select(*_CELL).distinct()
-                overlap_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_semi")
-                keep_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_anti")
-                if exact_rebuild:
-                    merged_c = self._rebuild_token_overlaps(
-                        overlap_c, delta_chunks, ts=ts, tokens=tokens,
-                        key=key, cap=chunk_cap,
-                    )
-                else:
-                    merged_c = merge_token_chunks(overlap_c, delta_chunks,
-                                                  cap=chunk_cap)
-                content_c = keep_c.unionByName(merged_c)
-            self.commit_partitions("tokens_1m", content_c, touched_parts)
-            delta_chunks.unpersist()
-            out["tokens_1m"] = self.read_table("tokens_1m")
-
-        # -- coarser tiers: rebuild affected parent cells from the child ----
-        child_tier, delta_cells = "1m", delta.select(*_CELL)
-        tier_has_tokens = tier_tokens is not None
-        for tier in ("1h", "1d"):
-            parent_cells = delta_cells.select(
-                "source", bucket_col("bucket", tier, delta_cells).alias("bucket")
-            ).distinct()
-            child_now = self.read_table(f"rollup_{child_tier}", parts=touched_parts)
-            child_subset = child_now.join(
-                F.broadcast(
-                    parent_cells.select(
-                        F.col("source").alias("_ps"), F.col("bucket").alias("_pb")
-                    )
-                ),
-                (F.col("source") == F.col("_ps"))
-                & (bucket_col("bucket", tier, child_now) == F.col("_pb")),
-                "left_semi",
-            )
-            recomputed = rollup_cascade(
-                child_subset, tier, with_tokens=tier_has_tokens
-            )
-            prev_t = self.read_table(f"rollup_{tier}", parts=touched_parts)
-            if prev_t is None:
-                content = recomputed
-            else:
-                keep_t = prev_t.join(F.broadcast(parent_cells), _CELL, "left_anti")
-                content = keep_t.unionByName(recomputed)
-                if with_scan_stats:
-                    self.last_ingest_stats[f"prev_rows_scanned_{tier}"] = prev_t.count()
-            self.commit_partitions(f"rollup_{tier}", content, touched_parts)
-            out[tier] = self.read_table(f"rollup_{tier}")
-            if with_lineage:
-                # per-stage lineage over the COMMIT content (delta-touched
-                # partitions only — never a full-tier read)
-                self.record_lineage(
-                    batch_id, f"commit_{tier}",
-                    self.read_table(f"rollup_{tier}", parts=touched_parts),
-                )
-            child_tier, delta_cells = tier, parent_cells
-
-        delta.unpersist()
-        self.meta["batches"] = batch_id
-        self._save_meta()
-        return out
-
-    def _rebuild_overlaps(self, overlap, delta, ts, v, tokens, key,
-                          sketch_id=None):
+    def _rebuild_overlaps(self, overlap, delta, rebuild, ts, key):
         """Recompute from retained raw the (source, bucket) cells present in
         both history and the new delta — the only cells where a concat-order
-        merge can diverge from a full recompute.  Delta-only cells pass
+        merge of measures or token chunks can diverge from a full recompute
+        (``rebuild`` maps the cells' raw rows to delta rows; a bucket's
+        chunks are a pure function of its full ts-ordered content, so this
+        is exact under out-of-order arrival).  Delta-only cells pass
         through unchanged."""
-        ov_cells = overlap.select(*_CELL)
+        ov_cells = overlap.select(*_CELL).distinct()
         delta_only = delta.join(F.broadcast(ov_cells), _CELL, "left_anti")
         if ov_cells.isEmpty():
             return delta_only
@@ -390,7 +336,7 @@ class RollupStore:
                 "history, but earlier batches were ingested with "
                 "exact_rebuild=False — the rebuild would undercount."
             )
-        raw_all = self.spark.read.parquet(os.path.join(self.path, "raw"))
+        raw_all = self.read_table("raw")
         affected_raw = (
             raw_all.withColumn("_b", bucket_col(ts, "1m", raw_all))
             .join(
@@ -404,43 +350,7 @@ class RollupStore:
             )
             .drop("_b")
         )
-        rebuilt = rollup_from_raw(affected_raw, "1m", ts=ts, v=v,
-                                  tokens=tokens, key=key, sketch_id=sketch_id)
-        return delta_only.unionByName(rebuilt)
-
-    def _rebuild_token_overlaps(self, overlap_c, delta_chunks, ts, tokens,
-                                key, cap):
-        """Chunked-mode analog of _rebuild_overlaps: buckets present in both
-        history and delta re-chunk from retained raw (a pure function of the
-        bucket's full ts-ordered content — exact under out-of-order
-        arrival); delta-only buckets pass through."""
-        ov_cells = overlap_c.select(*_CELL).distinct()
-        delta_only = delta_chunks.join(F.broadcast(ov_cells), _CELL, "left_anti")
-        if ov_cells.isEmpty():
-            return delta_only
-        if not self.meta.get("raw_complete"):
-            raise ValueError(
-                "exact_rebuild needs retained raw spanning the store's "
-                "history, but earlier batches were ingested with "
-                "exact_rebuild=False — the rebuild would undercount."
-            )
-        raw_all = self.spark.read.parquet(os.path.join(self.path, "raw"))
-        affected_raw = (
-            raw_all.withColumn("_b", bucket_col(ts, "1m", raw_all))
-            .join(
-                F.broadcast(
-                    ov_cells.select(
-                        F.col("source").alias("_os"), F.col("bucket").alias("_ob")
-                    )
-                ),
-                (F.col(key) == F.col("_os")) & (F.col("_b") == F.col("_ob")),
-                "left_semi",
-            )
-            .drop("_b")
-        )
-        rebuilt = token_chunk_rows(affected_raw, ts=ts, tokens=tokens, key=key,
-                                   cap=cap)
-        return delta_only.unionByName(rebuilt)
+        return delta_only.unionByName(rebuild(affected_raw))
 
     def read_tokens(self, tier: str = "1m") -> DataFrame | None:
         """Token payloads at any tier granularity, flattened at read from the
@@ -488,18 +398,13 @@ class RollupStore:
     # -- compaction ----------------------------------------------------------
     def fragmentation(self, name: str) -> dict:
         """Per live day-partition: the number of parquet data files backing
-        it (driver-side listing of each partition's manifest-referenced
-        commit dir — metadata only, no data read)."""
-        out: dict[str, int] = {}
-        for p, v in self._manifest(name).items():
-            pdir = os.path.join(self._table_dir(name, v), f"{PART_COL}={p}")
-            try:
-                out[p] = sum(
-                    1 for f in os.listdir(pdir) if f.endswith(".parquet")
-                )
-            except FileNotFoundError:
-                out[p] = 0
-        return out
+        it (driver-side listing of the partition's manifest-referenced
+        directories — metadata only, no data read)."""
+        return {
+            p: sum(f.endswith(".parquet")
+                   for d in self._m.dirs(name, parts=[p]) for f in os.listdir(d))
+            for p in self._m.parts(name)
+        }
 
     def compact(self, name: str, max_files: int = 4) -> dict:
         """Rewrite day-partitions backed by more than ``max_files`` parquet
@@ -555,7 +460,7 @@ class RollupStore:
                       interval_s: int) -> None:
         import datetime as _dt
 
-        man = self._manifest(name)
+        man = self._m.parts(name)
         if not man:
             return
         newest_day = max(man)  # ISO date strings sort chronologically
@@ -573,59 +478,32 @@ class RollupStore:
         cutoff = max_b - _dt.timedelta(seconds=(keep_buckets - 1) * interval_s)
         cutoff_day = cutoff.date().isoformat()
         expired = [p for p in man if p < cutoff_day]
-        if expired:
-            self.drop_partitions(name, expired)
         self.last_expire_stats = {
             "dropped_parts": sorted(expired), "rewritten_parts": [],
         }
-        # the boundary day is rewritten only when the cutoff bisects it
-        if cutoff.time() != _dt.time.min and cutoff_day in man:
-            part = self.read_table(name, parts=[cutoff_day])
-            # cast the literal to the bucket's own type (parsed in the same
-            # session tz the string above was rendered in)
-            cut_lit = F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")).cast(
-                part.schema["bucket"].dataType
-            )
-            boundary = part.filter(F.col("bucket") >= cut_lit)
-            if boundary.isEmpty():
-                # nothing in the boundary day survives: drop it instead of
-                # committing an empty partition (an empty parquet dir in the
-                # manifest would fail schema inference on every later read)
-                self.drop_partitions(name, [cutoff_day])
-                self.last_expire_stats["dropped_parts"] = sorted(
-                    expired + [cutoff_day]
+        with self._m.operation():
+            if expired:
+                self.drop_partitions(name, expired)
+            # the boundary day is rewritten only when the cutoff bisects it
+            if cutoff.time() != _dt.time.min and cutoff_day in man:
+                part = self.read_table(name, parts=[cutoff_day])
+                # cast the literal to the bucket's own type (parsed in the
+                # same session tz the string above was rendered in)
+                cut_lit = F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")).cast(
+                    part.schema["bucket"].dataType
                 )
-            else:
+                boundary = part.filter(F.col("bucket") >= cut_lit)
                 self.commit_partitions(name, boundary, [cutoff_day])
-                self.last_expire_stats["rewritten_parts"] = [cutoff_day]
+                # a boundary day none of whose rows survive left the manifest
+                if cutoff_day in self._m.parts(name):
+                    self.last_expire_stats["rewritten_parts"] = [cutoff_day]
+                else:
+                    self.last_expire_stats["dropped_parts"] = sorted(
+                        expired + [cutoff_day]
+                    )
 
     def expire_snapshots(self, keep: int = 2) -> None:
-        """Drop commit dirs no live manifest references (Iceberg
-        expire_snapshots equivalent): for partitioned tables a commit stays
-        live while any of the newest ``keep`` manifests maps a partition to
-        it."""
-        import shutil
-
-        for name, info in self.meta["tables"].items():
-            cur = info["version"]
-            base = os.path.join(self.path, name)
-            if not os.path.isdir(base):
-                continue
-            if "manifests" in info:
-                live_manifests = [
-                    info["manifests"].get(str(v), {})
-                    for v in range(max(1, cur - keep + 1), cur + 1)
-                ]
-                live = {v for m in live_manifests for v in m.values()}
-                live.add(cur)
-            else:
-                live = set(range(max(1, cur - keep + 1), cur + 1))
-            for d in os.listdir(base):
-                if d.startswith("v") and d[1:].isdigit() and int(d[1:]) not in live:
-                    shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-            if "manifests" in info:
-                info["manifests"] = {
-                    k: v for k, v in info["manifests"].items()
-                    if int(k) > cur - keep
-                }
-        self._save_meta()
+        """Keep each table's newest ``keep`` versions and delete the commit
+        dirs none of them references (Iceberg expire_snapshots
+        equivalent)."""
+        self._m.gc(keep)

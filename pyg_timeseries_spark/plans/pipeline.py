@@ -67,10 +67,10 @@ class TimeseriesEngine:
             if cut is not None:
                 src = src.filter(F.col("ts") > F.lit(cut).cast("timestamp"))
         data, state = op_(src, state_df=prior, **op_kwargs)
-        self.store.write_state(op_name, state)
         hi = df.select(F.max("bucket")).first()[0]
+        # the watermark lands in the same manifest swap as the state
         self.store.meta.setdefault("op_watermark", {})[op_name] = str(hi)
-        self.store._save_meta()
+        self.store.write_state(op_name, state)
         return data
 
     # -- compression --------------------------------------------------------

@@ -8,8 +8,9 @@ re-aggregate their open bucket (the reference's same-time-unit replace,
 dropped deterministically.
 
 `foreach_batch_ingest` is the exactly-once sink: each micro-batch flows
-through RollupStore.ingest, which is associative-merge idempotent by bucket,
-so replayed batches converge to the same rollup rows.
+through RollupStore.ingest, and the batch's epoch id lands in the same
+manifest swap as the ingest, so an epoch Spark replays after a crash (its
+ingest committed, its offsets not) is skipped instead of merged twice.
 
 (The sandbox driver contract is batch; this module is exercised by
 tests/test_streaming.py with a file source + memory/foreachBatch sinks.)
@@ -57,14 +58,19 @@ def foreach_batch_ingest(store: RollupStore, ts: str = "ts", v: str = "n_tok",
                          tokens: str | None = None, key: str = "source",
                          sketch_id: str | None = None):
     """foreachBatch callback: route each raw micro-batch through the
-    incremental store (idempotent associative merge per bucket).
+    incremental store, once per (query, epoch).
     ``sketch_id`` forwards the per-cell KMV + bottom-k sketch measures —
     their union-merge is associative, so the streaming tiers carry the
     same sketches a batch ingest would."""
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
+        query = str(batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"))
+        epochs = store.meta.setdefault("stream_epochs", {})
+        if epochs.get(query, -1) >= epoch_id or batch_df.isEmpty():
             return
+        # committed by the ingest's swap; a failed ingest reloads it away
+        epochs[query] = epoch_id
         store.ingest(batch_df, ts=ts, v=v, tokens=tokens, key=key,
                      sketch_id=sketch_id)
 

@@ -21,6 +21,18 @@ def _nodes(spark, ids):
     return spark.createDataFrame(pd.DataFrame({"doc_id": list(ids)}))
 
 
+def _unreferenced(st):
+    """Commit dirs on disk that no retained snapshot of the store's
+    manifest references."""
+    out = []
+    for table, info in st._m.meta["tables"].items():
+        live = {f"v{v}" for snap in info["snapshots"].values()
+                for vs in snap["parts"].values() for v in vs}
+        out += [f"{table}/{d}" for d in os.listdir(os.path.join(st.path, table))
+                if d not in live]
+    return out
+
+
 def _labels(df):
     return sorted((r["node"], r["component"]) for r in
                   df.select("node", "component").collect())
@@ -62,20 +74,15 @@ def test_three_way_merge_and_new_smaller_id(spark, tmp_path):
 
 def test_closed_components_not_rewritten(spark, tmp_path):
     """A batch that touches nothing near a closed component must not
-    rewrite its label partition — the new snapshot hard-links it (same
-    inode), which is the 'closed components are never recomputed' claim
-    made physical."""
+    rewrite its label partition — the new snapshot still references the
+    v1 commit for it, which is the 'closed components are never
+    recomputed' claim made physical."""
     st = ComponentStore(str(tmp_path / "hl"), spark, n_parts=16)
     st.add_batch(_edges(spark, [(1, 2), (50, 51)]))
-    v1_labels = st._vdir(1, "labels")
-    inodes_v1 = {
-        e: os.stat(os.path.join(v1_labels, e)).st_ino
-        for e in os.listdir(v1_labels) if e.startswith("npart=")
-    }
+    v1_parts = st._m.parts("labels")
     # second batch: brand-new family only
     st.add_batch(_edges(spark, [(100, 101)]))
     assert st.version() == 2
-    v2_labels = st._vdir(2, "labels")
     new_parts = {
         r[0] for r in spark.createDataFrame(
             pd.DataFrame({"node": [100, 101]})
@@ -83,41 +90,29 @@ def test_closed_components_not_rewritten(spark, tmp_path):
             F.pmod(F.xxhash64(F.col("node").cast("string")), F.lit(16))
         ).collect()
     }
-    shared = 0
-    for e, ino in inodes_v1.items():
-        pval = int(e.split("=")[1])
-        if pval in new_parts:
-            continue  # may have been rewritten (new node hashed into it)
-        p2 = os.path.join(v2_labels, e)
-        assert os.path.exists(p2)
-        # files inside are hard links of v1's (same inode)
-        f1 = sorted(os.listdir(os.path.join(v1_labels, e)))
-        f2 = sorted(os.listdir(os.path.join(p2)))
-        assert f1 == f2
-        for fn in f1:
-            assert os.stat(os.path.join(v1_labels, e, fn)).st_ino == \
-                os.stat(os.path.join(p2, fn)).st_ino
-            shared += 1
-    assert shared > 0  # at least one partition was reused, not rewritten
+    parts = st._m.parts("labels")
+    untouched = [p for p in v1_parts if int(p) not in new_parts]
+    assert untouched  # at least one partition was reused, not rewritten
+    for p in untouched:
+        assert parts[p] == [1], p
+    for p in new_parts:
+        assert parts[str(p)] == [2], p
 
 
 def test_lookup_is_partition_pruned(spark, tmp_path):
-    """The endpoint label lookup must carry PartitionFilters, and a small
-    batch must touch ≪ P label partitions."""
-    import contextlib
-    import io
+    """The endpoint label lookup must read only the label partitions its
+    node hashes land in, never the whole store."""
+    from urllib.parse import urlparse
 
     st = ComponentStore(str(tmp_path / "pp"), spark, n_parts=64)
     st.add_batch(_edges(spark, [(i, i + 1000) for i in range(100)]))
 
     probe = st.labels(nparts=[3, 7])
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        probe.explain()
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan, plan
-    seg = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "npart" in seg and seg.strip(), plan
+    read_dirs = {os.path.dirname(urlparse(f).path) for f in probe.inputFiles()}
+    v1 = st._m.table_dir("labels", 1)
+    assert read_dirs and read_dirs <= {f"{v1}/npart=3", f"{v1}/npart=7"}
+    got = probe.collect()
+    assert got and all(r["npart"] in (3, 7) for r in got)
 
 
 def test_crash_before_commit_invisible(spark, tmp_path):
@@ -128,7 +123,7 @@ def test_crash_before_commit_invisible(spark, tmp_path):
     st.add_batch(_edges(spark, [(1, 2)]))
     before = _labels(st.labels())
     # simulate a crashed writer: version dir exists, manifest not bumped
-    os.makedirs(st._vdir(2, "labels"), exist_ok=True)
+    os.makedirs(st._m.table_dir("labels", 2), exist_ok=True)
     assert st.version() == 1
     assert _labels(st.labels()) == before
     st.add_batch(_edges(spark, [(2, 3)]))
@@ -158,9 +153,9 @@ def test_gc_keeps_recent_versions(spark, tmp_path):
     st.add_batch(_edges(spark, [(5, 6)]))
     before = _labels(st.labels())
     st.gc(keep=1)
-    assert not os.path.exists(st._vdir(1, "labels"))
-    assert not os.path.exists(st._vdir(2, "labels"))
-    assert _labels(st.labels()) == before  # hardlinked data survives gc
+    assert len(st._m.meta["tables"]["labels"]["snapshots"]) == 1
+    assert _unreferenced(st) == []
+    assert _labels(st.labels()) == before  # referenced commits survive gc
 
 
 def test_random_batches_match_oneshot(spark, tmp_path):
@@ -188,7 +183,30 @@ def test_auto_gc_on_add_batch(spark, tmp_path):
     st.add_batch(_edges(spark, [(5, 6)]))
     st.add_batch(_edges(spark, [(2, 3)]))
     assert st.version() == 4
-    assert not os.path.exists(st._vdir(1, "labels"))
-    assert not os.path.exists(st._vdir(2, "labels"))
-    assert os.path.exists(st._vdir(4, "labels"))
+    assert len(st._m.meta["tables"]["labels"]["snapshots"]) == 2
+    assert _unreferenced(st) == []
+    assert os.path.exists(st._m.table_dir("labels", 4))
     assert dict(_labels(st.labels()))[4] == 1  # 1-2-3-4 merged
+
+
+def test_labels_read_is_one_scan(spark, tmp_path):
+    """Three batches leave the labels spread over three commits; reading
+    them is still ONE parquet relation built with at most one Spark job."""
+    import re
+
+    st = ComponentStore(str(tmp_path / "scan"), spark, n_parts=16)
+    st.add_batch(_edges(spark, [(i, i + 100) for i in range(20)]))
+    st.add_batch(_edges(spark, [(500, 501)]))
+    st.add_batch(_edges(spark, [(700, 701)]))
+    commits = {v for vs in st._m.parts("labels").values() for v in vs}
+    assert commits == {1, 2, 3}
+
+    sc = spark.sparkContext
+    sc.setJobGroup("labels_scan", "labels_scan")
+    df = st.labels()
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("labels_scan"))
+    sc.setJobGroup(None, None)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Relation \[", plan)) == 1, plan
+    assert n_jobs <= 1
+    assert len(_labels(df)) == 44

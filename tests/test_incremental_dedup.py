@@ -87,12 +87,9 @@ def test_kept_helper_and_cross_batch_near(spark, tmp_path):
 
 def test_store_scan_is_partition_pruned(spark, tmp_path):
     """Store ≫ batch at the PRODUCTION default P: the candidate-join store
-    read must carry a partition filter (PartitionFilters on part/epart),
-    not scan the full store — and a small batch must touch ≪ P partitions
-    (the round-4 gap: P=32 meant any batch ≥4 docs touched everything)."""
-    import contextlib
-    import io
-
+    read must list only the batch's part/epart directories, not scan the
+    full store — and a small batch must touch ≪ P partitions (the round-4
+    gap: P=32 meant any batch ≥4 docs touched everything)."""
     import numpy as np
 
     rng = np.random.default_rng(7)
@@ -131,18 +128,21 @@ def test_store_scan_is_partition_pruned(spark, tmp_path):
     eparts = [r[0] for r in d._exact_rows(sig).select("epart").distinct().collect()]
     assert 0 < len(parts) <= d.bands  # a 1-doc batch touches ≤ bands parts
 
-    for df, col, vals in (
-        (d.store_buckets(parts), "part", parts),
-        (d.store_exact(eparts), "epart", eparts),
+    from urllib.parse import urlparse
+
+    for read, table, col, vals in (
+        (d.store_buckets, "buckets", "part", parts),
+        (d.store_exact, "exact", "epart", eparts),
     ):
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain()
-        plan = buf.getvalue()
-        assert "PartitionFilters" in plan, plan
-        # the filter must be non-empty (values pushed into the scan)
-        seg = plan.split("PartitionFilters: [")[1].split("]")[0]
-        assert col in seg and seg.strip(), plan
+        # a read lists only the requested partition directories (the
+        # batch's own, then two populated ones)
+        v1 = d._m.table_dir(table, 1)
+        populated = [int(p) for p in sorted(d._m.parts(table))[:2]]
+        for want in (vals, populated):
+            files = read(want).inputFiles()
+            read_dirs = {os.path.dirname(urlparse(f).path) for f in files}
+            assert read_dirs <= {f"{v1}/{col}={v}" for v in want}
+        assert len(read_dirs) == 2
 
     # and the verdict path still works against the pruned store
     out = d.add_batch(small).toPandas().set_index("doc_id")
@@ -150,55 +150,59 @@ def test_store_scan_is_partition_pruned(spark, tmp_path):
 
 
 def test_uncommitted_batch_invisible(spark, tmp_path):
-    """Crash between the two appends: bucket rows land but the manifest
-    never records the batch — reads must exclude them (the round-4
-    _SUCCESS gate could not detect this half-committed state)."""
+    """Crash between the two appends: bucket rows land in a commit dir
+    but the manifest swap never happens — reads must exclude them."""
     docs = _docs(spark)
     d = IncrementalDeduper(str(tmp_path / "crash"), spark, n_parts=32)
     d.add_batch(docs.filter(F.col("doc_id").isin([0, 1])))
 
-    # simulate the crash: append bucket rows for doc 3 with a token that
-    # is never committed (exact append + manifest record never happen)
+    # simulate the crash: batch 2's bucket commit dir for doc 3 is written,
+    # its exact commit and the manifest swap never happen
     ghost = docs.filter(F.col("doc_id") == 3)
     sig_g = d._signatures(ghost, "doc_id", "text")
-    d._bucket_rows(sig_g).withColumn("batch", F.lit("b_orphan_dead")).\
-        write.mode("append").partitionBy("part").parquet(d._bucket_dir)
+    d._bucket_rows(sig_g).write.partitionBy("part").parquet(
+        d._m.table_dir("buckets", 2))
 
-    assert d.store_buckets().filter(F.col("batch") == "b_orphan_dead").count() == 0
+    assert d.store_buckets().filter(F.col("id") == 3).count() == 0
     # doc 5 is near doc 3 but doc 3's orphan rows must not drop it; doc 5
     # IS near doc 0 (both derive from BASE) so it still drops vs doc 0
     out = d.add_batch(docs.filter(F.col("doc_id") == 5)).toPandas().set_index("doc_id")
     assert out.loc[5, "reason"] == "near"  # via committed doc 0, not the orphan
+    assert d.store_buckets().filter(F.col("id") == 3).count() == 0
 
 
 def test_compact_preserves_store_and_purges_orphans(spark, tmp_path):
     """compact(): per-partition rewrite → 1 file per partition, committed
     rows bit-identical as sets, orphan rows physically gone, manifest
-    reset to one token, and verdicts afterward unchanged."""
+    reset to one commit per partition, and verdicts afterward unchanged."""
     import glob
 
     docs = _docs(spark)
     d = IncrementalDeduper(str(tmp_path / "cmp"), spark, n_parts=32)
     d.add_batch(docs.filter(F.col("doc_id") < 3))
     d.add_batch(docs.filter(F.col("doc_id").isin([3, 4])))
-    # orphan rows from a "crashed" batch
+    # orphan rows from a "crashed" batch: a commit dir never swapped in
     sig_g = d._signatures(docs.filter(F.col("doc_id") == 6), "doc_id", "text")
-    d._exact_rows(sig_g).withColumn("batch", F.lit("b_orphan_dead")).\
-        write.mode("append").partitionBy("epart").parquet(d._exact_dir)
+    d._exact_rows(sig_g).write.partitionBy("epart").parquet(
+        d._m.table_dir("exact", 3))
 
     def snap(df):
-        return sorted(map(tuple, df.drop("batch").collect()))
+        return sorted(map(tuple, df.collect()))
 
     before_b = snap(d.store_buckets())
     before_e = snap(d.store_exact())
     d.compact()
     assert snap(d.store_buckets()) == before_b
     assert snap(d.store_exact()) == before_e
-    assert len(d._committed()) == 1
+    for table in ("buckets", "exact"):
+        assert all(len(vs) == 1 for vs in d._m.parts(table).values())
     # orphans physically purged, and ≤1 parquet file per partition dir
-    raw_e = spark.read.parquet(d._exact_dir)
-    assert raw_e.filter(F.col("batch") == "b_orphan_dead").count() == 0
-    for pdir in glob.glob(str(tmp_path / "cmp" / "*" / "*part=*")):
+    raw_e = spark.read.option("recursiveFileLookup", "true").parquet(
+        str(tmp_path / "cmp" / "exact"))
+    assert raw_e.filter(F.col("id") == 6).count() == 0
+    pdirs = glob.glob(str(tmp_path / "cmp" / "*" / "v*" / "*part=*"))
+    assert pdirs
+    for pdir in pdirs:
         files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
         assert len(files) == 1, pdir
     # verdict behavior unchanged after compaction

@@ -81,8 +81,8 @@ def test_incremental_equals_full(spark, raw, tmp_path):
 def test_ingest_is_o_delta(spark, tmp_path):
     """The scale claim made executable: merging a batch reads only the
     day-partitions the delta touches — never the full rollup history."""
-    import io
-    import contextlib
+    import os
+    from urllib.parse import urlparse
 
     raw = sequences(spark, 20_000, interval_s=60).persist()  # ~7-14 days/source
     cut = F.lit("2024-01-05 12:00:00").cast("timestamp")  # mid-day → day 05 overlaps
@@ -111,24 +111,55 @@ def test_ingest_is_o_delta(spark, tmp_path):
     # …which is a strict subset of history
     assert stats["prev_rows_scanned_1m"] < total_hist
 
-    # and the pruned read pushes the partition filter into the scan
-    pruned = store.read_table("rollup_1m", parts=sorted(touched))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "p_day" in plan
-
     # manifest: untouched days still point at commit 1, touched days at 2
-    man = store.meta["tables"]["rollup_1m"]["manifests"]["2"]
-    assert {man[d] for d in (all_days - touched)} == {1}
-    assert {man[d] for d in touched} == {2}
+    man = store.meta["tables"]["rollup_1m"]["snapshots"]["2"]["parts"]
+    assert {tuple(man[d]) for d in (all_days - touched)} == {(1,)}
+    assert {tuple(man[d]) for d in touched} == {(2,)}
+
+    # and the pruned read lists only the touched partitions' directories
+    pruned = store.read_table("rollup_1m", parts=sorted(touched))
+    touched_dirs = {
+        os.path.join(store._table_dir("rollup_1m", 2), f"p_day={d}") for d in touched
+    }
+    read_dirs = {os.path.dirname(urlparse(f).path) for f in pruned.inputFiles()}
+    assert read_dirs and read_dirs <= touched_dirs
 
     # incremental result equals a from-scratch ingest (tokens included)
     full = RollupStore(str(tmp_path / "odelta_full"), spark).ingest(raw)
     for tier in ("1m", "1h", "1d"):
         assert rows_of(store.read_table(f"rollup_{tier}")) == rows_of(full[tier]), tier
     hist_1m.unpersist()
+    raw.unpersist()
+
+
+def test_read_table_is_one_scan(spark, tmp_path):
+    """Plans do not grow with history: three ingests on three days leave
+    each tier spread over three commits, and reading a tier is still ONE
+    parquet relation whose construction runs at most one Spark job (no
+    schema inference; partition dirs listed from the manifest)."""
+    import re
+
+    raw = sequences(spark, 6_000, interval_s=90).persist()  # > 3 days on web
+    store = RollupStore(str(tmp_path / "scan"), spark)
+    days = [F.lit(d).cast("timestamp") for d in ("2024-01-02", "2024-01-03")]
+    store.ingest(raw.filter(F.col("ts") < days[0]), with_lineage=False)
+    store.ingest(raw.filter((F.col("ts") >= days[0]) & (F.col("ts") < days[1])),
+                 with_lineage=False)
+    store.ingest(raw.filter(F.col("ts") >= days[1]), with_lineage=False)
+    commits = {v for vs in store._m.parts("rollup_1h").values() for v in vs}
+    assert commits == {1, 2, 3}
+
+    sc = spark.sparkContext
+    for name in ("rollup_1m", "rollup_1h", "rollup_1d", "tokens_1m"):
+        sc.setJobGroup(name, name)
+        df = store.read_table(name)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup(name))
+        sc.setJobGroup(None, None)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert len(re.findall(r"Relation \[", plan)) == 1, (name, plan)
+        assert n_jobs <= 1, (name, n_jobs)
+    full = RollupStore(str(tmp_path / "scan_full"), spark).ingest(raw, with_lineage=False)
+    assert rows_of(store.read_table("rollup_1h")) == rows_of(full["1h"])
     raw.unpersist()
 
 
@@ -307,9 +338,9 @@ def test_expire_is_metadata_only(spark, tmp_path):
     assert stats["dropped_parts"] == [d for d in all_days if d < boundary]
     # surviving untouched days still point at their ORIGINAL commit (v1):
     # proof no survivor was scanned or rewritten
-    man = store._manifest("rollup_1m")
+    man = store._m.parts("rollup_1m")
     untouched = set(man) - {boundary}
-    assert untouched and all(man[d] == 1 for d in untouched)
+    assert untouched and all(man[d] == [1] for d in untouched)
     # the view equals a plain bucket filter of the pre-expire table
     cutoff = max_b - dt.timedelta(seconds=(keep - 1) * 60)
     expect = full.filter(F.col("bucket") >= F.lit(cutoff))
@@ -487,7 +518,7 @@ def test_compact_small_files(spark, raw, tmp_path):
     assert frag, "no partitions?"
     assert max(frag.values()) > 1, "fixture failed to fragment"
 
-    man_before = dict(store._manifest("rollup_1m"))
+    man_before = store._m.parts("rollup_1m")
     stats = store.compact("rollup_1m", max_files=1)
     assert stats["compacted_parts"], "nothing compacted"
     # all compacted partitions now one file
@@ -497,7 +528,7 @@ def test_compact_small_files(spark, raw, tmp_path):
     # pure motion: identical rows (incl. the sketch columns)
     assert full_rows(store.read_table("rollup_1m")) == before
     # untouched partitions keep their original version
-    man_after = store._manifest("rollup_1m")
+    man_after = store._m.parts("rollup_1m")
     for p, v in man_before.items():
         if p not in stats["compacted_parts"]:
             assert man_after[p] == v, p

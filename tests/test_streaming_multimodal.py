@@ -67,6 +67,27 @@ def test_stream_foreach_batch_ingest_matches_batch(spark, tmp_path):
     assert got[cols].equals(exp[cols]), "streamed store != batch store"
 
 
+def test_foreach_batch_replayed_epoch_ingested_once(spark, tmp_path):
+    """Exactly-once sink: a micro-batch Spark replays under the same epoch
+    id (its ingest committed, its offsets not) is not merged a second
+    time — also when the replay comes from a store re-opened from disk."""
+    from pyg_timeseries_spark.streaming.stream_rollup import foreach_batch_ingest
+
+    raw = sequences(spark, 2000, with_tokens=False)
+    store = RollupStore(str(tmp_path / "replay"), spark)
+    foreach_batch_ingest(store)(raw, 0)
+    foreach_batch_ingest(store)(raw, 0)
+    reopened = RollupStore(str(tmp_path / "replay"), spark)
+    foreach_batch_ingest(reopened)(raw, 0)
+
+    once = RollupStore(str(tmp_path / "once"), spark)
+    foreach_batch_ingest(once)(raw, 0)
+    for tier in ("rollup_1m", "rollup_1h", "rollup_1d"):
+        got = reopened.read_table(tier).toPandas().sort_values(["source", "bucket"])
+        exp = once.read_table(tier).toPandas().sort_values(["source", "bucket"])
+        assert got.reset_index(drop=True).equals(exp.reset_index(drop=True)), tier
+
+
 def test_stream_ingest_chunked_tokens(spark, tmp_path):
     """foreachBatch ingest in chunked token mode: streamed micro-batches
     build the same bounded chunk table as one batch ingest."""

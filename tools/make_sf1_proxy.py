@@ -56,15 +56,16 @@ def build(outdir: str) -> None:
             parts.append(t)
             continue
         new_text = [rotate_words(x, 7 * r) if x else x for x in texts]
-        parts.append(pa.table({
+        changed = {
             "doc_id": pc.add(t.column("doc_id"), r * n),
             "text": pa.array(new_text, type=t.schema.field("text").type),
-            "lang": t.column("lang"),
-            "source": t.column("source"),
             "n_chars": pa.array([len(x) if x is not None else None
                                  for x in new_text],
                                 type=t.schema.field("n_chars").type),
-        }))
+        }
+        # every source column, in the source order concat_tables needs
+        parts.append(pa.table({c: changed.get(c, t.column(c))
+                               for c in t.schema.names}))
     pq.write_table(pa.concat_tables(parts), os.path.join(outdir, "documents.parquet"))
 
     # embeddings
