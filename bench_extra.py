@@ -11,7 +11,8 @@ Modes:
       the remaining 1% batch vs re-running the full clustering.
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-(default 32), BENCH_EXTRA_REPS (default 3).
+(default: the host's usable cores, as session.get_spark decides),
+BENCH_EXTRA_REPS (default 3).
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, ROOT)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "3"))
 
 
@@ -36,8 +36,7 @@ def run_action(df):
 def _spark():
     from pyg_timeseries_spark.session import get_spark
 
-    return get_spark("bench_extra", master=f"local[{CPUS}]",
-                     shuffle_partitions=CPUS)
+    return get_spark("bench_extra")
 
 
 def time_queries(names):
@@ -56,7 +55,9 @@ def time_queries(names):
             samples.append(round(time.time() - t0, 3))
         out[name] = samples
         spark.sparkContext.setJobDescription(None)
-    print(json.dumps({"sf_dir": SF_DIR, "cpus": CPUS, "queries": out}))
+    print(json.dumps({"sf_dir": SF_DIR,
+                      "cpus": spark.sparkContext.defaultParallelism,
+                      "queries": out}))
 
 
 def cc_incremental():

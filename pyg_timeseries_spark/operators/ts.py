@@ -5,6 +5,22 @@ reference accumulates moment sums Σ1, Σx, Σx², Σx³ into a resumable vector
 (_ts.py:26-37); Spark's partial+final hash aggregation IS that model — the
 map-side partial aggregate is the moment vector, merged associatively across
 partitions.  All formulas come from functions/formulas.py for parity.
+
+Every raw sum comes from one of three builders — each one partial+final
+hash aggregate, one Exchange — and each diagnostic is a closed form over
+the builder's columns (LMFAO's many-aggregates-from-few-sums, PAPERS.md):
+
+* :func:`_power_sums` — Σx⁰..Σxᵖ: ts_agg, ts_std, ts_skew, ts_kurtosis,
+  ts_jarque_bera;
+* :func:`_lag_sums` — n, Σx, Σy, Σx², Σy² and per lag k Σx_t·y_{t−k},
+  Σ_{t>k}x_t, Σ_{t>k}y_{t−k}: ts_cor (lag 0), ts_xcf, and with y = x
+  ts_acf, ts_ar2, ts_ljungbox;
+* :func:`_diff_sums` — count, Σ and Σ² of the q-step differences
+  x_t − x_{t−q}: ts_variance_ratio, ts_hurst.
+
+ts_halflife (it needs Σx²_{t−1} over t ≥ 2, which no family carries) and
+ts_periodogram (cos/sin projections over the observation rank, not lags)
+keep their own sums.
 """
 
 from __future__ import annotations
@@ -16,16 +32,21 @@ from pyg_timeseries_spark.functions.formulas import cor_calc, skew_calc, stdev_c
 from pyg_timeseries_spark.operators._core import KEY, TS, VAL, wspec
 
 
-def _moments(df: DataFrame, key: str, v: str, upto: int = 3) -> DataFrame:
+def _keys(key) -> list[str]:
+    """One key column name or a list of them → the list."""
+    return [key] if isinstance(key, str) else list(key)
+
+
+def _power_sums(df: DataFrame, key, v: str, p: int, *extra) -> DataFrame:
+    """Per-key raw power sums __p0 = count (as double), __p1 = Σx .. __pp =
+    Σxᵖ — the reference's resumable moment vector — plus any ``extra``
+    aggregates, in one partial+final hash aggregate."""
     c = F.col(v)
-    aggs = [
-        F.count(c).cast("double").alias("t0"),
-        F.sum(c).alias("t1"),
-        F.sum(c * c).alias("t2"),
-    ]
-    if upto >= 3:
-        aggs.append(F.sum(c * c * c).alias("t3"))
-    return df.groupBy(key).agg(*aggs)
+    aggs, term = [F.count(c).cast("double").alias("__p0")], c
+    for i in range(1, p + 1):
+        aggs.append(F.sum(term).alias(f"__p{i}"))
+        term = term * c
+    return df.groupBy(*_keys(key)).agg(*aggs, *extra)
 
 
 def ts_count(df: DataFrame, key: str = KEY, v: str = VAL, out: str = "ts_count") -> DataFrame:
@@ -51,18 +72,13 @@ def ts_rms(df: DataFrame, key: str = KEY, v: str = VAL, out: str = "ts_rms") -> 
 
 def ts_std(df: DataFrame, key: str = KEY, v: str = VAL, out: str = "ts_std") -> DataFrame:
     """Unbiased std via stdev_calculation (_math.py:16-21); _ts.py:401-460."""
-    m = _moments(df, key, v, upto=2)
-    return m.select(key, stdev_calc(F.col("t0"), F.col("t1"), F.col("t2")).alias(out))
+    return ts_agg(df, {"std": out}, key, v)
 
 
 def ts_skew(df: DataFrame, key: str = KEY, v: str = VAL, bias: bool = False,
             out: str = "ts_skew") -> DataFrame:
     """Skew via skew_calculation (_math.py:122-135); _ts.py:461-528."""
-    m = _moments(df, key, v, upto=3)
-    return m.select(
-        key,
-        skew_calc(F.col("t0"), F.col("t1"), F.col("t2"), F.col("t3"), bias=bias).alias(out),
-    )
+    return ts_agg(df, {"skew": out}, key, v, bias)
 
 
 def ts_min(df: DataFrame, key: str = KEY, v: str = VAL, out: str = "ts_min") -> DataFrame:
@@ -194,55 +210,34 @@ def ts_agg(
                     ("count", "sum", "mean", "rms", "std", "skew",
                      "min", "max", "median")}
     c = F.col(v)
-    need_t3 = "skew" in measures
-    aggs = [
-        F.count(c).cast("double").alias("_t0"),
-        F.sum(c).alias("_t1"),
-        F.sum(c * c).alias("_t2"),
-    ]
-    if need_t3:
-        aggs.append(F.sum(c * c * c).alias("_t3"))
-    if "min" in measures:
-        aggs.append(F.min(c).alias("_min"))
-    if "max" in measures:
-        aggs.append(F.max(c).alias("_max"))
-    if "median" in measures:
-        aggs.append(F.expr(f"percentile({v}, 0.5)").alias("_med"))
-    m = df.groupBy(key).agg(*aggs)
-    t0, t1, t2 = F.col("_t0"), F.col("_t1"), F.col("_t2")
+    extra = {"min": F.min(c), "max": F.max(c),
+             "median": F.expr(f"percentile({v}, 0.5)")}
+    m = _power_sums(df, key, v, 3 if "skew" in measures else 2,
+                    *[e.alias(f"__{n}") for n, e in extra.items() if n in measures])
+    t0, t1, t2 = (F.col(f"__p{i}") for i in range(3))
+    nonzero = F.when(t0 == 0, F.lit(None)).otherwise(t0)
     exprs = {
         "count": t0.cast("long"),
         "sum": t1,
-        "mean": t1 / F.when(t0 == 0, F.lit(None)).otherwise(t0),
-        "rms": F.sqrt(t2 / F.when(t0 == 0, F.lit(None)).otherwise(t0)),
+        "mean": t1 / nonzero,
+        "rms": F.sqrt(t2 / nonzero),
         "std": stdev_calc(t0, t1, t2),
-        "min": F.col("_min") if "min" in measures else None,
-        "max": F.col("_max") if "max" in measures else None,
-        "median": F.col("_med") if "median" in measures else None,
+        "skew": skew_calc(t0, t1, t2, F.col("__p3"), bias=bias),
+        **{n: F.col(f"__{n}") for n in extra},
     }
-    if need_t3:
-        exprs["skew"] = skew_calc(t0, t1, t2, F.col("_t3"), bias=bias)
-    cols = [F.col(key)] + [
-        exprs[name].alias(out) for name, out in measures.items()
-    ]
-    return m.select(*cols)
+    return m.select(
+        *_keys(key), *[exprs[name].alias(out) for name, out in measures.items()]
+    )
 
 
 def ts_cor(df: DataFrame, a: str, b: str, key: str = KEY, out: str = "ts_cor") -> DataFrame:
     """Full-sample correlation of two columns per key, rows where either is
     NULL skipped (reference _ts.py:281-347, cor_calculation _math.py:69-82)."""
-    ca, cb = F.col(a), F.col(b)
-    both = df.filter(ca.isNotNull() & cb.isNotNull())
-    m = both.groupBy(key).agg(
-        F.count(ca).cast("double").alias("t0"),
-        F.sum(ca).alias("a1"), F.sum(ca * ca).alias("a2"),
-        F.sum(cb).alias("b1"), F.sum(cb * cb).alias("b2"),
-        F.sum(ca * cb).alias("ab"),
-    )
+    m = _lag_sums(df, (0,), a, b, key)
     return m.select(
-        key,
-        cor_calc(F.col("t0"), F.col("a1"), F.col("a2"),
-                 F.col("b1"), F.col("b2"), F.col("ab")).alias(out),
+        *_keys(key),
+        cor_calc(*[F.col(c) for c in ("__n", "__sx", "__sxx", "__sy", "__syy",
+                                      "__xy0")]).alias(out),
     )
 
 
@@ -294,29 +289,65 @@ def ts_argmin(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL,
     )
 
 
-def _acf_sums(df: DataFrame, lags, key, ts, v) -> DataFrame:
-    """Per-key raw sums behind the sample ACF at ``lags``: __n, __s, __s2
-    and, per lag k, __xy{k} = sum(x_t x_{t-k}), __sx{k} = sum_{t>k} x_t,
-    __sy{k} = sum_{t>k} x_{t-k} — one Window pass builds every lag column
-    and one partial+final hash aggregate reduces (one Exchange)."""
-    c = F.col(v)
+def _lag_sums(df: DataFrame, lags, x: str, y: str, key, ts: str = TS) -> DataFrame:
+    """Per-key raw sums behind every lagged cross- and auto-correlation over
+    the jointly valid series (both columns non-NULL): __n, __sx, __sy,
+    __sxx, __syy and, per lag k, __xy{k} = Σ x_t y_{t−k}, __cx{k} =
+    Σ_{t>k} x_t, __cy{k} = Σ_{t>k} y_{t−k}.  One Window pass builds every
+    y-lag column (none for lag 0) and one partial+final hash aggregate
+    reduces — one Exchange however many lags.  With y = x Catalyst merges
+    the duplicate Σx / Σx² aggregates, so the autocorrelation pays no
+    extra sums."""
+    keys, cx, cy = _keys(key), F.col(x), F.col(y)
     w = wspec(key, ts)
-    valid = df.filter(c.isNotNull()).select(
-        key, v, *[F.lag(c, k).over(w).alias(f"__l{k}") for k in lags]
+    # y = x selects the column once: a repeated attribute would ride the
+    # shuffle twice
+    valid = df.filter(cx.isNotNull() & cy.isNotNull()).select(
+        *keys, *dict.fromkeys((x, y)),
+        *[F.lag(cy, k).over(w).alias(f"__yl{k}") for k in lags if k > 0],
     )
     aggs = [
-        F.count(c).cast("double").alias("__n"),
-        F.sum(c).alias("__s"),
-        F.sum(c * c).alias("__s2"),
+        F.count(cx).cast("double").alias("__n"),
+        F.sum(cx).alias("__sx"), F.sum(cy).alias("__sy"),
+        F.sum(cx * cx).alias("__sxx"), F.sum(cy * cy).alias("__syy"),
     ]
     for k in lags:
-        lk = F.col(f"__l{k}")
+        yl = cy if k == 0 else F.col(f"__yl{k}")
         aggs += [
-            F.sum(c * lk).alias(f"__xy{k}"),
-            F.sum(F.when(lk.isNotNull(), c)).alias(f"__sx{k}"),
-            F.sum(lk).alias(f"__sy{k}"),
+            F.sum(cx * yl).alias(f"__xy{k}"),
+            F.sum(F.when(yl.isNotNull(), cx)).alias(f"__cx{k}"),
+            F.sum(yl).alias(f"__cy{k}"),
         ]
-    return valid.groupBy(key).agg(*aggs)
+    return valid.groupBy(*keys).agg(*aggs)
+
+
+def _cross_terms(lags):
+    """Closed forms over :func:`_lag_sums`: n, the centred sums of squares
+    S_xx = Σ(x − m_x)² and S_yy, and per lag k the centred cross sum
+    Σ_{t>k}(x_t − m_x)(y_{t−k} − m_y), expanded to raw sums as
+    xy_k − m_y·cx_k − m_x·cy_k + (n − k)·m_x·m_y."""
+    n = F.col("__n")
+    mx, my = F.col("__sx") / n, F.col("__sy") / n
+    sxx = F.col("__sxx") - n * mx * mx
+    syy = F.col("__syy") - n * my * my
+    num = {
+        k: F.col(f"__xy{k}") - my * F.col(f"__cx{k}") - mx * F.col(f"__cy{k}")
+        + (n - F.lit(float(k))) * mx * my
+        for k in lags
+    }
+    return n, sxx, syy, num
+
+
+def _autocorr(df: DataFrame, lags, key, ts, v):
+    """:func:`_lag_sums` with y = x, plus n, the denominator S_xx and the
+    sample autocorrelations r_k = num_k / S_xx per positive lag (ordered as
+    ``lags``; the den > 0 guard is the caller's)."""
+    lags = [int(k) for k in lags]
+    if not lags or any(k < 1 for k in lags):
+        raise ValueError("lags must be positive integers")
+    n, den, _, num = _cross_terms(lags)
+    r = {k: num[k] / den for k in lags}
+    return _lag_sums(df, lags, v, v, key, ts), n, den, r
 
 
 def ts_acf(df: DataFrame, lags=(1,), key: str = KEY, ts: str = TS,
@@ -334,23 +365,11 @@ def ts_acf(df: DataFrame, lags=(1,), key: str = KEY, ts: str = TS,
     column, and the groupBy reuses the window's per-key hash
     partitioning — the whole operator is ONE Exchange regardless of how
     many lags are requested."""
-    lags = [int(k) for k in lags]
-    if not lags or any(k < 1 for k in lags):
-        raise ValueError("lags must be positive integers")
-    m = _acf_sums(df, lags, key, ts, v)
-    mean = F.col("__s") / F.col("__n")
-    den = F.col("__s2") - F.col("__n") * mean * mean
-    out = [F.col(key) if isinstance(key, str) else key]
-    for k in lags:
-        num = (
-            F.col(f"__xy{k}")
-            - mean * F.col(f"__sx{k}") - mean * F.col(f"__sy{k}")
-            + (F.col("__n") - F.lit(float(k))) * mean * mean
-        )
-        out.append(
-            F.when(den > 0, num / den).alias(f"{prefix}_{k}")
-        )
-    return m.select(*out)
+    m, _, den, r = _autocorr(df, lags, key, ts, v)
+    return m.select(
+        *_keys(key),
+        *[F.when(den > 0, rk).alias(f"{prefix}_{k}") for k, rk in r.items()],
+    )
 
 
 def ts_ar2(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL) -> DataFrame:
@@ -366,11 +385,38 @@ def ts_ar2(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL) -> DataFra
     phi1 = F.when(det != 0, r1 * (F.lit(1.0) - r2) / det)
     phi2 = F.when(det != 0, (r2 - r1 * r1) / det)
     return a.select(
-        key,
+        *_keys(key),
         phi1.alias("phi1"),
         phi2.alias("phi2"),
         (F.lit(1.0) - phi1 * r1 - phi2 * r2).alias("sigma2_ratio"),
     )
+
+
+def _diff_sums(df: DataFrame, scales, key, ts: str, v: str) -> DataFrame:
+    """Per-key count __n{q}, sum __s{q} and sum of squares __ss{q} of the
+    q-step differences x_t − x_{t−q} over the valid series, for every
+    scale q: one lag Window pass, one partial+final hash aggregate."""
+    c = F.col(v)
+    w = wspec(key, ts)
+    valid = df.filter(c.isNotNull()).select(
+        *_keys(key), *[(c - F.lag(c, q).over(w)).alias(f"__d{q}") for q in scales]
+    )
+    aggs = []
+    for q in scales:
+        dq = F.col(f"__d{q}")
+        aggs += [
+            F.count(dq).cast("double").alias(f"__n{q}"),
+            F.sum(dq).alias(f"__s{q}"),
+            F.sum(dq * dq).alias(f"__ss{q}"),
+        ]
+    return valid.groupBy(*_keys(key)).agg(*aggs)
+
+
+def _diff_var(q: int):
+    """(n, sample variance with the (n−1) denominator) of the q-step
+    differences summed by :func:`_diff_sums`."""
+    n, s = F.col(f"__n{q}"), F.col(f"__s{q}")
+    return n, (F.col(f"__ss{q}") - s * s / n) / (n - 1)
 
 
 def ts_variance_ratio(df: DataFrame, q: int = 5, key: str = KEY,
@@ -386,35 +432,16 @@ def ts_variance_ratio(df: DataFrame, q: int = 5, key: str = KEY,
 
     One Window pass builds both lag columns; one hash aggregate reduces
     — a single Exchange, same shape as :func:`ts_acf`."""
-    from pyg_timeseries_spark.operators._core import wspec
-
     q = int(q)
     if q < 2:
         raise ValueError("q must be >= 2")
-    c = F.col(v)
-    w = wspec(key, ts)
-    d1 = (c - F.lag(c, 1).over(w)).alias("__d1")
-    dq = (c - F.lag(c, q).over(w)).alias("__dq")
-    valid = df.filter(c.isNotNull()).select(key, d1, dq)
-    m = valid.groupBy(key).agg(
-        F.count("__d1").cast("double").alias("__n1"),
-        F.sum("__d1").alias("__s1"),
-        F.sum(F.col("__d1") * F.col("__d1")).alias("__s11"),
-        F.count("__dq").cast("double").alias("__nq"),
-        F.sum("__dq").alias("__sq"),
-        F.sum(F.col("__dq") * F.col("__dq")).alias("__sqq"),
-    )
-    var1 = (F.col("__s11") - F.col("__s1") * F.col("__s1") / F.col("__n1")) / (
-        F.col("__n1") - 1
-    )
-    varq = (F.col("__sqq") - F.col("__sq") * F.col("__sq") / F.col("__nq")) / (
-        F.col("__nq") - 1
-    )
+    m = _diff_sums(df, (1, q), key, ts, v)
+    n1, var1 = _diff_var(1)
+    nq, varq = _diff_var(q)
     return m.select(
-        key,
+        *_keys(key),
         F.when(
-            (F.col("__n1") > 1) & (F.col("__nq") > 1) & (var1 > 0),
-            varq / (F.lit(float(q)) * var1),
+            (n1 > 1) & (nq > 1) & (var1 > 0), varq / (F.lit(float(q)) * var1)
         ).alias(out),
     )
 
@@ -432,12 +459,13 @@ def ts_halflife(df: DataFrame, key: str = KEY, ts: str = TS,
     Shape: one lag Window pass + one partial+final hash aggregate of raw
     sums (the :func:`ts_acf` pattern) — ONE Exchange, no Python."""
     c = F.col(v)
+    keys = _keys(key)
     w = wspec(key, ts)
     lagv = F.lag(c, 1).over(w)
     valid = df.filter(c.isNotNull()).select(
-        key, (c - lagv).alias("__dy"), lagv.alias("__x")
+        *keys, (c - lagv).alias("__dy"), lagv.alias("__x")
     ).filter(F.col("__x").isNotNull())
-    m = valid.groupBy(key).agg(
+    m = valid.groupBy(*keys).agg(
         F.count("__x").cast("double").alias("__n"),
         F.sum("__x").alias("__sx"),
         F.sum(F.col("__x") * F.col("__x")).alias("__sxx"),
@@ -451,7 +479,7 @@ def ts_halflife(df: DataFrame, key: str = KEY, ts: str = TS,
     )
     rho = F.lit(1.0) + b
     return m.select(
-        key,
+        *keys,
         b.alias("mr_beta"),
         F.when(
             (rho > 0) & (rho < 1), -F.log(F.lit(2.0)) / F.log(rho)
@@ -466,22 +494,12 @@ def ts_ljungbox(df: DataFrame, lags=(1, 2, 5), key: str = KEY, ts: str = TS,
     standard whiteness test fed by :func:`ts_acf`'s sample
     autocorrelations, so it inherits the one-Window-pass + one-Exchange
     shape.  Emits Q plus the per-key sample size n."""
-    lags = [int(k) for k in lags]
-    m = _acf_sums(df, lags, key, ts, v)
-    n = F.col("__n")
-    mean = F.col("__s") / n
-    den = F.col("__s2") - n * mean * mean
+    m, n, den, r = _autocorr(df, lags, key, ts, v)
     q = F.lit(0.0)
-    for k in lags:
-        num = (
-            F.col(f"__xy{k}")
-            - mean * F.col(f"__sx{k}") - mean * F.col(f"__sy{k}")
-            + (n - F.lit(float(k))) * mean * mean
-        )
-        rk = num / den
+    for k, rk in r.items():
         q = q + rk * rk / (n - F.lit(float(k)))
     q = F.when(den > 0, n * (n + F.lit(2.0)) * q)
-    return m.select(key, n.cast("long").alias("n"), q.alias(out))
+    return m.select(*_keys(key), n.cast("long").alias("n"), q.alias(out))
 
 
 def ts_hurst(df: DataFrame, scales=(1, 2, 4, 8, 16), key: str = KEY,
@@ -502,20 +520,7 @@ def ts_hurst(df: DataFrame, scales=(1, 2, 4, 8, 16), key: str = KEY,
     scales = [int(q) for q in scales]
     if len(scales) < 2 or any(q < 1 for q in scales):
         raise ValueError("need >= 2 positive scales")
-    c = F.col(v)
-    w = wspec(key, ts)
-    valid = df.filter(c.isNotNull()).select(
-        key, *[(c - F.lag(c, q).over(w)).alias(f"__d{q}") for q in scales]
-    )
-    aggs = []
-    for q in scales:
-        dq = F.col(f"__d{q}")
-        aggs += [
-            F.count(dq).cast("double").alias(f"__n{q}"),
-            F.sum(dq).alias(f"__s{q}"),
-            F.sum(dq * dq).alias(f"__ss{q}"),
-        ]
-    m = valid.groupBy(key).agg(*aggs)
+    m = _diff_sums(df, scales, key, ts, v)
     lnq = {q: math.log(float(q)) for q in scales}
     S = float(len(scales))
     sum_lq = sum(lnq.values())
@@ -523,8 +528,7 @@ def ts_hurst(df: DataFrame, scales=(1, 2, 4, 8, 16), key: str = KEY,
     var_ = {}
     ok = F.lit(True)
     for q in scales:
-        nq = F.col(f"__n{q}")
-        vq = (F.col(f"__ss{q}") - F.col(f"__s{q}") * F.col(f"__s{q}") / nq) / (nq - 1)
+        nq, vq = _diff_var(q)
         var_[q] = vq
         ok = ok & (nq > 1) & (vq > 0)
     # Σ ln q · ln Var(q), folded in scale order (oracle adds in the same
@@ -535,7 +539,7 @@ def ts_hurst(df: DataFrame, scales=(1, 2, 4, 8, 16), key: str = KEY,
         s_xy = s_xy + F.lit(lnq[q]) * F.log(var_[q])
         s_y = s_y + F.log(var_[q])
     slope = (F.lit(S) * s_xy - F.lit(sum_lq) * s_y) / F.lit(S * sum_lq2 - sum_lq * sum_lq)
-    return m.select(key, F.when(ok, slope / 2).alias(out))
+    return m.select(*_keys(key), F.when(ok, slope / 2).alias(out))
 
 
 def ts_entropy(df: DataFrame, bins: int = 10, key: str = KEY, v: str = VAL,
@@ -582,24 +586,10 @@ def ts_entropy(df: DataFrame, bins: int = 10, key: str = KEY, v: str = VAL,
     )
 
 
-def _moments4(df: DataFrame, key: str, v: str) -> DataFrame:
-    """Per-key raw power sums Σ1..Σx⁴ in one partial+final hash aggregate
-    — the 4th-order extension of _moments (the reference's resumable
-    moment vector, _ts.py:26-37)."""
-    c = F.col(v)
-    return df.groupBy(key).agg(
-        F.count(c).cast("double").alias("m0"),
-        F.sum(c).alias("m1"),
-        F.sum(c * c).alias("m2"),
-        F.sum(c * c * c).alias("m3"),
-        F.sum(c * c * c * c).alias("m4"),
-    )
-
-
-def _central_moments(prefix="m"):
-    """Central-moment expressions from raw sums: Σ(x−m)ᵏ expanded via the
-    binomial theorem (k = 2, 3, 4)."""
-    n, s1, s2, s3, s4 = (F.col(f"{prefix}{i}") for i in range(5))
+def _central_moments():
+    """Central-moment expressions from the :func:`_power_sums` columns:
+    Σ(x−m)ᵏ expanded via the binomial theorem (k = 2, 3, 4)."""
+    n, s1, s2, s3, s4 = (F.col(f"__p{i}") for i in range(5))
     mu = s1 / n
     c2 = s2 - n * mu * mu
     c3 = s3 - 3 * mu * s2 + 2 * n * mu * mu * mu
@@ -614,13 +604,13 @@ def ts_kurtosis(df: DataFrame, key: str = KEY, v: str = VAL, bias: bool = True,
     the unbiased G2 correction (the pandas/SciPy ``kurt`` convention):
     G2 = ((n+1)·g2 + 6) · (n−1)/((n−2)(n−3)).  NULL below 4 obs or on a
     degenerate (zero-variance) key.  One hash aggregate."""
-    m = _moments4(df.filter(F.col(v).isNotNull()), key, v)
+    m = _power_sums(df.filter(F.col(v).isNotNull()), key, v, 4)
     n, c2, c3, c4 = _central_moments()
     g2 = n * c4 / (c2 * c2) - F.lit(3.0)
     if not bias:
         g2 = ((n + 1) * g2 + 6) * (n - 1) / ((n - 2) * (n - 3))
     return m.select(
-        key, F.when((n > 3) & (c2 > 0), g2).alias(out)
+        *_keys(key), F.when((n > 3) & (c2 > 0), g2).alias(out)
     )
 
 
@@ -630,7 +620,7 @@ def ts_jarque_bera(df: DataFrame, key: str = KEY, v: str = VAL) -> DataFrame:
     kurtosis g2 (Jarque & Bera 1980) — the standard residual-normality
     screen, χ²(2) under the null.  Shares ts_kurtosis's single
     fourth-moment aggregate; emits (skew_b, kurt_b, jb)."""
-    m = _moments4(df.filter(F.col(v).isNotNull()), key, v)
+    m = _power_sums(df.filter(F.col(v).isNotNull()), key, v, 4)
     n, c2, c3, c4 = _central_moments()
     # biased central-moment forms: m_k = c_k / n, g1 = m3/m2^1.5,
     # g2 = m4/m2² − 3
@@ -640,7 +630,7 @@ def ts_jarque_bera(df: DataFrame, key: str = KEY, v: str = VAL) -> DataFrame:
     jb = n / F.lit(6.0) * (g1 * g1 + g2 * g2 / F.lit(4.0))
     ok = (n > 3) & (c2 > 0)
     return m.select(
-        key,
+        *_keys(key),
         F.when(ok, g1).alias("skew_b"),
         F.when(ok, g2).alias("kurt_b"),
         F.when(ok, jb).alias("jb"),
@@ -670,7 +660,7 @@ def ts_periodogram(df: DataFrame, periods=(4, 8, 16), key: str = KEY,
     if not periods or any(p < 2 for p in periods):
         raise ValueError("periods must be integers >= 2")
     c = F.col(v)
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
     w = wspec(key, ts)
     t = (F.row_number().over(w) - 1).cast("double")
     cols = [*keys, c.alias("__x")]
@@ -715,7 +705,7 @@ def ts_spearman(df: DataFrame, x: str = "x", y: str = "y", key: str = KEY,
     add sorts, never shuffles."""
     cx, cy = F.col(x), F.col(y)
     valid = df.filter(cx.isNotNull() & cy.isNotNull())
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
 
     def frank(col_name):
         wr = Window.partitionBy(*keys).orderBy(col_name)
@@ -760,7 +750,7 @@ def ts_runs(df: DataFrame, key: str = KEY, ts: str = TS,
     partitioning satisfies them: ONE Exchange total."""
     c = F.col(v)
     w = wspec(key, ts)
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
     stepped = (
         df.filter(c.isNotNull())
         .select(*keys, ts, c.alias("__v"),
@@ -807,42 +797,14 @@ def ts_xcf(df: DataFrame, lags=(0, 1), x: str = "x", y: str = "y",
     lags = [int(k) for k in lags]
     if not lags or any(k < 0 for k in lags):
         raise ValueError("lags must be non-negative integers")
-    cx, cy = F.col(x), F.col(y)
-    keys = [key] if isinstance(key, str) else list(key)
-    w = wspec(key, ts)
-    valid = df.filter(cx.isNotNull() & cy.isNotNull()).select(
-        *keys, x, y,
-        *[F.lag(cy, k).over(w).alias(f"__yl{k}") for k in lags if k > 0],
-    )
-    aggs = [
-        F.count(cx).cast("double").alias("__n"),
-        F.sum(cx).alias("__sx"), F.sum(cy).alias("__sy"),
-        F.sum(cx * cx).alias("__sxx"), F.sum(cy * cy).alias("__syy"),
-    ]
-    for k in lags:
-        yl = cy if k == 0 else F.col(f"__yl{k}")
-        aggs += [
-            F.sum(cx * yl).alias(f"__xy{k}"),
-            F.sum(F.when(yl.isNotNull(), cx)).alias(f"__cx{k}"),
-            F.sum(yl).alias(f"__cy{k}"),
-        ]
-    m = valid.groupBy(*keys).agg(*aggs)
-    n = F.col("__n")
-    mx, my = F.col("__sx") / n, F.col("__sy") / n
-    sxx = F.col("__sxx") - n * mx * mx
-    syy = F.col("__syy") - n * my * my
+    m = _lag_sums(df, lags, x, y, key, ts)
+    _, sxx, syy, num = _cross_terms(lags)
     den = F.sqrt(sxx * syy)
-    out = [*keys]
-    for k in lags:
-        num = (
-            F.col(f"__xy{k}")
-            - my * F.col(f"__cx{k}") - mx * F.col(f"__cy{k}")
-            + (n - F.lit(float(k))) * mx * my
-        )
-        out.append(
-            F.when((sxx > 0) & (syy > 0), num / den).alias(f"{prefix}_{k}")
-        )
-    return m.select(*out)
+    return m.select(
+        *_keys(key),
+        *[F.when((sxx > 0) & (syy > 0), num[k] / den).alias(f"{prefix}_{k}")
+          for k in lags],
+    )
 
 
 def ts_hill(df: DataFrame, k: int = 50, key: str = KEY, ts: str = TS,
@@ -861,7 +823,7 @@ def ts_hill(df: DataFrame, k: int = 50, key: str = KEY, ts: str = TS,
     if k < 1:
         raise ValueError("k must be >= 1")
     c = F.col(v)
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
     w = Window.partitionBy(*keys).orderBy(F.col(v).desc(), F.col(ts).asc())
     top = (
         df.filter(c.isNotNull() & (c > 0))
@@ -896,7 +858,7 @@ def quantile_bucket(df: DataFrame, n_buckets: int = 10, key: str = KEY,
     if n_buckets < 1:
         raise ValueError("n_buckets must be >= 1")
     c = F.col(v)
-    keys = [key] if isinstance(key, str) else list(key)
+    keys = _keys(key)
     w = Window.partitionBy(*keys).orderBy(F.col(v).asc(), F.col(ts).asc())
     valid = df.filter(c.isNotNull()).withColumn(
         out, F.ntile(n_buckets).over(w)

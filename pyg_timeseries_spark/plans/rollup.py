@@ -157,6 +157,53 @@ def bucket_col(ts_col: str, tier: str, df: DataFrame | None = None) -> F.Column:
     return F.date_trunc(unit, F.col(ts_col))
 
 
+# how each measure re-aggregates from finer rows: the one merge algebra
+# behind the cascade and the incremental refresh
+_MERGE = (
+    ("cnt", F.sum), ("sum_n_tok", F.sum), ("sum2_n_tok", F.sum),
+    ("sum3_n_tok", F.sum), ("min_n_tok", F.min), ("max_n_tok", F.max),
+    ("first_ts", F.min), ("last_ts", F.max),
+)
+
+
+def _raw_measures(ts: str, v: str) -> list:
+    """The ROLLUP_COLS measures of one cell, from raw rows (batch and
+    streaming 1m aggregates alike)."""
+    c = F.col(v).cast("long")
+    return [
+        F.count(c).alias("cnt"),
+        F.sum(c).alias("sum_n_tok"),
+        F.sum(c * c).alias("sum2_n_tok"),
+        F.sum(c * c * c).alias("sum3_n_tok"),
+        F.min(c).alias("min_n_tok"),
+        F.max(c).alias("max_n_tok"),
+        F.min(ts).alias("first_ts"),
+        F.max(ts).alias("last_ts"),
+    ]
+
+
+def _ordered_concat(tokens: str, *order) -> F.Column:
+    """Concatenate the group's ``tokens`` arrays ascending by the ``order``
+    columns (ties fall to the arrays themselves).  collect_list alone has
+    no order guarantee across shuffles, so the (order…, tokens) structs
+    are sorted inside the aggregate."""
+    return F.flatten(F.transform(
+        F.array_sort(F.collect_list(F.struct(*order, F.col(tokens)))),
+        lambda s: s.getField(tokens),
+    ))
+
+
+def _merge_measures(df: DataFrame, with_tokens: bool, order: str, k: int) -> list:
+    """Re-aggregate rollup rows: _MERGE, tokens concatenated by ``order``
+    when asked for and present, and sketches merged when present."""
+    aggs = [fn(name).alias(name) for name, fn in _MERGE]
+    if with_tokens and "tokens" in df.columns:
+        aggs.append(_ordered_concat("tokens", order).alias("tokens"))
+    if "kmv" in df.columns:
+        aggs.extend(_sketch_merge_aggs(k))
+    return aggs
+
+
 def rollup_from_raw(
     df: DataFrame,
     tier: str = "1m",
@@ -174,27 +221,10 @@ def rollup_from_raw(
     additionally carries a KMV distinct-count sketch of the ids and a
     bottom-k (id, v) sample for mergeable quantiles — both cascade exactly.
     """
-    c = F.col(v).cast("long")
-    aggs = [
-        F.count(c).alias("cnt"),
-        F.sum(c).alias("sum_n_tok"),
-        F.sum(c * c).alias("sum2_n_tok"),
-        F.sum(c * c * c).alias("sum3_n_tok"),
-        F.min(c).alias("min_n_tok"),
-        F.max(c).alias("max_n_tok"),
-        F.min(ts).alias("first_ts"),
-        F.max(ts).alias("last_ts"),
-    ]
+    aggs = _raw_measures(ts, v)
     if tokens:
         # deterministic in-bucket order: sort (ts, tokens) structs, then concat
-        aggs.append(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col(ts), F.col(tokens)))),
-                    lambda s: s.getField(tokens),
-                )
-            ).alias("tokens")
-        )
+        aggs.append(_ordered_concat(tokens, F.col(ts)).alias("tokens"))
     base = (
         df.groupBy(
             F.col(key).alias("source"), bucket_col(ts, tier, df).alias("bucket")
@@ -227,30 +257,9 @@ def rollup_cascade(
     measures are associative (integer sums / min / max / ordered concat;
     sketch columns, when present, merge by union-k-smallest which is also
     exact)."""
-    aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_n_tok").alias("sum_n_tok"),
-        F.sum("sum2_n_tok").alias("sum2_n_tok"),
-        F.sum("sum3_n_tok").alias("sum3_n_tok"),
-        F.min("min_n_tok").alias("min_n_tok"),
-        F.max("max_n_tok").alias("max_n_tok"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-    ]
-    if with_tokens and "tokens" in child.columns:
-        aggs.append(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("bucket", "tokens"))),
-                    lambda s: s.getField("tokens"),
-                )
-            ).alias("tokens")
-        )
-    if "kmv" in child.columns:
-        aggs.extend(_sketch_merge_aggs(sketch_k))
     return (
         child.groupBy("source", bucket_col("bucket", tier, child).alias("bucket"))
-        .agg(*aggs)
+        .agg(*_merge_measures(child, with_tokens, "bucket", sketch_k))
     )
 
 
@@ -308,14 +317,7 @@ def token_chunk_rows(
         df.groupBy(
             F.col(key).alias("source"), bucket_col(ts, "1m", df).alias("bucket")
         )
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct(F.col(ts), F.col(tokens)))),
-                    lambda s: s.getField(tokens),
-                )
-            ).alias("_flat")
-        )
+        .agg(_ordered_concat(tokens, F.col(ts)).alias("_flat"))
     )
     return flat.select(
         "source", "bucket",
@@ -334,12 +336,7 @@ def merge_token_chunks(
         delta.withColumn("_d", F.lit(1))
     )
     flat = tagged.groupBy("source", "bucket").agg(
-        F.flatten(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_d", "part", "tokens"))),
-                lambda s: s.getField("tokens"),
-            )
-        ).alias("_flat")
+        _ordered_concat("tokens", "_d", "part").alias("_flat")
     )
     return flat.select(
         "source", "bucket",
@@ -351,37 +348,11 @@ def tokens_at_tier(chunks: DataFrame, tier: str) -> DataFrame:
     """Flatten 1m chunk rows to (source, bucket, tokens) at any tier — the
     read-time view.  The output row for a hot (source, day) is inherently
     big (it IS the payload); the STORED representation stays bounded."""
-    if tier == "1m":
-        grp = chunks
-    else:
-        grp = chunks.withColumn(
-            "_tb", bucket_col("bucket", tier, chunks)
-        ).select("source", F.col("_tb").alias("_nb"),
-                 F.col("bucket").alias("_ob"), "part", "tokens")
-        grp = grp.select("source", F.col("_nb").alias("bucket"),
-                         F.struct(F.col("_ob"), F.col("part")).alias("_ord"),
-                         "tokens")
-        return (
-            grp.groupBy("source", "bucket")
-            .agg(
-                F.flatten(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("_ord", "tokens"))),
-                        lambda s: s.getField("tokens"),
-                    )
-                ).alias("tokens")
-            )
-        )
-    return (
-        grp.groupBy("source", "bucket")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("part", "tokens"))),
-                    lambda s: s.getField("tokens"),
-                )
-            ).alias("tokens")
-        )
+    # chunk buckets already are minutes: grouping 1m on the column itself
+    # keeps a (source, bucket) partitioning the chunks may carry
+    b = F.col("bucket") if tier == "1m" else bucket_col("bucket", tier, chunks)
+    return chunks.groupBy("source", b.alias("bucket")).agg(
+        _ordered_concat("tokens", "bucket", "part").alias("tokens")
     )
 
 
@@ -395,28 +366,9 @@ def merge_rollup(existing: DataFrame, delta: DataFrame, with_tokens: bool = True
     rows arrive time-ordered per source (the engine's append contract).
     """
     both = existing.unionByName(delta, allowMissingColumns=True)
-    aggs = [
-        F.sum("cnt").alias("cnt"),
-        F.sum("sum_n_tok").alias("sum_n_tok"),
-        F.sum("sum2_n_tok").alias("sum2_n_tok"),
-        F.sum("sum3_n_tok").alias("sum3_n_tok"),
-        F.min("min_n_tok").alias("min_n_tok"),
-        F.max("max_n_tok").alias("max_n_tok"),
-        F.min("first_ts").alias("first_ts"),
-        F.max("last_ts").alias("last_ts"),
-    ]
-    if with_tokens and "tokens" in both.columns:
-        aggs.append(
-            F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("first_ts", "tokens"))),
-                    lambda s: s.getField("tokens"),
-                )
-            ).alias("tokens")
-        )
-    if "kmv" in both.columns:
-        aggs.extend(_sketch_merge_aggs(SKETCH_K))
-    return both.groupBy("source", "bucket").agg(*aggs)
+    return both.groupBy("source", "bucket").agg(
+        *_merge_measures(both, with_tokens, "first_ts", SKETCH_K)
+    )
 
 
 def rollup_grouping_sets(

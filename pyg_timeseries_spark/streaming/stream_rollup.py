@@ -1,11 +1,11 @@
 """Structured Streaming front-end for the rollup engine.
 
 Batch and streaming share one aggregation definition: `stream_rollup_1m`
-applies the same (source, 1-minute window) aggregate as plans/rollup.py but
-over a streaming DataFrame with a watermark — late rows inside the watermark
-re-aggregate their open bucket (the reference's same-time-unit replace,
-`_ewm.py:41-44`, at bucket granularity); rows later than the watermark are
-dropped deterministically.
+applies the same (source, 1-minute window) measures as plans/rollup.py
+(`_raw_measures`) but over a streaming DataFrame with a watermark — late
+rows inside the watermark re-aggregate their open bucket (the reference's
+same-time-unit replace, `_ewm.py:41-44`, at bucket granularity); rows
+later than the watermark are dropped deterministically.
 
 `foreach_batch_ingest` is the exactly-once sink: each micro-batch flows
 through RollupStore.ingest, and the batch's epoch id lands in the same
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pyg_timeseries_spark.plans.checkpoint import RollupStore
+from pyg_timeseries_spark.plans.rollup import ROLLUP_COLS, _raw_measures
 
 
 def stream_rollup_1m(
@@ -32,25 +33,11 @@ def stream_rollup_1m(
     watermark: str = "2 minutes",
 ) -> DataFrame:
     """Continuous 1m aggregate with late-data tolerance of ``watermark``."""
-    c = F.col(v).cast("long")
     return (
         stream_df.withWatermark(ts, watermark)
         .groupBy(F.col(key).alias("source"), F.window(ts, "1 minute").alias("w"))
-        .agg(
-            F.count(c).alias("cnt"),
-            F.sum(c).alias("sum_n_tok"),
-            F.sum(c * c).alias("sum2_n_tok"),
-            F.sum(c * c * c).alias("sum3_n_tok"),
-            F.min(c).alias("min_n_tok"),
-            F.max(c).alias("max_n_tok"),
-            F.min(ts).alias("first_ts"),
-            F.max(ts).alias("last_ts"),
-        )
-        .select(
-            "source", F.col("w.start").alias("bucket"), "cnt", "sum_n_tok",
-            "sum2_n_tok", "sum3_n_tok", "min_n_tok", "max_n_tok",
-            "first_ts", "last_ts",
-        )
+        .agg(*_raw_measures(ts, v))
+        .select("source", F.col("w.start").alias("bucket"), *ROLLUP_COLS[2:])
     )
 
 

@@ -374,12 +374,14 @@ def test_ts_acf_matches_numpy(spark):
 
 
 def test_ts_acf_validation(spark):
-    from pyg_timeseries_spark.operators.ts import ts_acf
+    from pyg_timeseries_spark.operators.ts import ts_acf, ts_ljungbox
 
-    with pytest.raises(ValueError):
-        ts_acf(_series(spark, [1.0, 2.0]), lags=(0,))
-    with pytest.raises(ValueError):
-        ts_acf(_series(spark, [1.0, 2.0]), lags=())
+    # ts_ljungbox shares ts_acf's r_k: no lags or lag 0 (r_0 = 1) is an error
+    for op in (ts_acf, ts_ljungbox):
+        with pytest.raises(ValueError):
+            op(_series(spark, [1.0, 2.0]), lags=(0,))
+        with pytest.raises(ValueError):
+            op(_series(spark, [1.0, 2.0]), lags=())
 
 
 def test_ts_ar2_recovers_ar2_coefficients(spark):

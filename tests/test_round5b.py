@@ -212,6 +212,46 @@ def test_ts_hurst_discriminates(spark):
     assert got["mr"] < 0.2 < got["walk"] < got["smooth"]
 
 
+def _hurst_numpy(x, scales):
+    """Half the OLS slope of ln Var(x_t − x_{t−q}) on ln q; None when a
+    scale has < 2 differences or a non-positive variance."""
+    ln_q, ln_v = [], []
+    for q in scales:
+        d = x[q:] - x[:-q]
+        if len(d) < 2 or d.var(ddof=1) <= 0:
+            return None
+        ln_q.append(math.log(q))
+        ln_v.append(math.log(d.var(ddof=1)))
+    return np.polyfit(ln_q, ln_v, 1)[0] / 2
+
+
+def test_ts_hurst_matches_numpy(spark):
+    """Values of the variance-time slope over the valid series (NULL rows
+    skipped, differences taken over the valid sequence); a constant key
+    (zero variance) and a key shorter than the largest scale give NULL."""
+    from pyg_timeseries_spark.operators.ts import ts_hurst
+
+    rng = np.random.default_rng(11)
+    walk = np.cumsum(rng.normal(0, 1, 400))
+    walk[rng.random(400) < 0.15] = np.nan
+    noise = rng.normal(0, 1, 300)
+    noise[rng.random(300) < 0.15] = np.nan
+    series = {"walk": walk, "noise": noise, "const": np.full(50, 3.0),
+              "short": rng.normal(0, 1, 12)}
+    pdf = pd.concat(
+        pd.DataFrame({"key": k, "v": x,
+                      "ts": pd.date_range("2024-01-01", periods=len(x), freq="1min")})
+        for k, x in series.items()
+    )
+    df = spark.createDataFrame(pdf).withColumn(
+        "v", F.when(F.isnan("v"), F.lit(None)).otherwise(F.col("v")))
+    got = ts_hurst(df).toPandas().set_index("key")["hurst"]
+    for k in ("walk", "noise"):
+        x = series[k][~np.isnan(series[k])]
+        assert got[k] == pytest.approx(_hurst_numpy(x, (1, 2, 4, 8, 16)), rel=1e-9)
+    assert pd.isna(got["const"]) and pd.isna(got["short"])
+
+
 def test_rolling_rsi_bounds_and_known_values(spark):
     from pyg_timeseries_spark.operators.rolling import rolling_rsi
 

@@ -694,14 +694,30 @@ def test_token_diversity_null_ids_skipped(spark):
     assert abs(out[2]["top_share"] - 2 / 3) < 1e-12
 
 
-def test_ts_ops_multi_key(spark, series_df):
-    """ts_periodogram / ts_xcf accept a key LIST like their siblings."""
-    from pyg_timeseries_spark.operators.ts import ts_periodogram, ts_xcf
+_MULTI_KEY_OPS = {
+    "ts_agg": {}, "ts_std": {}, "ts_skew": {}, "ts_kurtosis": {},
+    "ts_jarque_bera": {}, "ts_cor": {"a": "x", "b": "y"},
+    "ts_xcf": {"lags": (0, 1)}, "ts_acf": {"lags": (1, 2)}, "ts_ar2": {},
+    "ts_ljungbox": {}, "ts_variance_ratio": {}, "ts_hurst": {},
+    "ts_halflife": {}, "ts_periodogram": {"periods": (4,)},
+}
 
-    df2 = series_df.withColumn("k2", F.lit("a"))
-    a = ts_periodogram(df2, periods=(4,), key=["key", "k2"])
-    assert set(a.columns) == {"key", "k2", "pgram_4"} and a.count() > 0
-    pair = df2.select("key", "k2", "ts", F.col("v").alias("x"),
-                      (F.col("v") * 2).alias("y"))
-    b = ts_xcf(pair, lags=(0,), key=["key", "k2"])
-    assert set(b.columns) == {"key", "k2", "xcf_0"} and b.count() > 0
+
+@pytest.mark.parametrize("op", list(_MULTI_KEY_OPS))
+def test_ts_ops_multi_key(spark, series_df, op):
+    """Every ts_* built on the shared sum builders (plus ts_halflife and
+    ts_periodogram) accepts a key LIST: grouping by (key, constant k2)
+    gives the single-key result plus the constant k2 column."""
+    from pyg_timeseries_spark.operators import ts as TS
+
+    df = series_df.select("key", "ts", "v", F.col("v").alias("x"),
+                          (F.col("v") * 2 + F.minute("ts")).alias("y"))
+    fn, kw = getattr(TS, op), _MULTI_KEY_OPS[op]
+    single = fn(df, key="key", **kw).toPandas().assign(k2="a")
+    multi = fn(df.withColumn("k2", F.lit("a")), key=["key", "k2"], **kw).toPandas()
+    assert list(multi.columns[:2]) == ["key", "k2"] and len(multi) == 3
+    pd.testing.assert_frame_equal(
+        multi.sort_values("key").reset_index(drop=True),
+        single[multi.columns].sort_values("key").reset_index(drop=True),
+        check_exact=False, rtol=1e-12,
+    )
