@@ -1563,10 +1563,10 @@ def q_interval_join(spark, sf_dir):
 
 
 def q_ingest_lineage(spark, sf_dir):
-    """Per-partition lineage metrics through the store's ingest path
-    (plans/checkpoint.py record_lineage — the north rule's "per-partition
-    lineage + row-count metrics"): two time-ordered batches ingest with
-    lineage on; the per-(batch, stage) row totals must replay from the
+    """Lineage metrics through the store's ingest path (plans/checkpoint.py
+    record_lineage — the north rule's "per-partition lineage + row-count
+    metrics", one record per committed day-partition): two time-ordered
+    batches ingest with lineage on; the per-(batch, stage) row totals must replay from the
     events table — raw = batch rows, commit_tier = the tier cells of the
     batch's delta-touched day-partitions (disjoint day halves here, so
     each commit covers exactly its half's cells)."""

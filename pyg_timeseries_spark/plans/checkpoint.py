@@ -10,38 +10,46 @@ SURVEY.md §7.0).
 Storage is a manifest-versioned parquet layout — the Iceberg contract in
 miniature, through the one commit primitive of plans/manifest.py:
 immutable commit directories, one atomic manifest swap per store operation
-(``ingest`` commits every tier, the retained raw, the lineage and the batch
-counter together), and a per-partition manifest so a commit rewrites ONLY
-the day-partitions its delta touches.  Time-travel = read an older
-manifest.  When Iceberg jars are on the classpath the same operations map
-to ``writeTo(...).append()`` / ``MERGE INTO`` — gated behind an import-try
-in sources/tables.py; the sandbox image has no Iceberg runtime, so the
-parquet backend is the tested path.
+(``ingest`` commits every tier, the retained raw, the lineage records and
+the batch counter together), and a per-partition manifest so a commit
+rewrites ONLY the day-partitions its delta touches.  Time-travel = read an
+older manifest.  With Iceberg jars the same operations map to
+``writeTo(...).append()`` / ``MERGE INTO`` (gated in sources/tables.py).
 
 O(delta) ingest (the engine's core scale claim — at 10^12 sequences the
 rollup history is petabytes; re-aggregating it per batch is the scale-killer):
 
-* the existing tier is READ only for the day-partitions the delta touches
-  (the manifest lists only their directories — cold history is never
-  scanned);
-* only (source, bucket) cells present in the delta are re-aggregated; other
-  rows in the touched partitions are carried through untouched;
-* coarser tiers are recomputed from the merged child tier restricted to the
-  affected parent cells — exact regardless of arrival order, because a parent
-  cell is always rebuilt from ALL of its child rows (never merged
-  incrementally), and O(delta) because a parent cell has a bounded child
-  fan-in (60 or 24 rows per source);
-* the commit writes only the touched partitions into a new immutable
-  directory and flips their manifest entries.
+* one collect over the delta names what it touches — its
+  day-partitions, 1h and 1d cells and each source's lowest 1m bucket, as
+  text on the bucket's own clock — applied back as literal filters (an
+  InSet of (source, bucket) structs, a per-source lower bound);
+* the existing tier is READ only for the touched day-partitions (the
+  manifest lists only their directories — cold history is never scanned);
+* 1m is ONE merge aggregate over prev(touched) ∪ delta: a one-row cell
+  passes through bit-for-bit, a cell in both merges by the associative
+  algebra (under ``exact_rebuild``: is recomputed from retained raw);
+  token chunks below a source's lowest delta bucket skip the shuffle, the
+  rest re-chunk in the one aggregate that chunks the batch's raw rows;
+* coarser tiers recompute the affected cells from the child's new commit
+  (1h from 1m, 1d from 1h: a scan of the files just written costs no job,
+  a persisted frame one more) and keep the other rows of the touched
+  partitions — exact under any arrival order, because a parent cell is
+  always rebuilt from ALL of its child rows, and O(delta) because a parent
+  cell has a bounded child fan-in (60 or 24 rows per source);
+* lineage runs no Spark job: raw rows come from an Observation on the
+  batch, commit rows per day-partition from the new files' parquet
+  footers, and the records land in the store metadata with the swap.
 
 Layout::
 
     store/
       manifest.json                # {table: {version, snapshots: {N:
-                                   #   {parts: {p_day: [commit]}, schema}}}}
+                                   #   {parts: {p_day: [commit]}, schema}}},
+                                   #  batches, raw_complete, lineage: [...]}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
+      tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows (chunked mode)
+      raw/v{N}/*.parquet           # retained raw batches (exact_rebuild)
       state_{op}/v{N}/*.parquet    # operator state rows (key, state[])
-      lineage/v{N}/*.parquet       # per-stage per-partition row counts
 """
 
 from __future__ import annotations
@@ -49,17 +57,19 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from pyg_timeseries_spark.plans.manifest import Manifest
 from pyg_timeseries_spark.plans.rollup import (
-    MAX_TOKENS_PER_ROW, bucket_col, merge_rollup, merge_token_chunks,
-    rollup_cascade, rollup_from_raw, token_chunk_rows, tokens_at_tier,
+    MAX_TOKENS_PER_ROW, bucket_col, merge_rollup, rollup_cascade,
+    rollup_from_raw, token_chunk_rows, tokens_at_tier,
 )
 
 PART_COL = "p_day"
 _CELL = ["source", "bucket"]
+_LINEAGE = "batch_id int, stage string, p_day string, rows long, wall_ts double"
 
 
 def _with_pday(df: DataFrame) -> DataFrame:
@@ -67,6 +77,50 @@ def _with_pday(df: DataFrame) -> DataFrame:
     to_date on the already-truncated bucket) so NTZ buckets never route
     through the session timezone."""
     return df.withColumn(PART_COL, F.to_date("bucket").cast("string"))
+
+
+def _clock_text(c: Column, dtype) -> Column:
+    """A bucket as text on its own clock, read back exactly by a cast to
+    ``dtype``: TIMESTAMP in the session timezone with its offset (a
+    repeated DST hour stays two values), NTZ as wall time."""
+    tz = isinstance(dtype, TimestampType)
+    return F.date_format(c, "yyyy-MM-dd HH:mm:ssXXX") if tz else c.cast("string")
+
+
+def _delta_cells(delta: DataFrame) -> list:
+    """The batch's one collect: per source its lowest 1m bucket
+    (``lo``), its 1h and 1d cells and its day-partitions, all as text."""
+    dt = delta.schema["bucket"].dataType
+    return delta.groupBy("source").agg(
+        _clock_text(F.min("bucket"), dt).alias("lo"),
+        *(F.collect_set(_clock_text(bucket_col("bucket", t, delta), dt)).alias(t)
+          for t in ("1h", "1d")),
+        F.collect_set(F.to_date("bucket").cast("string")).alias("days"),
+    ).collect()
+
+
+def _sql_lit(v, t) -> str:
+    """``v`` as a SQL literal of type ``t``; text travels hex-encoded, so
+    nothing needs quoting.  Literals go to Spark as one SQL expression: a
+    py4j call per literal costs about a second per hundred cells."""
+    x = f"CAST(X'{str(v).encode().hex()}' AS STRING)" if v is not None else "NULL"
+    return f"CAST({x} AS {t.simpleString()})"
+
+
+def _in_cells(cells: list, bucket: str, key_t, bucket_t) -> Column:
+    """(source, column ``bucket``) is one of the ``cells`` text pairs — an
+    InSet of struct literals."""
+    return F.expr(f"named_struct('s', source, 'b', `{bucket}`) IN (" + ", ".join(
+        f"named_struct('s', {_sql_lit(s, key_t)}, 'b', {_sql_lit(b, bucket_t)})"
+        for s, b in cells) + ")")
+
+
+def _lower_bound(lo: dict, key_t, bucket_t) -> Column:
+    """Each row's source's lowest delta bucket (``lo`` text by source);
+    NULL for a source the delta does not touch."""
+    return F.expr("CASE " + " ".join(
+        f"WHEN source <=> {_sql_lit(s, key_t)} THEN {_sql_lit(b, bucket_t)}"
+        for s, b in lo.items()) + " END")
 
 
 class RollupStore:
@@ -118,20 +172,18 @@ class RollupStore:
         return self._m.read(name, version, parts)
 
     # -- lineage ------------------------------------------------------------
-    def record_lineage(self, batch_id: int, stage: str, df: DataFrame) -> None:
-        """Per-partition row counts for the stage input — every stage emits
-        lineage (north_rule).  One tiny append commit per stage."""
-        counts = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumn("batch_id", F.lit(batch_id))
-            .withColumn("stage", F.lit(stage))
-            .withColumn("wall_ts", F.lit(time.time()))
-        )
-        self._m.commit("lineage", counts, append=True)
+    def record_lineage(self, batch_id: int, stage: str, rows: dict) -> None:
+        """Row counts of one ingest stage, one record per committed
+        day-partition (``rows``: {p_day: rows}; the raw input is keyed
+        None) — every stage emits lineage (north_rule).  The records land
+        in the store metadata with the operation's swap: no Spark job."""
+        now = time.time()
+        self.meta.setdefault("lineage", []).extend(
+            [batch_id, stage, p, n, now] for p, n in rows.items())
 
-    def lineage(self) -> DataFrame | None:
-        return self.read_table("lineage")
+    def lineage(self) -> DataFrame:
+        """The lineage records as a local frame (no Spark job to build)."""
+        return self.spark.createDataFrame(self.meta.get("lineage", []), _LINEAGE)
 
     # -- the incremental driver --------------------------------------------
     def ingest(
@@ -158,12 +210,12 @@ class RollupStore:
         row-for-row including token arrays.
 
         Cost argument (O(delta), not O(history)): only delta-touched
-        day-partitions are read (manifest pruning), only delta-touched cells
-        are re-aggregated, only touched partitions are rewritten.
+        day-partitions are read (manifest pruning) and rewritten, and each
+        table's commit is one query; lineage adds no Spark job.
 
         ``with_scan_stats`` records prev_rows_scanned_* in
         last_ingest_stats (diagnostic count actions over the pruned prev
-        scans; off by default so a batch runs one job per committed table).
+        scans, so off by default).
 
         ``exact_rebuild`` lifts the append contract entirely: raw batches are
         retained in the store and any 1m cell touched by BOTH history and
@@ -185,180 +237,134 @@ class RollupStore:
         the tier rows — concatenated per bucket, so a hot (source, day) at
         the 1d tier becomes ONE unbounded row; use only at small scale.
         """
-        # every table this batch changes, and the batch counter, land in
-        # one manifest swap: a crash at any step leaves the store as it was
+        # every table this batch changes, the lineage and the batch counter
+        # land in one manifest swap: a crash at any step leaves the store as is
         with self._m.operation():
             batch_id = self.meta["batches"] + 1
-            if with_lineage:
-                self.record_lineage(batch_id, "raw", raw)
             complete = self.meta.get("raw_complete")
-            self.meta["raw_complete"] = exact_rebuild if complete is None else (
-                complete and exact_rebuild
-            )
+            self.meta["raw_complete"] = exact_rebuild and complete is not False
             if exact_rebuild:
                 self._m.commit("raw", raw, append=True)
 
             chunked = tokens is not None and token_mode == "chunked"
             tier_tokens = None if chunked else tokens
-            delta = rollup_from_raw(raw, "1m", ts=ts, v=v, tokens=tier_tokens,
-                                    key=key, sketch_id=sketch_id)
-            delta = delta.persist()
-            touched_parts = [
-                r[0] for r in _with_pday(delta).select(PART_COL).distinct().collect()
-            ]
+
+            def roll(r):
+                return rollup_from_raw(r, "1m", ts=ts, v=v, tokens=tier_tokens,
+                                       key=key, sketch_id=sketch_id)
+
+            def chunk(r, prev=None):
+                return token_chunk_rows(r, ts=ts, tokens=tokens, key=key,
+                                        cap=chunk_cap, prev=prev)
+
+            observed = raw
+            if with_lineage:
+                obs = Observation()
+                observed = raw.observe(obs, F.count(F.lit(1)).alias("rows"))
+            delta = roll(observed).persist()
+            cells = _delta_cells(delta)
+            if with_lineage:  # no cell: an empty batch, maybe optimized away
+                self.record_lineage(batch_id, "raw",
+                                    {None: obs.get["rows"] if cells else 0})
+            touched_parts = sorted({d for r in cells for d in r["days"]})
             self.last_ingest_stats = {"touched_parts": touched_parts}
-            out: dict[str, DataFrame] = {}
             if not touched_parts:  # empty batch: nothing to merge or commit
                 delta.unpersist()
                 self.meta["batches"] = batch_id
-                for tier in ("1m", "1h", "1d"):
-                    out[tier] = self.read_table(f"rollup_{tier}")
-                return out
+                return {t: self.read_table(f"rollup_{t}") for t in ("1m", "1h", "1d")}
+            key_t, bucket_t = (delta.schema[c].dataType for c in _CELL)
 
-            # -- 1m: merge or rebuild delta-touched cells ------------------------
-            prev = self.read_table("rollup_1m", parts=touched_parts)
-            if prev is None:
-                content_1m = delta
-            else:
-                prev = prev.persist()
-                cells = delta.select(*_CELL)
-                overlap = prev.join(F.broadcast(cells), _CELL, "left_semi")
-                keep = prev.join(F.broadcast(cells), _CELL, "left_anti")
-                if exact_rebuild:
-                    merged_cells = self._rebuild_overlaps(
-                        overlap, delta, lambda r: rollup_from_raw(
-                            r, "1m", ts=ts, v=v, tokens=tier_tokens, key=key,
-                            sketch_id=sketch_id), ts, key)
-                else:
-                    merged_cells = merge_rollup(
-                        overlap, delta, with_tokens=tier_tokens is not None
-                    )
-                content_1m = keep.unionByName(merged_cells)
-                if with_scan_stats:
-                    # extra count action over the (pruned) prev scan — diagnostic
-                    # only, so a production batch runs one job per committed table
-                    self.last_ingest_stats["prev_rows_scanned_1m"] = prev.count()
-            self.commit_partitions("rollup_1m", content_1m, touched_parts)
-            if prev is not None:
-                prev.unpersist()
-            out["1m"] = self.read_table("rollup_1m")
-            if with_lineage:
-                self.record_lineage(
-                    batch_id, "commit_1m",
-                    self.read_table("rollup_1m", parts=touched_parts),
-                )
+            def refresh(name, new, merge, rebuild=None):
+                """``new`` merged into the previous rows of ``name``'s touched
+                partitions (exact_rebuild: overlap cells ``rebuild`` from raw)."""
+                prev = self.read_table(name, parts=touched_parts)
+                if prev is None:
+                    return new
+                if with_scan_stats:  # extra count action over the pruned prev scan
+                    stat = "prev_rows_scanned_" + name.removeprefix("rollup_")
+                    self.last_ingest_stats[stat] = prev.count()
+                if exact_rebuild and rebuild:
+                    return self._rebuild_overlaps(prev, new, rebuild, ts, key)
+                return merge(prev, new)
+
+            def commit(name, df, stage=None):
+                version = self.commit_partitions(name, df, touched_parts)
+                if with_lineage and stage:
+                    self.record_lineage(batch_id, stage,
+                                        self._m.file_rows(name, version))
+                return self.read_table(name)
+
+            # -- 1m: one merge aggregate over prev(touched) ∪ delta -------------
+            out = {"1m": commit("rollup_1m", refresh(
+                "rollup_1m", delta, lambda p, d: merge_rollup(
+                    p, d, with_tokens=tier_tokens is not None), roll), "commit_1m")}
 
             # -- chunked token payload: one bounded-row table at 1m granularity --
             if chunked:
-                delta_chunks = token_chunk_rows(
-                    raw, ts=ts, tokens=tokens, key=key, cap=chunk_cap
-                ).persist()
-                prev_c = self.read_table("tokens_1m", parts=touched_parts)
-                if prev_c is None:
-                    content_c = delta_chunks
-                else:
-                    c_cells = delta_chunks.select(*_CELL).distinct()
-                    overlap_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_semi")
-                    keep_c = prev_c.join(F.broadcast(c_cells), _CELL, "left_anti")
-                    if exact_rebuild:
-                        merged_c = self._rebuild_overlaps(
-                            overlap_c, delta_chunks, lambda r: token_chunk_rows(
-                                r, ts=ts, tokens=tokens, key=key, cap=chunk_cap),
-                            ts, key)
-                    else:
-                        merged_c = merge_token_chunks(overlap_c, delta_chunks,
-                                                      cap=chunk_cap)
-                    content_c = keep_c.unionByName(merged_c)
-                self.commit_partitions("tokens_1m", content_c, touched_parts)
-                delta_chunks.unpersist()
-                out["tokens_1m"] = self.read_table("tokens_1m")
+                def merge_chunks(prev_c, _):
+                    # a source's chunks below its lowest delta bucket pass
+                    # through unshuffled; the rest re-chunk with the raw rows
+                    lo = _lower_bound({r["source"]: r["lo"] for r in cells},
+                                      key_t, bucket_t)
+                    late = F.coalesce(F.col("bucket") >= lo, F.lit(False))
+                    return prev_c.filter(~late).unionByName(
+                        chunk(raw, prev_c.filter(late)))
 
-            # -- coarser tiers: rebuild affected parent cells from the child ----
-            child_tier, delta_cells = "1m", delta.select(*_CELL)
-            tier_has_tokens = tier_tokens is not None
-            for tier in ("1h", "1d"):
-                parent_cells = delta_cells.select(
-                    "source", bucket_col("bucket", tier, delta_cells).alias("bucket")
-                ).distinct()
-                child_now = self.read_table(f"rollup_{child_tier}", parts=touched_parts)
-                child_subset = child_now.join(
-                    F.broadcast(
-                        parent_cells.select(
-                            F.col("source").alias("_ps"), F.col("bucket").alias("_pb")
-                        )
-                    ),
-                    (F.col("source") == F.col("_ps"))
-                    & (bucket_col("bucket", tier, child_now) == F.col("_pb")),
-                    "left_semi",
-                )
-                recomputed = rollup_cascade(
-                    child_subset, tier, with_tokens=tier_has_tokens
-                )
-                prev_t = self.read_table(f"rollup_{tier}", parts=touched_parts)
-                if prev_t is None:
-                    content = recomputed
-                else:
-                    keep_t = prev_t.join(F.broadcast(parent_cells), _CELL, "left_anti")
-                    content = keep_t.unionByName(recomputed)
-                    if with_scan_stats:
-                        self.last_ingest_stats[f"prev_rows_scanned_{tier}"] = (
-                            prev_t.count())
-                self.commit_partitions(f"rollup_{tier}", content, touched_parts)
-                out[tier] = self.read_table(f"rollup_{tier}")
-                if with_lineage:
-                    # per-stage lineage over the COMMIT content (delta-touched
-                    # partitions only — never a full-tier read)
-                    self.record_lineage(
-                        batch_id, f"commit_{tier}",
-                        self.read_table(f"rollup_{tier}", parts=touched_parts),
-                    )
-                child_tier, delta_cells = tier, parent_cells
+                out["tokens_1m"] = commit(
+                    "tokens_1m", refresh("tokens_1m", chunk(raw), merge_chunks, chunk))
 
+            # -- coarser tiers: recompute the affected cells from the new child --
+            for child_t, tier in (("1m", "1h"), ("1h", "1d")):
+                child = self.read_table(f"rollup_{child_t}", parts=touched_parts)
+                tier_cells = [(r["source"], b) for r in cells for b in r[tier]]
+                affected = child.withColumn(
+                    "_cell", bucket_col("bucket", tier, child)
+                ).filter(_in_cells(tier_cells, "_cell", key_t, bucket_t))
+                # prev rows outside the affected cells stay: a finer tier may
+                # have expired the children they were built from
+                content = refresh(
+                    f"rollup_{tier}",
+                    rollup_cascade(affected, tier, with_tokens=tier_tokens is not None),
+                    lambda p, new: p.filter(~_in_cells(
+                        tier_cells, "bucket", key_t, bucket_t)).unionByName(new),
+                )
+                out[tier] = commit(f"rollup_{tier}", content, f"commit_{tier}")
             delta.unpersist()
             self.meta["batches"] = batch_id
             return out
 
-    def _rebuild_overlaps(self, overlap, delta, rebuild, ts, key):
-        """Recompute from retained raw the (source, bucket) cells present in
-        both history and the new delta — the only cells where a concat-order
+    def _rebuild_overlaps(self, prev, delta, rebuild, ts, key):
+        """The new content of the touched partitions under exact_rebuild:
+        prev rows of cells the delta misses, delta-only cells, and the
+        (source, bucket) cells present in both prev and the delta
+        recomputed from retained raw — the only cells where a concat-order
         merge of measures or token chunks can diverge from a full recompute
         (``rebuild`` maps the cells' raw rows to delta rows; a bucket's
         chunks are a pure function of its full ts-ordered content, so this
-        is exact under out-of-order arrival).  Delta-only cells pass
-        through unchanged."""
-        ov_cells = overlap.select(*_CELL).distinct()
+        is exact under out-of-order arrival)."""
+        cells = F.broadcast(delta.select(*_CELL).distinct())
+        keep = prev.join(cells, _CELL, "left_anti")
+        ov_cells = prev.join(cells, _CELL, "left_semi").select(*_CELL).distinct()
         delta_only = delta.join(F.broadcast(ov_cells), _CELL, "left_anti")
         if ov_cells.isEmpty():
-            return delta_only
+            return keep.unionByName(delta_only)
         if not self.meta.get("raw_complete"):
             raise ValueError(
-                "exact_rebuild needs retained raw spanning the store's "
-                "history, but earlier batches were ingested with "
-                "exact_rebuild=False — the rebuild would undercount."
-            )
+                "exact_rebuild needs retained raw spanning the store's history, but "
+                "earlier batches were ingested with exact_rebuild=False — the "
+                "rebuild would undercount.")
         raw_all = self.read_table("raw")
-        affected_raw = (
-            raw_all.withColumn("_b", bucket_col(ts, "1m", raw_all))
-            .join(
-                F.broadcast(
-                    ov_cells.select(
-                        F.col("source").alias("_os"), F.col("bucket").alias("_ob")
-                    )
-                ),
-                (F.col(key) == F.col("_os")) & (F.col("_b") == F.col("_ob")),
-                "left_semi",
-            )
-            .drop("_b")
-        )
-        return delta_only.unionByName(rebuild(affected_raw))
+        ov = ov_cells.select(F.col("source").alias("_os"), F.col("bucket").alias("_ob"))
+        affected_raw = raw_all.join(
+            F.broadcast(ov), (F.col(key) == F.col("_os"))
+            & (bucket_col(ts, "1m", raw_all) == F.col("_ob")), "left_semi")
+        return keep.unionByName(delta_only).unionByName(rebuild(affected_raw))
 
     def read_tokens(self, tier: str = "1m") -> DataFrame | None:
         """Token payloads at any tier granularity, flattened at read from the
         bounded 1m chunk rows (chunked token_mode only)."""
         chunks = self.read_table("tokens_1m")
-        if chunks is None:
-            return None
-        return tokens_at_tier(chunks, tier)
+        return None if chunks is None else tokens_at_tier(chunks, tier)
 
     def sketch_stats(self, tier: str = "1d",
                      quantiles: tuple = (0.5, 0.9)) -> DataFrame | None:
@@ -374,16 +380,14 @@ class RollupStore:
         t = self.read_table(f"rollup_{tier}")
         if t is None or "kmv" not in t.columns:
             return None
-        cols = [
+        return t.select(
             "source", "bucket", "cnt",
             F.size("kmv").alias("n_kept"),
             kmv_estimate(F.col("kmv"), SKETCH_K).alias("distinct_est"),
-        ]
-        for q in quantiles:
-            cols.append(
-                bottomk_quantile(F.col("sample"), q).alias(f"q{int(q * 100)}")
-            )
-        return t.select(*cols, "kmv", "sample")
+            *(bottomk_quantile(F.col("sample"), q).alias(f"q{int(q * 100)}")
+              for q in quantiles),
+            "kmv", "sample",
+        )
 
     # -- operator state -----------------------------------------------------
     def write_state(self, op: str, state_df: DataFrame) -> int:
@@ -417,23 +421,17 @@ class RollupStore:
         never O(table)) and pure motion: rows are bit-identical, untouched
         partitions keep their original commit version, and prior versions
         stay time-travelable until expire_snapshots GCs them."""
-        frag = {
-            p: n for p, n in self.fragmentation(name).items() if n > max_files
-        }
-        stats = {"candidate_parts": sorted(frag), "files_before": frag}
-        if not frag:
-            stats["compacted_parts"] = []
-            self.last_compact_stats = stats
-            return stats
+        frag = {p: n for p, n in self.fragmentation(name).items() if n > max_files}
         parts = sorted(frag)
-        df = self.read_table(name, parts=parts)
-        # one shuffle task per day-partition => one output file per day
-        df = df.repartition(len(parts), F.to_date("bucket"))
-        self.commit_partitions(name, df, parts)
-        stats["compacted_parts"] = parts
-        stats["files_after"] = {
-            p: n for p, n in self.fragmentation(name).items() if p in frag
-        }
+        stats = {"candidate_parts": sorted(frag), "files_before": frag,
+                 "compacted_parts": parts}
+        if parts:
+            df = self.read_table(name, parts=parts)
+            # one shuffle task per day-partition => one output file per day
+            self.commit_partitions(
+                name, df.repartition(len(parts), F.to_date("bucket")), parts)
+            stats["files_after"] = {
+                p: n for p, n in self.fragmentation(name).items() if p in frag}
         self.last_compact_stats = stats
         return stats
 

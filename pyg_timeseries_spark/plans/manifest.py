@@ -7,8 +7,8 @@ whose ``col=<value>`` directory holds its rows, plus the schema written.
 
 * Commit: only partitions that got a directory move.  A replace table
   (rollup tiers, labels, state) re-points them, and a touched partition
-  that wrote no rows leaves the map; an append table (dedup layers, raw,
-  lineage) adds the commit to them and keeps no history.
+  that wrote no rows leaves the map; an append table (dedup layers, raw)
+  adds the commit to them and keeps no history.
 * One swap per store operation: every table an operation changes lands in
   one ``os.replace`` as the outermost :meth:`Manifest.operation` exits; if
   the operation raises, the view reloads from disk, so readers never see
@@ -119,6 +119,22 @@ class Manifest:
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*dirs)
+
+    def file_rows(self, table: str, version: int) -> dict[str, int]:
+        """Rows per partition of commit ``version``, summed from its parquet
+        footers: a local metadata read that runs no Spark job."""
+        import pyarrow.parquet as pq
+
+        base = self.table_dir(table, version)
+        pcol = self.meta["tables"][table]["pcol"]
+        out = {}
+        for d in sorted(os.listdir(base)):
+            if d.startswith(f"{pcol}="):
+                sub = os.path.join(base, d)
+                out[d.split("=", 1)[1]] = sum(
+                    pq.read_metadata(os.path.join(sub, f)).num_rows
+                    for f in os.listdir(sub) if f.endswith(".parquet"))
+        return out
 
     def _publish(self, table: str, parts: dict, schema: dict,
                  history: bool = True) -> int:

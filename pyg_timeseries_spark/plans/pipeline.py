@@ -10,7 +10,8 @@ This is the integration layer a user drives (SURVEY.md §3.4): a
                                    persisting its state in the store under
                                    op_name; next call resumes exactly
   compress_tier(tier)            — Gorilla chunk table for the tier
-  lineage()                      — per-batch per-partition row counts
+  lineage()                      — per-batch, per-stage row counts of each
+                                   committed day-partition
 """
 
 from __future__ import annotations

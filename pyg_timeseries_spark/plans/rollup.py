@@ -306,38 +306,29 @@ def token_chunk_rows(
     tokens: str = "tokens",
     key: str = "source",
     cap: int = MAX_TOKENS_PER_ROW,
+    prev: DataFrame | None = None,
 ) -> DataFrame:
     """raw → (source, bucket[1m], part, tokens) with every row ≤ cap tokens.
 
     Within a bucket, docs concat in ts order (the same order the array-token
-    rollup uses), then the flat array slices into parts.  The flat array is
-    transient per (source, minute) — bounded by per-minute ingest volume,
-    never by day/history volume."""
-    flat = (
-        df.groupBy(
-            F.col(key).alias("source"), bucket_col(ts, "1m", df).alias("bucket")
-        )
-        .agg(_ordered_concat(tokens, F.col(ts)).alias("_flat"))
+    rollup uses), then the flat array slices into parts.  ``prev`` — chunk
+    rows already stored — concatenates before the docs of its bucket, part
+    by part: the append order, so merging a batch this way equals chunking
+    all of it at once, in one aggregate over the raw rows.  The flat array
+    is transient per (source, minute) — bounded by per-minute ingest
+    volume, never by day/history volume."""
+    rows = df.select(
+        F.col(key).alias("source"), bucket_col(ts, "1m", df).alias("bucket"),
+        F.lit(1).alias("_d"), F.lit(0).alias("part"), F.col(ts).alias("_ts"),
+        F.col(tokens).alias("tokens"),
     )
-    return flat.select(
-        "source", "bucket",
-        F.posexplode(_slice_parts(F.col("_flat"), cap)).alias("part", "tokens"),
-    )
-
-
-def merge_token_chunks(
-    existing: DataFrame, delta: DataFrame, cap: int = MAX_TOKENS_PER_ROW
-) -> DataFrame:
-    """Merge delta chunk rows into existing ones for the SAME buckets —
-    re-chunks each touched bucket from (existing parts, then delta parts),
-    exactly the append order.  Only touched buckets should be passed in
-    (the store's O(delta) contract)."""
-    tagged = existing.withColumn("_d", F.lit(0)).unionByName(
-        delta.withColumn("_d", F.lit(1))
-    )
-    flat = tagged.groupBy("source", "bucket").agg(
-        _ordered_concat("tokens", "_d", "part").alias("_flat")
-    )
+    if prev is not None:
+        rows = prev.select(
+            "source", "bucket", F.lit(0).alias("_d"), "part",
+            F.lit(None).cast(rows.schema["_ts"].dataType).alias("_ts"), "tokens",
+        ).unionByName(rows)
+    flat = rows.groupBy("source", "bucket").agg(
+        _ordered_concat("tokens", "_d", "part", "_ts").alias("_flat"))
     return flat.select(
         "source", "bucket",
         F.posexplode(_slice_parts(F.col("_flat"), cap)).alias("part", "tokens"),

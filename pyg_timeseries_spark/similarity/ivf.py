@@ -210,16 +210,16 @@ def kmeans_profile(corpus: DataFrame, n_clusters: int = 8,
     — integer-quantized means, so distances stay exact integers), then
     emit one row per cluster: (cluster, n, inertia) with inertia the
     SUM of integer L2 distances to the final centroid — the elbow-curve
-    statistic, exactly reproducible in any engine.
+    statistic, exactly reproducible in any engine.  Rows with a NULL
+    ``vec`` are skipped, as in embedding_stats / embedding_quantize.
 
     Scale shape: each Lloyd round is one map-only assignment plus one
     k×dim-row aggregate (the centroid matrix is a driver-side dimension
     table, ``n_clusters × dim`` ints); the final profile is a map-only
     assignment + distance fold feeding one hash aggregate on ≤ k keys.
     The corpus never shuffles."""
-    # NULL vectors are skipped (sibling convention: embedding_stats /
-    # embedding_quantize) — a NULL row would yield a NULL cluster group
-    # and could crash seed_centroids if it ranked among the md5-smallest
+    # a NULL row would yield a NULL cluster group and could crash
+    # seed_centroids if it ranked among the md5-smallest
     corpus = corpus.filter(F.col(vec).isNotNull())
     cents = seed_centroids(corpus, n_clusters, id_col=id_col, vec=vec)
     if kmeans_iters:

@@ -89,18 +89,6 @@ def start_file_stream_ingest(
     return q
 
 
-def tws_available() -> bool:
-    """transformWithStateInPandas needs the python `protobuf` package (its
-    state server speaks protobuf); absent on this image — gated like
-    Iceberg."""
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def stream_ewma_ooo(
     stream_df,
     n: float,
@@ -127,8 +115,6 @@ def stream_ewma_ooo(
     * rows later than the watermark are dropped by Spark deterministically.
 
     Emits one row per FINALIZED bucket: (key, bucket, sum_v, ewma).
-    (stream_ewma_ooo_tws is the transformWithStateInPandas rendition —
-    gated on `tws_available()`.)
     """
     import numpy as np
     import pandas as pd
@@ -204,131 +190,6 @@ def stream_ewma_ooo(
         .applyInPandasWithState(
             fn, out_schema, state_schema, "append",
             GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-
-
-def stream_ewma_ooo_tws(
-    stream_df,
-    n: float,
-    key: str = "source",
-    ts: str = "ts",
-    v: str = "n_tok",
-    out: str = "ewma",
-    bucket_minutes: int = 1,
-    watermark: str = "2 minutes",
-):
-    """Out-of-order-tolerant stateful streaming EWM over 1m buckets via
-    ``transformWithStateInPandas`` (the Spark 4 successor of
-    applyInPandasWithState) with event-time timers:
-
-    * rows accumulate into OPEN (source, bucket) cells held in a MapState —
-      a late row inside the watermark revises its open bucket (the
-      reference's in-bucket refresh, `_ewm.py:41-44`, at bucket granularity);
-    * when the event-time watermark passes a bucket's end, the per-bucket
-      timer fires: all closed buckets finalize IN BUCKET ORDER through the
-      exact EWM kernel, chaining the packed (data, state) vector — so the
-      emitted series is bit-identical to the batch engine over the same
-      finalized buckets;
-    * rows later than the watermark are dropped by Spark deterministically.
-
-    Requires the RocksDB state store AND the python `protobuf` package
-    (absent on this image — gated; stream_ewma_ooo carries the same
-    semantics on applyInPandasWithState).  Emits one row per FINALIZED
-    bucket: (key, bucket, sum_v, ewma).
-    """
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the python protobuf package — "
-            "use stream_ewma_ooo (applyInPandasWithState, same semantics)."
-        )
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor, StatefulProcessorHandle,
-    )
-
-    from pyg_timeseries_spark.kernels import ewm_numpy
-
-    bucket_ms = bucket_minutes * 60_000
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            T.StructField("bucket", T.TimestampType()),
-            T.StructField("sum_v", T.DoubleType()),
-            T.StructField(out, T.DoubleType()),
-        ]
-    )
-
-    class EwmBucketProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.open = handle.getMapState(
-                "open",
-                T.StructType([T.StructField("bucket_ms", T.LongType())]),
-                T.StructType([T.StructField("sum_v", T.DoubleType())]),
-            )
-            self.kernel = handle.getValueState(
-                "kernel",
-                T.StructType([T.StructField("packed", T.ArrayType(T.DoubleType()))]),
-            )
-
-        def handleInputRows(self, k, rows, timerValues):
-            for pdf in rows:
-                tsv = pdf[ts].astype("datetime64[ms]").astype("int64")
-                bks = (tsv // bucket_ms) * bucket_ms
-                sums = pd.Series(pdf[v].astype(float).values).groupby(
-                    bks.values).sum()
-                for b_ms, s_v in sums.items():
-                    prev = (
-                        self.open.getValue((int(b_ms),))[0]
-                        if self.open.containsKey((int(b_ms),))
-                        else 0.0
-                    )
-                    self.open.updateValue((int(b_ms),), (float(prev + s_v),))
-                    # fire when the watermark passes this bucket's end
-                    self.handle.registerTimer(int(b_ms) + bucket_ms)
-            return iter(())
-
-        def handleExpiredTimer(self, k, timerValues, expiredTimerInfo):
-            wm = timerValues.getCurrentWatermarkInMs()
-            closed = sorted(
-                int(b[0]) for b in self.open.keys()
-                if int(b[0]) + bucket_ms <= wm
-            )
-            if not closed:
-                return iter(())
-            vals = np.array(
-                [self.open.getValue((b,))[0] for b in closed], dtype=float
-            )
-            prior = None
-            if self.kernel.exists():
-                packed = self.kernel.get()[0]
-                if packed is not None and len(packed) == ewm_numpy.STATE_LEN:
-                    prior = np.asarray(packed, float)
-            res, s = ewm_numpy.ewma(vals, n, state=prior)
-            self.kernel.update(([float(x) for x in s],))
-            for b in closed:
-                self.open.removeKey((b,))
-            yield pd.DataFrame(
-                {
-                    key: k[0],
-                    "bucket": pd.to_datetime(np.array(closed), unit="ms"),
-                    "sum_v": vals,
-                    out: res,
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        stream_df.select(key, ts, v)
-        .withWatermark(ts, watermark)
-        .groupBy(key)
-        .transformWithStateInPandas(
-            EwmBucketProcessor(), out_schema, "Append", "EventTime",
         )
     )
 

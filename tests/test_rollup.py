@@ -642,3 +642,137 @@ def test_sketch_join_null_keys(spark, raw):
     for r in null_cells:
         assert r["kmv"] is not None and len(r["kmv"]) > 0, r
         assert r["sample"] is not None and len(r["sample"]) > 0, r
+
+
+def exact_rows(df):
+    """Every row as its repr (floats round-trip exactly), sorted, with the
+    schema — a bit-for-bit comparison key."""
+    return df.schema.simpleString(), sorted(map(repr, df.collect()))
+
+
+def test_merge_passes_one_row_cells_through(spark, raw):
+    """The precondition of the one-aggregate merge: when every cell has
+    exactly one row, merge_rollup returns its input bit-for-bit — long
+    sums, min/max, the KMV sketch, the bottom-k sample and the one-chunk
+    ordered concat of tokens — and stored multi-part chunk rows re-chunked
+    with an empty batch come back bit-for-bit too."""
+    from pyg_timeseries_spark.plans.rollup import merge_rollup, token_chunk_rows
+
+    m1 = rollup_from_raw(raw, "1m", sketch_id="doc_id").persist()
+    web = F.col("source") == "web"
+    merged = merge_rollup(m1.filter(web), m1.filter(~web))
+    assert exact_rows(merged) == exact_rows(m1)
+
+    chunks = token_chunk_rows(raw, cap=64).persist()
+    assert chunks.filter(F.col("part") > 0).count() > 0  # multi-part cells
+    again = token_chunk_rows(raw.limit(0), cap=64, prev=chunks)
+    assert exact_rows(again) == exact_rows(chunks)
+    m1.unpersist()
+    chunks.unpersist()
+
+
+# Spark jobs of the fixture's merge batch (the tail ingest below, lineage
+# on or off): the bound pins the one-aggregate-per-tier commit path
+MERGE_BATCH_JOBS = 12
+
+
+def test_ingest_job_counts(spark, raw, tmp_path):
+    """Lineage runs no Spark job of its own — raw rows come from an
+    Observation on the batch, commit rows from the written files' footers —
+    and a merge batch stays within its measured job count."""
+    cut = F.lit("2024-01-01 03:00:30").cast("timestamp")  # mid-bucket
+    head, tail = raw.filter(F.col("ts") < cut), raw.filter(F.col("ts") >= cut)
+    sc = spark.sparkContext
+
+    def jobs_of(label, with_lineage):
+        store = RollupStore(str(tmp_path / label), spark)
+        store.ingest(head, with_lineage=False)
+        sc.setJobGroup(label, label)
+        store.ingest(tail, with_lineage=with_lineage)
+        n = len(sc.statusTracker().getJobIdsForGroup(label))
+        sc.setJobGroup(None, None)
+        return n, store
+
+    n_lin, store = jobs_of("lin", True)
+    n_off, _ = jobs_of("nolin", False)
+    assert n_lin == n_off
+    assert n_off <= MERGE_BATCH_JOBS
+    lin = store.lineage().toPandas()
+    assert set(lin.stage) == {"raw", "commit_1m", "commit_1h", "commit_1d"}
+    assert lin[lin.stage == "raw"].rows.sum() == tail.count()
+    per_day = lin[lin.stage == "commit_1m"].set_index("p_day").rows.to_dict()
+    got = store.read_table("rollup_1m").groupBy(
+        F.to_date("bucket").cast("string")).count().collect()
+    assert per_day == {r[0]: r[1] for r in got}
+
+
+def test_lineage_read_runs_no_job(spark, tmp_path):
+    """lineage() is a local frame over the store metadata: after 10 ingests
+    it runs no Spark job (an append table of per-stage commits would have
+    passed the 32-directory listing threshold), and its per-(batch, stage)
+    raw totals replay the batches."""
+    raw = sequences(spark, 2_000, interval_s=90, with_tokens=False).persist()
+    edges = [f"2024-01-01 {h:02d}:00:30" for h in range(2, 20, 2)]
+    bounds = [None, *(F.lit(e).cast("timestamp") for e in edges), None]
+    store = RollupStore(str(tmp_path / "lin10"), spark)
+    sizes = []
+    for lo, hi in zip(bounds, bounds[1:]):
+        b = raw
+        if lo is not None:
+            b = b.filter(F.col("ts") >= lo)
+        if hi is not None:
+            b = b.filter(F.col("ts") < hi)
+        sizes.append(b.count())
+        store.ingest(b, tokens=None)
+    assert len(sizes) == 10
+    sc = spark.sparkContext
+    sc.setJobGroup("lineage", "lineage")
+    lin = store.lineage()
+    assert len(sc.statusTracker().getJobIdsForGroup("lineage")) == 0
+    sc.setJobGroup(None, None)
+    pdf = lin.toPandas()
+    assert pdf[pdf.stage == "raw"].sort_values("batch_id").rows.tolist() == sizes
+    assert set(pdf.batch_id) == set(range(1, 11))
+    raw.unpersist()
+
+
+@pytest.mark.parametrize("tz,ts_type,day", [
+    ("Asia/Kolkata", "timestamp", "2024-01-01"),
+    ("Asia/Kolkata", "timestamp_ntz", "2024-01-01"),
+    ("America/New_York", "timestamp", "2024-11-03"),  # the repeated 01:00 hour
+])
+def test_ingest_under_non_utc_session(spark, tmp_path, tz, ts_type, day):
+    """The collected cells (day-partitions, 1h/1d cells, per-source lower
+    bounds) live on the bucket's own clock: under a +05:30 session two
+    batches cut mid-day equal a one-shot ingest at every tier and in
+    read_tokens, for TIMESTAMP and TIMESTAMP_NTZ ``ts``; across a DST
+    fall-back both 01:00 hours stay separate cells, as in the direct
+    cascade."""
+    import datetime as dt
+
+    tz_key = "spark.sql.session.timeZone"
+    old = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, tz)
+    try:
+        shift = (dt.date.fromisoformat(day) - dt.date(2024, 1, 1)).days
+        raw = sequences(spark, 6_000, interval_s=45).withColumn(
+            "ts", (F.col("ts") + F.expr(f"INTERVAL {shift} DAYS")).cast(ts_type)
+        ).persist()
+        cut = F.lit(f"{day} 13:37:30").cast(ts_type)  # mid-day, mid-minute
+        full = RollupStore(str(tmp_path / "tz_full"), spark)
+        full.ingest(raw, chunk_cap=64)
+        inc = RollupStore(str(tmp_path / "tz_inc"), spark)
+        inc.ingest(raw.filter(F.col("ts") < cut), chunk_cap=64)
+        inc.ingest(raw.filter(F.col("ts") >= cut), chunk_cap=64)
+        assert len(inc.last_ingest_stats["touched_parts"]) >= 2
+        direct = rollup_all_tiers(raw, tokens=None)
+        for tier in ("1m", "1h", "1d"):
+            assert exact_rows(inc.read_table(f"rollup_{tier}")) == exact_rows(
+                full.read_table(f"rollup_{tier}")), tier
+            assert exact_rows(full.read_table(f"rollup_{tier}")) == exact_rows(
+                direct[tier]), tier
+            assert exact_rows(inc.read_tokens(tier)) == exact_rows(
+                full.read_tokens(tier)), tier
+        raw.unpersist()
+    finally:
+        spark.conf.set(tz_key, old)
