@@ -80,15 +80,3 @@ def sequences(
     out = functools.reduce(DataFrame.unionByName, parts)
     return out
 
-
-def sequences_input(spark: SparkSession, n_rows: int = 100_000, **kw) -> DataFrame:
-    """Exactly the input_hint schema (doc_id, tokens, n_tok, source)."""
-    return sequences(spark, n_rows, **kw).select("doc_id", "tokens", "n_tok", "source")
-
-
-def derive_ts(df: DataFrame, interval_s: int = 1) -> DataFrame:
-    """Recover (seq, ts) from doc_id for a table at the input_hint schema —
-    the deterministic time axis (SURVEY.md §7.0)."""
-    seq = F.split(F.col("doc_id"), "-").getItem(1).cast("long")
-    ts = F.timestamp_seconds(F.unix_timestamp(F.lit(EPOCH)) + seq * interval_s)
-    return df.withColumn("seq", seq).withColumn("ts", ts)

@@ -107,19 +107,6 @@ def minhash_signature(shingles_col, n_hashes: int = 32, hash_fn: str = "xxhash64
     )
 
 
-def minhash_bands(sig_col, bands: int, rows: int):
-    """Band buckets: bucket_b = xxhash64 of the band's signature slice."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.xxhash64(
-            F.concat_ws(",", F.transform(
-                F.slice(sig_col, b * rows + 1, rows), lambda x: x.cast("string")
-            )),
-            b,
-        ),
-    )
-
-
 def minhash_candidates(
     df: DataFrame,
     id_col: str = "doc_id",

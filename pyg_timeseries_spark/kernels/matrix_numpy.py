@@ -209,10 +209,6 @@ def overlapping_rows(A: np.ndarray, k: int, tail: np.ndarray | None = None):
     return X[prefix:], new_tail
 
 
-def psd_state_len_ov(m: int, overlapping: int) -> int:
-    return m * m + 3 * m + max(overlapping - 1, 0) * m
-
-
 def ewmcorr_psd_ov(A: np.ndarray, n: float, overlapping: int = 1,
                    min_sample: float = 0.25, min_periods: int = 1,
                    demean: bool = True, shrinkage: float = 0.0, state=None):

@@ -40,12 +40,26 @@ rollup history is petabytes; re-aggregating it per batch is the scale-killer):
   batch, commit rows per day-partition from the new files' parquet
   footers, and the records land in the store metadata with the swap.
 
+Retention (``expire``, O(1 partition), no Spark job, no file written): the
+tier's newest bucket is the footer max of its newest day-partition (the
+footers store timestamps as INT64 micros, with min/max), rendered on the
+session clock so the cutoff is wall-clock arithmetic on the clock the
+p_day labels live on.  Days older than the cutoff leave the manifest; the
+day it bisects keeps its files and gets the predicate ``bucket IS NULL OR
+bucket < <day start> OR bucket >= <cutoff>`` (both bounds with their
+offset, so no reading session timezone moves them), which every read
+applies until a commit re-points the day — through a read that applied
+it — or a later expire drops it; a second trim of the day narrows it.  The op watermark of ``TimeseriesEngine.apply`` comes
+from the same footer max.
+
 Layout::
 
     store/
       manifest.json                # {table: {version, snapshots: {N:
-                                   #   {parts: {p_day: [commit]}, schema}}},
-                                   #  batches, raw_complete, lineage: [...]}
+                                   #   {parts: {p_day: [commit]}, schema,
+                                   #    preds: {p_day: row predicate}}}},
+                                   #  batches, raw_complete, lineage: [...],
+                                   #  op_watermark: {op: bucket text}}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
       tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows (chunked mode)
       raw/v{N}/*.parquet           # retained raw batches (exact_rebuild)
@@ -54,8 +68,11 @@ Layout::
 
 from __future__ import annotations
 
+import datetime as _dt
 import os
+import re
 import time
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -72,11 +89,15 @@ _CELL = ["source", "bucket"]
 _LINEAGE = "batch_id int, stage string, p_day string, rows long, wall_ts double"
 
 
+# A row's day-partition label.  Component-based (to_date of the already
+# truncated bucket), so NTZ buckets never route through the session
+# timezone.
+_PDAY = "CAST(to_date(bucket) AS STRING)"
+
+
 def _with_pday(df: DataFrame) -> DataFrame:
-    """Day-partition column from the bucket timestamp.  Component-based (via
-    to_date on the already-truncated bucket) so NTZ buckets never route
-    through the session timezone."""
-    return df.withColumn(PART_COL, F.to_date("bucket").cast("string"))
+    """Day-partition column from the bucket timestamp."""
+    return df.withColumn(PART_COL, F.expr(_PDAY))
 
 
 def _clock_text(c: Column, dtype) -> Column:
@@ -87,6 +108,37 @@ def _clock_text(c: Column, dtype) -> Column:
     return F.date_format(c, "yyyy-MM-dd HH:mm:ssXXX") if tz else c.cast("string")
 
 
+_EPOCH = _dt.datetime(1970, 1, 1)
+
+
+def _session_zone(spark: SparkSession) -> _dt.tzinfo:
+    """The session timezone: a region id, or a fixed offset such as
+    '+05:30', 'UTC-8' or 'Z'."""
+    name = spark.conf.get("spark.sql.session.timeZone")
+    m = re.fullmatch(r"(?:Z|UTC|GMT|UT)?(?:([+-])(\d{1,2}):?(\d\d)?(?::?(\d\d))?)?",
+                     name)
+    if not m:
+        return ZoneInfo(name)
+    off = _dt.timedelta(hours=int(m[2] or 0), minutes=int(m[3] or 0),
+                        seconds=int(m[4] or 0))
+    return _dt.timezone(-off if m[1] == "-" else off)
+
+
+def _on_clock(micros: int, zone: _dt.tzinfo | None) -> _dt.datetime:
+    """A timestamp as parquet stores it (int micros) on its own clock: the
+    instant in the session ``zone`` (TIMESTAMP), or wall time (``zone``
+    None: TIMESTAMP_NTZ)."""
+    t = _EPOCH + _dt.timedelta(microseconds=micros)
+    return t if zone is None else t.replace(tzinfo=_dt.timezone.utc).astimezone(zone)
+
+
+def _as_stored(t: _dt.datetime) -> int:
+    """The inverse of ``_on_clock``."""
+    if t.tzinfo is not None:
+        t = t.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+
+
 def _delta_cells(delta: DataFrame) -> list:
     """The batch's one collect: per source its lowest 1m bucket
     (``lo``), its 1h and 1d cells and its day-partitions, all as text."""
@@ -95,7 +147,7 @@ def _delta_cells(delta: DataFrame) -> list:
         _clock_text(F.min("bucket"), dt).alias("lo"),
         *(F.collect_set(_clock_text(bucket_col("bucket", t, delta), dt)).alias(t)
           for t in ("1h", "1d")),
-        F.collect_set(F.to_date("bucket").cast("string")).alias("days"),
+        F.collect_set(F.expr(_PDAY)).alias("days"),
     ).collect()
 
 
@@ -290,8 +342,9 @@ class RollupStore:
             def commit(name, df, stage=None):
                 version = self.commit_partitions(name, df, touched_parts)
                 if with_lineage and stage:
+                    stats = self._m.file_stats(name, version)
                     self.record_lineage(batch_id, stage,
-                                        self._m.file_rows(name, version))
+                                        {p: st[0] for p, st in stats.items()})
                 return self.read_table(name)
 
             # -- 1m: one merge aggregate over prev(touched) ∪ delta -------------
@@ -396,9 +449,6 @@ class RollupStore:
     def read_state(self, op: str) -> DataFrame | None:
         return self.read_table(f"state_{op}")
 
-    # -- retention ----------------------------------------------------------
-    _TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
-
     # -- compaction ----------------------------------------------------------
     def fragmentation(self, name: str) -> dict:
         """Per live day-partition: the number of parquet data files backing
@@ -429,23 +479,28 @@ class RollupStore:
             df = self.read_table(name, parts=parts)
             # one shuffle task per day-partition => one output file per day
             self.commit_partitions(
-                name, df.repartition(len(parts), F.to_date("bucket")), parts)
+                name, df.repartition(len(parts), F.expr(_PDAY)), parts)
             stats["files_after"] = {
                 p: n for p, n in self.fragmentation(name).items() if p in frag}
         self.last_compact_stats = stats
         return stats
+
+    # -- retention ----------------------------------------------------------
+    _TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 
     def expire(self, tier: str, keep_buckets: int) -> None:
         """Tier TTL: keep the newest ``keep_buckets`` bucket-intervals,
         measured back from the tier's max bucket (finer tiers retain less
         history — the retention pyramid).
 
-        Cost is O(1 partition), never O(history): the cutoff is derived from
-        the newest day-partition alone; whole days older than the cutoff are
-        dropped from the manifest WITHOUT being read or rewritten
-        (drop_partitions — the Iceberg DROP PARTITION analog, the retention
-        half of the reference's persist_data, _decorators.py:246-330); only
-        the single boundary day the cutoff bisects is rewritten."""
+        A manifest edit that runs no Spark job and writes no file (the
+        Iceberg DROP PARTITION / Delta log-delete analog, the retention half
+        of the reference's persist_data, _decorators.py:246-330): the max
+        bucket comes from the newest day-partition's parquet footers; whole
+        days older than the cutoff leave the manifest unread; the one
+        boundary day the cutoff bisects keeps its files and gets a row
+        predicate that hides its buckets below the cutoff, applied at read
+        until a commit re-points or drops the day."""
         self._expire_table(f"rollup_{tier}", keep_buckets,
                            self._TIER_SECONDS[tier])
 
@@ -454,51 +509,62 @@ class RollupStore:
         payloads are the bulky tier and usually expire before measures)."""
         self._expire_table("tokens_1m", keep_buckets, self._TIER_SECONDS["1m"])
 
+    def _bucket_max(self, name: str, day: str) -> int | None:
+        """Day-partition ``day``'s largest bucket as stored (int micros),
+        from its parquet footers: no Spark job.  A commit written as INT96
+        has no footer min/max; then one job reads it."""
+        his = [self._m.file_stats(name, v, "bucket", [day])[day][2]
+               for v in self._m.parts(name)[day]]
+        if None not in his:
+            return max(his)
+        return self.read_table(name, parts=[day]).select(
+            F.unix_micros(F.max("bucket"))).first()[0]
+
+    def newest_bucket(self, name: str) -> _dt.datetime | None:
+        """The table's newest bucket on its own clock — aware in the session
+        timezone (TIMESTAMP) or naive wall time (TIMESTAMP_NTZ) — from the
+        newest day-partition's footers; None with no dated row."""
+        # NULL buckets sit under a non-date label and hold no newest bucket
+        days = [p for p in self._m.parts(name) if p[:1].isdigit()]
+        hi = self._bucket_max(name, max(days)) if days else None
+        if hi is None:
+            return None
+        ts = isinstance(self._m.schema(name)["bucket"].dataType, TimestampType)
+        return _on_clock(hi, _session_zone(self.spark) if ts else None)
+
     def _expire_table(self, name: str, keep_buckets: int,
                       interval_s: int) -> None:
-        import datetime as _dt
-
+        hi = self.newest_bucket(name)
+        if hi is None:
+            return
         man = self._m.parts(name)
-        if not man:
-            return
-        newest_day = max(man)  # ISO date strings sort chronologically
-        newest = self.read_table(name, parts=[newest_day])
-        # collect the max bucket AS A STRING: Spark renders it in the
-        # SESSION timezone (TimestampType) or as wall time (NTZ), so the
-        # cutoff arithmetic, the p_day labels (to_date under the session
-        # tz), and the filter literal below all live on one clock — a
-        # datetime collect would arrive in the DRIVER OS timezone instead
-        # and shift the cutoff on non-UTC hosts
-        max_s = newest.select(F.max("bucket").cast("string")).first()[0]
-        if max_s is None:
-            return
-        max_b = _dt.datetime.fromisoformat(max_s)
-        cutoff = max_b - _dt.timedelta(seconds=(keep_buckets - 1) * interval_s)
+        # wall-clock arithmetic on the clock the p_day labels live on; the
+        # result has fold=0, so a repeated or skipped hour resolves as
+        # Spark's cast of the text resolves it
+        cutoff = hi - _dt.timedelta(seconds=(keep_buckets - 1) * interval_s)
         cutoff_day = cutoff.date().isoformat()
         expired = [p for p in man if p < cutoff_day]
-        self.last_expire_stats = {
-            "dropped_parts": sorted(expired), "rewritten_parts": [],
-        }
+        trim = cutoff.time() != _dt.time.min and cutoff_day in man
+        if trim and self._bucket_max(name, cutoff_day) < _as_stored(cutoff):
+            expired, trim = expired + [cutoff_day], False  # no row survives
+        self.last_expire_stats = {"dropped_parts": sorted(expired),
+                                  "trimmed_parts": [cutoff_day] if trim else []}
         with self._m.operation():
+            # drop, then trim: the snapshot before the trim already lacks
+            # the dropped days, so expire_snapshots(keep=2) frees them
             if expired:
                 self.drop_partitions(name, expired)
-            # the boundary day is rewritten only when the cutoff bisects it
-            if cutoff.time() != _dt.time.min and cutoff_day in man:
-                part = self.read_table(name, parts=[cutoff_day])
-                # cast the literal to the bucket's own type (parsed in the
-                # same session tz the string above was rendered in)
-                cut_lit = F.lit(cutoff.strftime("%Y-%m-%d %H:%M:%S")).cast(
-                    part.schema["bucket"].dataType
-                )
-                boundary = part.filter(F.col("bucket") >= cut_lit)
-                self.commit_partitions(name, boundary, [cutoff_day])
-                # a boundary day none of whose rows survive left the manifest
-                if cutoff_day in self._m.parts(name):
-                    self.last_expire_stats["rewritten_parts"] = [cutoff_day]
-                else:
-                    self.last_expire_stats["dropped_parts"] = sorted(
-                        expired + [cutoff_day]
-                    )
+            if trim:
+                # rows of other days lie below the day's start (00:00 on
+                # the clock the labels were written on) or past the cutoff;
+                # both bounds carry their offset (TIMESTAMP), so the same
+                # rows hide under any reading session timezone
+                t = self._m.schema(name)["bucket"].dataType
+                start, cut = (_sql_lit(b.isoformat(" "), t) for b in (
+                    cutoff.replace(hour=0, minute=0, second=0, microsecond=0),
+                    cutoff))
+                self._m.trim(name, {cutoff_day: (
+                    f"bucket IS NULL OR bucket < {start} OR bucket >= {cut}")})
 
     def expire_snapshots(self, keep: int = 2) -> None:
         """Keep each table's newest ``keep`` versions and delete the commit

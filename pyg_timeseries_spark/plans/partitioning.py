@@ -44,15 +44,6 @@ def repartition_for_rollup(df: DataFrame, key: str = "source", ts: str = "ts",
     return df.repartition(parts, F.col(key), F.date_trunc("hour", F.col(ts)))
 
 
-def repartition_series(df: DataFrame, key: str = "key", ts: str = "ts",
-                       n_partitions: int | None = None) -> DataFrame:
-    """Range-partition a long series frame by (key, ts): each partition holds
-    a contiguous time slice of few keys — the layout the per-key kernels and
-    window operators want (sortWithinPartitions then costs no shuffle)."""
-    parts = n_partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartitionByRange(parts, F.col(key), F.col(ts)).sortWithinPartitions(key, ts)
-
-
 def time_segments(df: DataFrame, n_segments: int, ts: str = "ts") -> list:
     """Global time-range boundaries splitting df into n contiguous segments
     (computed from min/max — one cheap agg; boundaries are data-independent

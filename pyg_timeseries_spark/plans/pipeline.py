@@ -61,16 +61,18 @@ class TimeseriesEngine:
             F.col(v).cast("double").alias("v"),
         )
         prior = self.store.read_state(op_name)
-        cut_rows = None
         if prior is not None and new_only:
             # state rows carry no timestamp; the op watermark is tracked in meta
             cut = self.store.meta.get("op_watermark", {}).get(op_name)
             if cut is not None:
-                src = src.filter(F.col("ts") > F.lit(cut).cast("timestamp"))
+                src = src.filter(
+                    F.col("ts") > F.lit(cut).cast(df.schema["bucket"].dataType))
         data, state = op_(src, state_df=prior, **op_kwargs)
-        hi = df.select(F.max("bucket")).first()[0]
-        # the watermark lands in the same manifest swap as the state
-        self.store.meta.setdefault("op_watermark", {})[op_name] = str(hi)
+        # the tier's max bucket as text on its own clock (a TIMESTAMP with
+        # its offset), read from footers; it lands in the state's swap
+        hi = self.store.newest_bucket(f"rollup_{tier}")
+        self.store.meta.setdefault("op_watermark", {})[op_name] = (
+            hi and hi.isoformat(" "))
         self.store.write_state(op_name, state)
         return data
 

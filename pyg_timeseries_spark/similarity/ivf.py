@@ -37,15 +37,6 @@ def _ivec(vec_col):
     )
 
 
-def _int_l2(ivec_col, centroid: list[int]):
-    c = F.array(*[F.lit(int(x)) for x in centroid])
-    return F.aggregate(
-        F.zip_with(ivec_col, c, lambda a, b: (a - b) * (a - b)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def seed_centroids(corpus: DataFrame, n_clusters: int, id_col: str = "vec_id",
                    vec: str = "embedding") -> list[list[int]]:
     """The quantized vectors of the ``n_clusters`` corpus rows with the

@@ -106,21 +106,6 @@ def merge_tier_sql(table: str, delta_view: str, with_tokens: bool = False,
     )
 
 
-def rebuild_cells_merge_sql(table: str, rebuilt_view: str) -> str:
-    """exact_rebuild path: REPLACE matched cells with the recomputed row
-    (instead of combining) — the MERGE rendition of _rebuild_overlaps."""
-    cols = ["cnt", "sum_n_tok", "sum2_n_tok", "sum3_n_tok", "min_n_tok",
-            "max_n_tok", "first_ts", "last_ts"]
-    sets = ",\n  ".join(f"t.{c} = s.{c}" for c in cols)
-    return (
-        f"MERGE INTO {table} t\n"
-        f"USING {rebuilt_view} s\n"
-        "ON t.source = s.source AND t.bucket = s.bucket\n"
-        f"WHEN MATCHED THEN UPDATE SET\n  {sets}\n"
-        "WHEN NOT MATCHED THEN INSERT *"
-    )
-
-
 def time_travel_sql(table: str, snapshot_id: int) -> str:
     return f"SELECT * FROM {table} VERSION AS OF {snapshot_id}"
 

@@ -1,6 +1,8 @@
 """End-to-end engine: incremental ingest + resumable EWM over the 1m tier +
 Gorilla compression + lineage — incremental == full, bit-for-bit."""
 
+import time
+
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -9,9 +11,10 @@ from pyg_timeseries_spark.operators.ewm import ewma_
 from pyg_timeseries_spark.plans.pipeline import TimeseriesEngine
 
 
-def test_engine_end_to_end_incremental(spark, tmp_path):
-    raw = sequences(spark, 20_000, with_tokens=False).persist()
-    cut = F.lit("2024-01-01 01:30:00").cast("timestamp")
+def _incremental_apply_equals_sweep(spark, tmp_path, raw, cut):
+    """Ingest raw below/above ``cut`` with a resumable ewma_ pass after each
+    ingest; the two passes together must equal one pass over all of raw."""
+    cut = F.lit(cut).cast("timestamp")
     head = raw.filter(F.col("ts") < cut)
     tail = raw.filter(F.col("ts") >= cut)
 
@@ -41,6 +44,12 @@ def test_engine_end_to_end_incremental(spark, tmp_path):
     assert np.array_equal(fullp["ewma"].to_numpy(), inc, equal_nan=True), (
         "incremental operator pass != full pass"
     )
+    return inc_eng
+
+
+def test_engine_end_to_end_incremental(spark, tmp_path):
+    raw = sequences(spark, 20_000, with_tokens=False).persist()
+    inc_eng = _incremental_apply_equals_sweep(spark, tmp_path, raw, "2024-01-01 01:30:00")
 
     # compression round-trip on the tier
     chunks = inc_eng.compress_tier("1m")
@@ -51,3 +60,23 @@ def test_engine_end_to_end_incremental(spark, tmp_path):
     # lineage recorded both batches
     lin = inc_eng.lineage().toPandas()
     assert set(lin.batch_id) == {1, 2}
+    raw.unpersist()
+
+
+def test_apply_watermark_on_session_clock(spark, tmp_path, monkeypatch):
+    """The op watermark is the tier's max bucket on the session clock, not
+    on the driver process's: with the process in New York and the session
+    in UTC, the second pass starts after the first pass's last bucket."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        raw = sequences(spark, 20_000, interval_s=5, with_tokens=False).persist()
+        inc_eng = _incremental_apply_equals_sweep(
+            spark, tmp_path, raw, "2024-01-01 12:00:00")
+        assert inc_eng.store.meta["op_watermark"]["ewma10"] == (
+            inc_eng.tier("1m").select(F.max("bucket").cast("string")).first()[0]
+            + "+00:00")
+        raw.unpersist()
+    finally:
+        monkeypatch.undo()
+        time.tzset()

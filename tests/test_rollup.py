@@ -4,6 +4,8 @@ ingest(full), bit-for-bit including token arrays.
 """
 
 import pytest
+import os
+
 from pyspark.sql import functions as F
 
 from pyg_timeseries_spark.datagen import sequences
@@ -81,7 +83,6 @@ def test_incremental_equals_full(spark, raw, tmp_path):
 def test_ingest_is_o_delta(spark, tmp_path):
     """The scale claim made executable: merging a batch reads only the
     day-partitions the delta touches — never the full rollup history."""
-    import os
     from urllib.parse import urlparse
 
     raw = sequences(spark, 20_000, interval_s=60).persist()  # ~7-14 days/source
@@ -282,8 +283,6 @@ def test_lineage_per_stage(spark, raw, tmp_path):
 def test_expire_snapshots_manifest_gc(spark, raw, tmp_path):
     """expire_snapshots keeps every commit a live manifest references and
     removes the rest; the current view is unaffected."""
-    import os
-
     cut = F.lit("2024-01-01 03:00:00").cast("timestamp")
     store = RollupStore(str(tmp_path / "gc"), spark)
     store.ingest(raw.filter(F.col("ts") < cut))
@@ -309,43 +308,56 @@ def test_retention_expiry(spark, raw, tmp_path):
     per_src = after.groupBy("source").count().toPandas()
     assert (per_src["count"] <= 10).all()
     assert after.count() < before
-    assert store.last_expire_stats["rewritten_parts"] == ["2024-01-01"]
+    assert store.last_expire_stats["trimmed_parts"] == ["2024-01-01"]
 
 
 def test_expire_is_metadata_only(spark, tmp_path):
-    """The scale claim for retention made executable: expiring history drops
-    whole day-partitions from the manifest WITHOUT reading or rewriting them
-    (their manifest entries still point at the ORIGINAL commit version), and
-    rewrites at most the one boundary day the cutoff bisects."""
+    """The scale claim for retention made executable: expiring history runs
+    no Spark job and writes no file.  Whole day-partitions leave the
+    manifest unread, and the one boundary day the cutoff bisects keeps its
+    ORIGINAL commit, trimmed at read by a row predicate."""
     import datetime as dt
 
     raw = sequences(spark, 20_000, interval_s=60).persist()  # ~7 days on web
     store = RollupStore(str(tmp_path / "meta_ttl"), spark)
     store.ingest(raw, with_lineage=False)
     full = store.read_table("rollup_1m").persist()
+    tokens = store.read_tokens("1m").persist()
     max_b = full.select(F.max("bucket")).first()[0]
     all_days = sorted(
         r[0] for r in full.select(F.to_date("bucket").cast("string")).distinct().collect()
     )
     assert len(all_days) >= 5, "fixture must span multiple days"
 
+    def files():
+        return {os.path.join(d, f) for d, _, fs in os.walk(store.path) for f in fs}
+
     keep = 2 * 1440 + 30  # 2 days + 30 min back from max → mid-day cutoff
+    before, sc = files(), spark.sparkContext
+    sc.setJobGroup("expire", "expire")
     store.expire("1m", keep_buckets=keep)
     stats = store.last_expire_stats
-    # ≤1 partition rewritten; everything older dropped metadata-only
-    assert len(stats["rewritten_parts"]) == 1
-    boundary = stats["rewritten_parts"][0]
+    store.expire_tokens(keep_buckets=keep)
+    assert len(sc.statusTracker().getJobIdsForGroup("expire")) == 0
+    sc.setJobGroup(None, None)
+    # only the manifest changed: no data file written or removed
+    assert files() == before
+    # one partition trimmed; everything older dropped metadata-only
+    assert len(stats["trimmed_parts"]) == 1
+    boundary = stats["trimmed_parts"][0]
     assert stats["dropped_parts"] == [d for d in all_days if d < boundary]
-    # surviving untouched days still point at their ORIGINAL commit (v1):
-    # proof no survivor was scanned or rewritten
+    # every surviving day, the trimmed one included, still points at its
+    # ORIGINAL commit (v1): proof no survivor was scanned or rewritten
     man = store._m.parts("rollup_1m")
-    untouched = set(man) - {boundary}
-    assert untouched and all(man[d] == [1] for d in untouched)
+    assert boundary in man and all(vs == [1] for vs in man.values())
     # the view equals a plain bucket filter of the pre-expire table
-    cutoff = max_b - dt.timedelta(seconds=(keep - 1) * 60)
-    expect = full.filter(F.col("bucket") >= F.lit(cutoff))
-    assert rows_of(store.read_table("rollup_1m")) == rows_of(expect)
+    cutoff = F.lit(max_b - dt.timedelta(seconds=(keep - 1) * 60))
+    assert rows_of(store.read_table("rollup_1m")) == rows_of(
+        full.filter(F.col("bucket") >= cutoff))
+    assert rows_of(store.read_tokens("1m")) == rows_of(
+        tokens.filter(F.col("bucket") >= cutoff))
     full.unpersist()
+    tokens.unpersist()
     raw.unpersist()
 
 
@@ -372,12 +384,129 @@ def test_expire_empty_boundary_drops_not_commits(spark, tmp_path):
     # 2024-01-01 but AFTER that day's last row (00:29)
     store.expire("1m", keep_buckets=2 * 1440 + 700)
     stats = store.last_expire_stats
-    assert stats["rewritten_parts"] == []
+    assert stats["trimmed_parts"] == []
     assert stats["dropped_parts"] == ["2024-01-01"]
     # the store stays fully readable and holds exactly the newer day
     left = store.read_table("rollup_1m")
     assert left.count() == 30
     assert left.select(F.min("bucket")).first()[0].day == 3
+
+
+def _minutes(spark, stamps):
+    """One 'web' row per timestamp text (session clock; None: a NULL ts);
+    n_tok comes from the hour and minute, the token array is n_tok copies
+    of n_tok."""
+    return spark.createDataFrame(
+        [("web", t, t and (int(t[11:13]) + int(t[14:16])) % 7 + 1 or 1)
+         for t in stamps],
+        "source string, ts string, n_tok int",
+    ).select("source", F.col("ts").cast("timestamp").alias("ts"), "n_tok",
+             F.array_repeat("n_tok", "n_tok").alias("tokens"))
+
+
+def _every_10_min(day, minute=0, hours=range(24)):
+    return [f"{day} {h:02d}:{m + minute:02d}:00" for h in hours for m in range(0, 60, 10)]
+
+
+def test_trim_predicate_lifecycle(spark, tmp_path):
+    """The boundary day's row predicate lives until a commit re-points the
+    day: a late batch into an older day is visible, a batch into the
+    trimmed day re-points it (its expired rows stay hidden, its own rows
+    show), and compact after an expire keeps the rows and clears it.  A
+    second expire into the trimmed day narrows its predicate, and a
+    session in another timezone reads the same rows.  A
+    NULL-ts row (a partition without a date label) neither stops the
+    expire nor expires."""
+    days = ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"]
+    base = [t for d in days for t in _every_10_min(d)]
+    late_old = _every_10_min("2024-01-02", minute=5, hours=(10, 11))
+    into_trimmed = _every_10_min("2024-01-03", minute=5, hours=(6, 18))
+    store = RollupStore(str(tmp_path / "trim"), spark)
+    store.ingest(_minutes(spark, base + [None]), with_lineage=False)
+
+    def check(stamps, label):
+        ref = RollupStore(str(tmp_path / f"ref_{label}"), spark)
+        ref.ingest(_minutes(spark, stamps), with_lineage=False)
+        assert rows_of(store.read_table("rollup_1m")) == rows_of(
+            ref.read_table("rollup_1m")), label
+        assert rows_of(store.read_tokens("1m")) == rows_of(ref.read_tokens("1m")), label
+
+    # max 01-04 23:50, keep 35h50m + 1 bucket → cutoff 01-03 12:00
+    store.expire("1m", keep_buckets=2151)
+    store.expire_tokens(keep_buckets=2151)
+    assert store.last_expire_stats == {"dropped_parts": days[:2],
+                                       "trimmed_parts": ["2024-01-03"]}
+    kept = [None] + [t for t in base if t >= "2024-01-03 12:00:00"]
+    check(kept, "expired")
+
+    # a second trim of the day only narrows it: a larger keep puts the
+    # cutoff at 01-03 11:11, and no expired row comes back
+    store.expire("1m", keep_buckets=2200)
+    store.expire_tokens(keep_buckets=2200)
+    assert store.last_expire_stats == {"dropped_parts": [],
+                                       "trimmed_parts": ["2024-01-03"]}
+    check(kept, "re-expired")
+
+    # the predicate's bounds are instants: a New York session reading the
+    # store expired under UTC hides the same rows (01-03 00:00-04:59 UTC
+    # fall on the New York 01-02)
+    def instants():
+        return [exact_rows(df.select(*(
+            F.unix_micros(f.name).alias(f.name)
+            if f.dataType.typeName() == "timestamp" else f.name
+            for f in df.schema)))
+            for df in (store.read_table("rollup_1m"), store.read_tokens("1m"))]
+    utc = instants()
+    tz_key = "spark.sql.session.timeZone"
+    old = spark.conf.get(tz_key)
+    spark.conf.set(tz_key, "America/New_York")
+    try:
+        assert instants() == utc
+    finally:
+        spark.conf.set(tz_key, old)
+
+    store.ingest(_minutes(spark, late_old), with_lineage=False)
+    check(kept + late_old, "late_old")
+
+    store.ingest(_minutes(spark, into_trimmed), with_lineage=False)
+    version = store.meta["tables"]["rollup_1m"]["version"]
+    assert store._m.parts("rollup_1m")["2024-01-03"] == [version]
+    assert store._m._preds("rollup_1m") == {}
+    assert store._m._preds("tokens_1m") == {}
+    check(kept + late_old + into_trimmed, "into_trimmed")
+
+    # a second expire trims 01-04; compact re-points it with the same rows
+    pre = store.read_table("rollup_1m")  # its files stay: a lazy old view
+    store.expire("1m", keep_buckets=1071)  # cutoff 01-04 06:00
+    assert store.last_expire_stats["trimmed_parts"] == ["2024-01-04"]
+    before = rows_of(store.read_table("rollup_1m"))
+    cut = F.lit("2024-01-04 06:00:00").cast("timestamp")
+    assert before == rows_of(pre.filter(
+        (F.col("bucket") >= cut) | F.col("bucket").isNull()))
+    store.compact("rollup_1m", max_files=0)
+    assert store._m._preds("rollup_1m") == {}
+    assert rows_of(store.read_table("rollup_1m")) == before
+
+
+def test_expire_reads_int96_footers(spark, tmp_path, monkeypatch):
+    """Commits written with INT96 timestamps (no footer min/max, as before
+    the footers carried stats) still expire exactly; reading the max
+    bucket then costs a Spark job."""
+    import pyg_timeseries_spark.plans.manifest as M
+
+    days = ["2024-01-01", "2024-01-02"]
+    raw = _minutes(spark, [t for d in days for t in _every_10_min(d)])
+    store = RollupStore(str(tmp_path / "int96"), spark)
+    monkeypatch.setattr(M, "_TS_STORED", "INT96")
+    store.ingest(raw, with_lineage=False)
+    monkeypatch.undo()
+    assert store._m.file_stats("rollup_1m", 1, "bucket")["2024-01-02"][1:] == (None, None)
+    store.expire("1m", keep_buckets=12 * 60 - 9)  # max 01-02 23:50 → cutoff 12:00
+    assert store.last_expire_stats == {"dropped_parts": ["2024-01-01"],
+                                       "trimmed_parts": ["2024-01-02"]}
+    cut = F.lit("2024-01-02 12:00:00").cast("timestamp")
+    assert rows_of(store.read_table("rollup_1m")) == rows_of(
+        rollup_from_raw(raw.filter(F.col("ts") >= cut), "1m", tokens=None))
 
 
 def test_ingest_scan_stats_opt_in(spark, raw, tmp_path):
@@ -747,7 +876,7 @@ def test_ingest_under_non_utc_session(spark, tmp_path, tz, ts_type, day):
     batches cut mid-day equal a one-shot ingest at every tier and in
     read_tokens, for TIMESTAMP and TIMESTAMP_NTZ ``ts``; across a DST
     fall-back both 01:00 hours stay separate cells, as in the direct
-    cascade."""
+    cascade.  An expire at a mid-day cutoff then equals a bucket filter."""
     import datetime as dt
 
     tz_key = "spark.sql.session.timeZone"
@@ -773,6 +902,20 @@ def test_ingest_under_non_utc_session(spark, tmp_path, tz, ts_type, day):
                 direct[tier]), tier
             assert exact_rows(inc.read_tokens(tier)) == exact_rows(
                 full.read_tokens(tier)), tier
+        # retention at a mid-day cutoff (New York: inside the repeated
+        # 01:00 hour) equals a plain bucket filter at the cutoff computed
+        # as the text arithmetic on the session clock always computed it
+        full_1m, full_tok = full.read_table("rollup_1m"), full.read_tokens("1m")
+        max_s = full_1m.select(F.max("bucket").cast("string")).first()[0]
+        cut_s = f"{day} 01:37:00"
+        keep = (dt.datetime.fromisoformat(max_s)
+                - dt.datetime.fromisoformat(cut_s)) // dt.timedelta(minutes=1) + 1
+        inc.expire("1m", keep)
+        assert inc.last_expire_stats == {"dropped_parts": [], "trimmed_parts": [day]}
+        inc.expire_tokens(keep)
+        kept = F.col("bucket") >= F.lit(cut_s).cast(ts_type)
+        assert exact_rows(inc.read_table("rollup_1m")) == exact_rows(full_1m.filter(kept))
+        assert exact_rows(inc.read_tokens("1m")) == exact_rows(full_tok.filter(kept))
         raw.unpersist()
     finally:
         spark.conf.set(tz_key, old)
