@@ -1442,9 +1442,9 @@ def q_rollup_sketches(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="sketchstore_")
     store = RollupStore(base, spark)
     store.ingest(raw.filter(F.col("doc_id") % 2 == 0), tokens=None,
-                 sketch_id="doc_id", with_lineage=False)
+                 sketch_id="doc_id")
     store.ingest(raw.filter(F.col("doc_id") % 2 == 1), tokens=None,
-                 sketch_id="doc_id", with_lineage=False)
+                 sketch_id="doc_id")
     st = store.sketch_stats("1d")
     res = st.select(
         "source", F.col("bucket").alias("day"), "cnt", "n_kept",
@@ -1478,10 +1478,8 @@ def q_retention_expire(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="retention_")
     store = RollupStore(base, spark)
     split = F.lit("2024-01-16").cast("timestamp")
-    store.ingest(raw.filter(F.col("ts") < split), tokens=None,
-                 with_lineage=False)
-    store.ingest(raw.filter(F.col("ts") >= split), tokens=None,
-                 with_lineage=False)
+    store.ingest(raw.filter(F.col("ts") < split), tokens=None)
+    store.ingest(raw.filter(F.col("ts") >= split), tokens=None)
     store.expire("1m", keep_buckets=10 * 1440 + 30)
     store.compact("rollup_1m", max_files=1)
     res = store.read_table("rollup_1m").select(
@@ -1582,10 +1580,8 @@ def q_ingest_lineage(spark, sf_dir):
     base = tempfile.mkdtemp(prefix="lineage_")
     store = RollupStore(base, spark)
     split = F.lit("2024-01-16").cast("timestamp")
-    store.ingest(raw.filter(F.col("ts") < split), tokens=None,
-                 with_lineage=True)
-    store.ingest(raw.filter(F.col("ts") >= split), tokens=None,
-                 with_lineage=True)
+    store.ingest(raw.filter(F.col("ts") < split), tokens=None)
+    store.ingest(raw.filter(F.col("ts") >= split), tokens=None)
     lin = store.lineage().groupBy("batch_id", "stage").agg(
         F.sum("rows").alias("rows")
     )

@@ -103,7 +103,8 @@ def kernel_map(
 
     Per group: the rows arrive over Arrow, are sorted by ``ts``, and
     ``run(pdf, state)`` returns ``(*out_columns, final_state)`` — one
-    column per name in ``outs``.  ``state`` is the key's prior state from
+    column per name in ``outs``, appended, or replacing in place an input
+    column of the same name.  ``state`` is the key's prior state from
     ``state_df`` (rows ``(*keys, state)``), or None when the key has none
     or its length is not in ``state_lens`` (None accepts any length).  With ``with_state`` the
     final state is packed into ``STATE_COL`` on the group's last row (NULL
@@ -117,7 +118,9 @@ def kernel_map(
         prior = state_df.select(*keys, F.col("state").alias(PRIOR_COL))
         src = df.join(F.broadcast(prior), on=keys, how="left")
     in_cols = [f.name for f in df.schema.fields]
-    fields = list(df.schema.fields) + [T.StructField(c, out_type) for c in outs]
+    fields = [T.StructField(f.name, out_type) if f.name in outs else f
+              for f in df.schema.fields]
+    fields += [T.StructField(c, out_type) for c in outs if c not in in_cols]
     if with_state:
         fields.append(T.StructField(STATE_COL, T.ArrayType(T.DoubleType())))
 

@@ -182,32 +182,13 @@ def ewfill(
 ) -> DataFrame:
     """Two-sided exponential-decay fill toward ``decay_target`` (reference
     _rolling.py:155-179, 600-626) — per-key vectorized numpy kernel under
-    applyInPandas (inherently forward+backward, not window-expressible)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
+    applyInPandas (inherently forward+backward, not window-expressible);
+    ``out`` defaults to ``v``, replaced in place."""
     from pyg_timeseries_spark.kernels.recurrence_numpy import ewfill as kernel
+    from pyg_timeseries_spark.operators._core import f64, kernel_map
 
-    out = out or v
-    in_cols = [f.name for f in df.schema.fields]
-    fields = [
-        f if f.name != out else T.StructField(out, T.DoubleType())
-        for f in df.schema.fields
-    ]
-    if out not in in_cols:
-        fields = list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    out_schema = T.StructType(fields)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        res, _ = kernel(a, fwd_n, bwd_n, decay_target)
-        pdf = pdf[in_cols].copy()
-        pdf[out] = res
-        return pdf
-
-    return df.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, key, ts, [out or v], lambda pdf, _: kernel(
+        f64(pdf, v), fwd_n, bwd_n, decay_target))
 
 
 def interp(

@@ -327,28 +327,13 @@ def rolling_quantile_heap(df: DataFrame, n: int, q: float,
     (kernels/quantile_numpy.py) under applyInPandas — the scale path for
     large n where the JVM percentile's O(n log n) per-row re-sort loses;
     supports the pandas min_periods warm-up ramp."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from pyg_timeseries_spark.kernels.quantile_numpy import (
         rolling_quantile_heap as kernel,
     )
+    from pyg_timeseries_spark.operators._core import f64, kernel_map
 
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    )
-    in_cols = [f.name for f in df.schema.fields]
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        res, _ = kernel(a, n, q, min_periods=min_periods)
-        pdf = pdf[in_cols].copy()
-        pdf[out] = res
-        return pdf
-
-    return df.groupBy(key).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, key, ts, [out], lambda pdf, _: kernel(
+        f64(pdf, v), n, q, min_periods=min_periods))
 
 
 def rolling_rsi(df: DataFrame, n: int = 14, key: str = KEY, ts: str = TS,

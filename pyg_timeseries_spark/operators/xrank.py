@@ -19,12 +19,10 @@ Two implementations:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from pyg_timeseries_spark.operators._core import KEY, TS, VAL
+from pyg_timeseries_spark.operators._core import KEY, TS, VAL, f64, kernel_map
 
 
 def xrank_kernel(a, w=None, b=None, vol: float = 0.0, scale: int = 0,
@@ -85,23 +83,15 @@ def xrank(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL,
           weight: str | None = None, beta: str | None = None,
           vol: float = 0.0, scale: int = 0, reweight: bool = False,
           out: str = "xrank") -> DataFrame:
-    """Exact cross-sectional rank per timestamp via applyInPandas."""
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.DoubleType())]
-    )
-    in_cols = [f.name for f in df.schema.fields]
+    """Exact cross-sectional rank per timestamp: one kernel_map pass
+    grouped on ``ts``, each cross-section sorted by ``key``."""
+    def run(pdf, _):
+        w = f64(pdf, weight) if weight else None
+        b = f64(pdf, beta) if beta else None
+        return xrank_kernel(f64(pdf, v), w, b, vol=vol, scale=scale,
+                            reweight=reweight), None
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(key, kind="mergesort").reset_index(drop=True)
-        a = pdf[v].to_numpy(dtype=np.float64, na_value=np.nan)
-        w = pdf[weight].to_numpy(float) if weight else None
-        b = pdf[beta].to_numpy(float) if beta else None
-        r = xrank_kernel(a, w, b, vol=vol, scale=scale, reweight=reweight)
-        outp = pdf[in_cols].copy()
-        outp[out] = r
-        return outp
-
-    return df.groupBy(ts).applyInPandas(fn, schema=out_schema)
+    return kernel_map(df, ts, key, [out], run)
 
 
 def xrank_simple(df: DataFrame, key: str = KEY, ts: str = TS, v: str = VAL,

@@ -14,28 +14,26 @@ immutable commit directories, one atomic manifest swap per store operation
 the batch counter together), and a per-partition manifest so a commit
 rewrites ONLY the day-partitions its delta touches.  Time-travel = read an
 older manifest.  With Iceberg jars the same operations map to
-``writeTo(...).append()`` / ``MERGE INTO`` (gated in sources/tables.py).
+``writeTo(...).append()`` / ``MERGE INTO`` tier by tier
+(sources/iceberg.py: each tier MERGEs the batch's cells the way ``ingest``
+merges them here).
 
 O(delta) ingest (the engine's core scale claim — at 10^12 sequences the
 rollup history is petabytes; re-aggregating it per batch is the scale-killer):
 
-* one collect over the delta names what it touches — its
-  day-partitions, 1h and 1d cells and each source's lowest 1m bucket, as
-  text on the bucket's own clock — applied back as literal filters (an
-  InSet of (source, bucket) structs, a per-source lower bound);
+* one collect over the delta names what it touches — its day-partitions
+  and each source's lowest 1m bucket, as text on the bucket's own clock;
 * the existing tier is READ only for the touched day-partitions (the
   manifest lists only their directories — cold history is never scanned);
-* 1m is ONE merge aggregate over prev(touched) ∪ delta: a one-row cell
-  passes through bit-for-bit, a cell in both merges by the associative
-  algebra (under ``exact_rebuild``: is recomputed from retained raw);
-  token chunks below a source's lowest delta bucket skip the shuffle, the
-  rest re-chunk in the one aggregate that chunks the batch's raw rows;
-* coarser tiers recompute the affected cells from the child's new commit
-  (1h from 1m, 1d from 1h: a scan of the files just written costs no job,
-  a persisted frame one more) and keep the other rows of the touched
-  partitions — exact under any arrival order, because a parent cell is
-  always rebuilt from ALL of its child rows, and O(delta) because a parent
-  cell has a bounded child fan-in (60 or 24 rows per source);
+* every tier is ONE merge aggregate over prev(touched) ∪ the batch's 1m
+  rows (at 1h and 1d with the bucket truncated to the tier): a one-row
+  cell passes through bit-for-bit, a cell in both merges by the
+  associative algebra — order-free, so exact under any arrival order, and
+  a coarse cell keeps the share of finer rows an expire removed;
+* token payloads live once, in ``tokens_1m``: chunks below a source's
+  lowest delta bucket skip the shuffle, the rest re-chunk in the one
+  aggregate that chunks the batch's raw rows (under ``exact_rebuild``, a
+  bucket in both is re-chunked from retained raw);
 * lineage runs no Spark job: raw rows come from an Observation on the
   batch, commit rows per day-partition from the new files' parquet
   footers, and the records land in the store metadata with the swap.
@@ -61,7 +59,7 @@ Layout::
                                    #  batches, raw_complete, lineage: [...],
                                    #  op_watermark: {op: bucket text}}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
-      tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows (chunked mode)
+      tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows
       raw/v{N}/*.parquet           # retained raw batches (exact_rebuild)
       state_{op}/v{N}/*.parquet    # operator state rows (key, state[])
 """
@@ -80,7 +78,7 @@ from pyspark.sql.types import TimestampType
 
 from pyg_timeseries_spark.plans.manifest import Manifest
 from pyg_timeseries_spark.plans.rollup import (
-    MAX_TOKENS_PER_ROW, bucket_col, merge_rollup, rollup_cascade,
+    MAX_TOKENS_PER_ROW, TIERS, bucket_col, merge_rollup, rollup_cascade,
     rollup_from_raw, token_chunk_rows, tokens_at_tier,
 )
 
@@ -140,13 +138,11 @@ def _as_stored(t: _dt.datetime) -> int:
 
 
 def _delta_cells(delta: DataFrame) -> list:
-    """The batch's one collect: per source its lowest 1m bucket
-    (``lo``), its 1h and 1d cells and its day-partitions, all as text."""
+    """The batch's one collect: per source its lowest 1m bucket (``lo``,
+    as text on the bucket's own clock) and its day-partitions."""
     dt = delta.schema["bucket"].dataType
     return delta.groupBy("source").agg(
         _clock_text(F.min("bucket"), dt).alias("lo"),
-        *(F.collect_set(_clock_text(bucket_col("bucket", t, delta), dt)).alias(t)
-          for t in ("1h", "1d")),
         F.collect_set(F.expr(_PDAY)).alias("days"),
     ).collect()
 
@@ -157,14 +153,6 @@ def _sql_lit(v, t) -> str:
     py4j call per literal costs about a second per hundred cells."""
     x = f"CAST(X'{str(v).encode().hex()}' AS STRING)" if v is not None else "NULL"
     return f"CAST({x} AS {t.simpleString()})"
-
-
-def _in_cells(cells: list, bucket: str, key_t, bucket_t) -> Column:
-    """(source, column ``bucket``) is one of the ``cells`` text pairs — an
-    InSet of struct literals."""
-    return F.expr(f"named_struct('s', source, 'b', `{bucket}`) IN (" + ", ".join(
-        f"named_struct('s', {_sql_lit(s, key_t)}, 'b', {_sql_lit(b, bucket_t)})"
-        for s, b in cells) + ")")
 
 
 def _lower_bound(lo: dict, key_t, bucket_t) -> Column:
@@ -245,21 +233,24 @@ class RollupStore:
         v: str = "n_tok",
         tokens: str | None = "tokens",
         key: str = "source",
-        with_lineage: bool = True,
         with_scan_stats: bool = False,
         exact_rebuild: bool = False,
-        token_mode: str = "chunked",
         chunk_cap: int = MAX_TOKENS_PER_ROW,
         sketch_id: str | None = None,
     ) -> dict[str, DataFrame]:
         """Append a raw batch: roll it up, merge into each tier, commit.
 
-        Exactness argument: 1m cells touched by the delta are either merged
-        with the associative bucket algebra (append contract: batches arrive
-        time-ordered per key) or, under ``exact_rebuild``, recomputed from
-        retained raw; every coarser-tier cell a delta touches is rebuilt from
-        ALL of its child rows — so ingest(head); ingest(tail) == ingest(full)
-        row-for-row including token arrays.
+        Exactness argument: every tier cell the batch touches is merged
+        from its previous row and the batch's 1m rows by the associative
+        bucket algebra — integer sums, min/max and sketch unions, all
+        order-free — so ingest(head); ingest(tail) == ingest(full) at every
+        tier under any arrival order, and a coarse cell keeps the share of
+        finer rows an earlier expire removed.  Token payloads live once, in
+        ``tokens_1m``, as bounded part-rows of at most ``chunk_cap`` tokens
+        concatenated in append order (batches time-ordered per key); tiers
+        carry measures only and payloads flatten at read (read_tokens, which
+        the tokens_cascade driver oracle checks against the one-shot
+        cascade).
 
         Cost argument (O(delta), not O(history)): only delta-touched
         day-partitions are read (manifest pruning) and rewritten, and each
@@ -269,25 +260,17 @@ class RollupStore:
         last_ingest_stats (diagnostic count actions over the pruned prev
         scans, so off by default).
 
-        ``exact_rebuild`` lifts the append contract entirely: raw batches are
-        retained in the store and any 1m cell touched by BOTH history and
-        this batch (an interleaving late arrival) is recomputed from retained
-        raw.  Requires every prior batch to have retained raw (guarded).
+        ``exact_rebuild`` lifts the append contract for token order: raw
+        batches are retained in the store and any 1m token bucket touched
+        by BOTH history and this batch (an interleaving late arrival) is
+        re-chunked from retained raw.  Requires every prior batch to have
+        retained raw (guarded).
 
         ``sketch_id`` names an id column of the raw batch (e.g. doc_id):
         every tier cell then also carries a KMV distinct-count sketch of
         the ids and a bottom-k (id, v) sample for mergeable quantiles
         (plans/rollup.py sketch measures).  Both merge exactly, so the
         incremental invariant extends to the sketch columns bit-for-bit.
-
-        ``token_mode``: 'chunked' (the default — the 100 TB-safe shape)
-        stores token payloads ONCE at 1m granularity as bounded part-rows
-        ≤ ``chunk_cap`` tokens (tokens_1m table; coarser tiers are
-        measures-only and token payloads flatten at read via read_tokens,
-        which the tokens_cascade driver oracle checks end-to-end against
-        the array-mode 1d rows).  'array' (compat) carries payloads inside
-        the tier rows — concatenated per bucket, so a hot (source, day) at
-        the 1d tier becomes ONE unbounded row; use only at small scale.
         """
         # every table this batch changes, the lineage and the batch counter
         # land in one manifest swap: a crash at any step leaves the store as is
@@ -298,107 +281,87 @@ class RollupStore:
             if exact_rebuild:
                 self._m.commit("raw", raw, append=True)
 
-            chunked = tokens is not None and token_mode == "chunked"
-            tier_tokens = None if chunked else tokens
-
-            def roll(r):
-                return rollup_from_raw(r, "1m", ts=ts, v=v, tokens=tier_tokens,
-                                       key=key, sketch_id=sketch_id)
-
             def chunk(r, prev=None):
                 return token_chunk_rows(r, ts=ts, tokens=tokens, key=key,
                                         cap=chunk_cap, prev=prev)
 
-            observed = raw
-            if with_lineage:
-                obs = Observation()
-                observed = raw.observe(obs, F.count(F.lit(1)).alias("rows"))
-            delta = roll(observed).persist()
+            obs = Observation()
+            delta = rollup_from_raw(
+                raw.observe(obs, F.count(F.lit(1)).alias("rows")), "1m", ts=ts,
+                v=v, tokens=None, key=key, sketch_id=sketch_id).persist()
             cells = _delta_cells(delta)
-            if with_lineage:  # no cell: an empty batch, maybe optimized away
-                self.record_lineage(batch_id, "raw",
-                                    {None: obs.get["rows"] if cells else 0})
+            # no cell: an empty batch, maybe optimized away
+            self.record_lineage(batch_id, "raw",
+                                {None: obs.get["rows"] if cells else 0})
             touched_parts = sorted({d for r in cells for d in r["days"]})
             self.last_ingest_stats = {"touched_parts": touched_parts}
             if not touched_parts:  # empty batch: nothing to merge or commit
                 delta.unpersist()
                 self.meta["batches"] = batch_id
-                return {t: self.read_table(f"rollup_{t}") for t in ("1m", "1h", "1d")}
-            key_t, bucket_t = (delta.schema[c].dataType for c in _CELL)
+                return {t: self.read_table(f"rollup_{t}") for t in TIERS}
 
-            def refresh(name, new, merge, rebuild=None):
-                """``new`` merged into the previous rows of ``name``'s touched
-                partitions (exact_rebuild: overlap cells ``rebuild`` from raw)."""
+            def prev_rows(name):
+                """The previous rows of ``name``'s touched partitions."""
                 prev = self.read_table(name, parts=touched_parts)
-                if prev is None:
-                    return new
-                if with_scan_stats:  # extra count action over the pruned prev scan
+                if prev is not None and with_scan_stats:  # extra count action
                     stat = "prev_rows_scanned_" + name.removeprefix("rollup_")
                     self.last_ingest_stats[stat] = prev.count()
-                if exact_rebuild and rebuild:
-                    return self._rebuild_overlaps(prev, new, rebuild, ts, key)
-                return merge(prev, new)
+                return prev
 
             def commit(name, df, stage=None):
                 version = self.commit_partitions(name, df, touched_parts)
-                if with_lineage and stage:
+                if stage:
                     stats = self._m.file_stats(name, version)
                     self.record_lineage(batch_id, stage,
                                         {p: st[0] for p, st in stats.items()})
                 return self.read_table(name)
 
-            # -- 1m: one merge aggregate over prev(touched) ∪ delta -------------
-            out = {"1m": commit("rollup_1m", refresh(
-                "rollup_1m", delta, lambda p, d: merge_rollup(
-                    p, d, with_tokens=tier_tokens is not None), roll), "commit_1m")}
+            # -- every tier: one merge aggregate over prev(touched) ∪ the
+            # batch's 1m rows, bucketed to the tier -----------------------------
+            out = {}
+            for tier in TIERS:
+                prev = prev_rows(f"rollup_{tier}")
+                if prev is not None:
+                    new = merge_rollup(prev, delta if tier == "1m" else delta.withColumn(
+                        "bucket", bucket_col("bucket", tier, delta)))
+                elif tier == "1m":  # already one row per cell: no aggregate job
+                    new = delta
+                else:
+                    new = rollup_cascade(delta, tier)
+                out[tier] = commit(f"rollup_{tier}", new, f"commit_{tier}")
 
-            # -- chunked token payload: one bounded-row table at 1m granularity --
-            if chunked:
-                def merge_chunks(prev_c, _):
+            # -- token payload: one bounded-row table at 1m granularity ---------
+            if tokens is not None:
+                new = chunk(raw)
+                prev = prev_rows("tokens_1m")
+                if prev is not None and exact_rebuild:
+                    new = self._rebuild_overlaps(prev, new, chunk, ts, key)
+                elif prev is not None:
                     # a source's chunks below its lowest delta bucket pass
                     # through unshuffled; the rest re-chunk with the raw rows
+                    key_t, bucket_t = (delta.schema[c].dataType for c in _CELL)
                     lo = _lower_bound({r["source"]: r["lo"] for r in cells},
                                       key_t, bucket_t)
                     late = F.coalesce(F.col("bucket") >= lo, F.lit(False))
-                    return prev_c.filter(~late).unionByName(
-                        chunk(raw, prev_c.filter(late)))
-
-                out["tokens_1m"] = commit(
-                    "tokens_1m", refresh("tokens_1m", chunk(raw), merge_chunks, chunk))
-
-            # -- coarser tiers: recompute the affected cells from the new child --
-            for child_t, tier in (("1m", "1h"), ("1h", "1d")):
-                child = self.read_table(f"rollup_{child_t}", parts=touched_parts)
-                tier_cells = [(r["source"], b) for r in cells for b in r[tier]]
-                affected = child.withColumn(
-                    "_cell", bucket_col("bucket", tier, child)
-                ).filter(_in_cells(tier_cells, "_cell", key_t, bucket_t))
-                # prev rows outside the affected cells stay: a finer tier may
-                # have expired the children they were built from
-                content = refresh(
-                    f"rollup_{tier}",
-                    rollup_cascade(affected, tier, with_tokens=tier_tokens is not None),
-                    lambda p, new: p.filter(~_in_cells(
-                        tier_cells, "bucket", key_t, bucket_t)).unionByName(new),
-                )
-                out[tier] = commit(f"rollup_{tier}", content, f"commit_{tier}")
+                    new = prev.filter(~late).unionByName(chunk(raw, prev.filter(late)))
+                out["tokens_1m"] = commit("tokens_1m", new)
             delta.unpersist()
             self.meta["batches"] = batch_id
             return out
 
-    def _rebuild_overlaps(self, prev, delta, rebuild, ts, key):
-        """The new content of the touched partitions under exact_rebuild:
-        prev rows of cells the delta misses, delta-only cells, and the
-        (source, bucket) cells present in both prev and the delta
-        recomputed from retained raw — the only cells where a concat-order
-        merge of measures or token chunks can diverge from a full recompute
-        (``rebuild`` maps the cells' raw rows to delta rows; a bucket's
+    def _rebuild_overlaps(self, prev, chunks, rebuild, ts, key):
+        """The new content of tokens_1m's touched partitions under
+        exact_rebuild: prev chunk rows of buckets the batch misses,
+        batch-only buckets, and the (source, bucket) cells present in both
+        prev and the batch re-chunked from retained raw — the only cells
+        where append-order concatenation can diverge from a full recompute
+        (``rebuild`` maps the cells' raw rows to chunk rows; a bucket's
         chunks are a pure function of its full ts-ordered content, so this
         is exact under out-of-order arrival)."""
-        cells = F.broadcast(delta.select(*_CELL).distinct())
+        cells = F.broadcast(chunks.select(*_CELL).distinct())
         keep = prev.join(cells, _CELL, "left_anti")
         ov_cells = prev.join(cells, _CELL, "left_semi").select(*_CELL).distinct()
-        delta_only = delta.join(F.broadcast(ov_cells), _CELL, "left_anti")
+        delta_only = chunks.join(F.broadcast(ov_cells), _CELL, "left_anti")
         if ov_cells.isEmpty():
             return keep.unionByName(delta_only)
         if not self.meta.get("raw_complete"):
@@ -415,7 +378,7 @@ class RollupStore:
 
     def read_tokens(self, tier: str = "1m") -> DataFrame | None:
         """Token payloads at any tier granularity, flattened at read from the
-        bounded 1m chunk rows (chunked token_mode only)."""
+        bounded 1m chunk rows."""
         chunks = self.read_table("tokens_1m")
         return None if chunks is None else tokens_at_tier(chunks, tier)
 

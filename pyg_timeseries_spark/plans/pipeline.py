@@ -51,7 +51,11 @@ class TimeseriesEngine:
         from (and updating) the state persisted under ``op_name``.
 
         With ``new_only`` the operator only processes buckets after the
-        state's checkpoint — incremental cost O(delta).
+        state's checkpoint — incremental cost O(delta).  The bucket AT the
+        checkpoint is not re-folded: if a later ingest merges rows into it
+        (a batch cut mid-bucket), the state keeps its earlier value and the
+        incremental passes differ from one sweep.  Cut ingest batches on
+        the tier's bucket boundaries when using ``new_only``.
         """
         df = self.tier(tier)
         if df is None:

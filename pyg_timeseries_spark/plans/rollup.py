@@ -193,12 +193,12 @@ def _ordered_concat(tokens: str, *order) -> F.Column:
     ))
 
 
-def _merge_measures(df: DataFrame, with_tokens: bool, order: str, k: int) -> list:
-    """Re-aggregate rollup rows: _MERGE, tokens concatenated by ``order``
+def _merge_measures(df: DataFrame, with_tokens: bool, k: int) -> list:
+    """Re-aggregate rollup rows: _MERGE, tokens concatenated by bucket
     when asked for and present, and sketches merged when present."""
     aggs = [fn(name).alias(name) for name, fn in _MERGE]
     if with_tokens and "tokens" in df.columns:
-        aggs.append(_ordered_concat("tokens", order).alias("tokens"))
+        aggs.append(_ordered_concat("tokens", "bucket").alias("tokens"))
     if "kmv" in df.columns:
         aggs.extend(_sketch_merge_aggs(k))
     return aggs
@@ -259,7 +259,7 @@ def rollup_cascade(
     exact)."""
     return (
         child.groupBy("source", bucket_col("bucket", tier, child).alias("bucket"))
-        .agg(*_merge_measures(child, with_tokens, "bucket", sketch_k))
+        .agg(*_merge_measures(child, with_tokens, sketch_k))
     )
 
 
@@ -282,7 +282,7 @@ def rollup_all_tiers(
 # The array-token cascade carries a (source, day)'s ENTIRE token payload as
 # one row at the 1d tier — at 10^12-sequence scale a single hot row is GBs
 # and collect_list on one grouping key OOMs an executor regardless of
-# parallelism.  Chunked mode instead stores tokens ONCE, at 1m granularity,
+# parallelism.  The store instead keeps tokens ONCE, at 1m granularity,
 # split into part-rows of at most MAX_TOKENS_PER_ROW tokens; coarser tiers
 # carry measures only and token payloads FLATTEN AT READ (tokens_at_tier).
 # The bit-for-bit invariant lives on the chunked representation:
@@ -347,18 +347,18 @@ def tokens_at_tier(chunks: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def merge_rollup(existing: DataFrame, delta: DataFrame, with_tokens: bool = True) -> DataFrame:
-    """Merge an incremental rollup delta into an existing rollup table —
-    the continuous-aggregate refresh.  Buckets present in both are combined
-    with the same associative algebra (in-bucket refresh: the reference's
-    same-time-unit replace, _ewm.py:41-44, rendered at bucket granularity).
-
-    Token order across the union is (first_ts, tokens) — exact when delta
-    rows arrive time-ordered per source (the engine's append contract).
-    """
+def merge_rollup(existing: DataFrame, delta: DataFrame) -> DataFrame:
+    """Merge rollup rows into an existing rollup table — the continuous-
+    aggregate refresh.  Rows of one (source, bucket) cell combine with the
+    same associative algebra as the cascade (in-bucket refresh: the
+    reference's same-time-unit replace, _ewm.py:41-44, rendered at bucket
+    granularity); ``delta`` may be a finer tier's rows with ``bucket``
+    truncated to this tier.  Every measure is order-free, so the merge is
+    exact under any arrival order; token payloads are not merged here
+    (they live in the chunk table, token_chunk_rows)."""
     both = existing.unionByName(delta, allowMissingColumns=True)
     return both.groupBy("source", "bucket").agg(
-        *_merge_measures(both, with_tokens, "first_ts", SKETCH_K)
+        *_merge_measures(both, False, SKETCH_K)
     )
 
 

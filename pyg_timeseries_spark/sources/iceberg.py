@@ -27,13 +27,11 @@ from pyg_timeseries_spark.sources.tables import iceberg_available
 MEASURES = ["cnt", "sum_n_tok", "sum2_n_tok", "sum3_n_tok"]
 
 
-def create_tier_ddl(table: str, with_tokens: bool = False,
-                    with_sketches: bool = False) -> str:
+def create_tier_ddl(table: str, with_sketches: bool = False) -> str:
     """CREATE TABLE for a rollup tier, day-partitioned on the bucket —
     Iceberg's hidden partitioning (days(bucket)) is exactly the manifest
     store's p_day.  ``with_sketches`` adds the KMV + bottom-k sample
     columns (plans/rollup.py sketch measures)."""
-    token_col = ",\n  tokens array<int>" if with_tokens else ""
     sketch_cols = (
         ",\n  kmv array<bigint>,\n"
         "  sample array<struct<h: bigint, v: double>>"
@@ -50,7 +48,7 @@ def create_tier_ddl(table: str, with_tokens: bool = False,
         "  max_n_tok bigint,\n"
         "  first_ts timestamp_ntz,\n"
         "  last_ts timestamp_ntz"
-        f"{token_col}{sketch_cols}\n"
+        f"{sketch_cols}\n"
         ") USING iceberg\n"
         "PARTITIONED BY (days(bucket))"
     )
@@ -69,8 +67,8 @@ def create_token_chunks_ddl(table: str) -> str:
     )
 
 
-def merge_tier_sql(table: str, delta_view: str, with_tokens: bool = False,
-                   with_sketches: bool = False, sketch_k: int = 32) -> str:
+def merge_tier_sql(table: str, delta_view: str, with_sketches: bool = False,
+                   sketch_k: int = 32) -> str:
     """MERGE INTO implementing the associative bucket algebra of
     plans/rollup.merge_rollup: matched cells combine (integer sums exact and
     order-free), unmatched insert.  Iceberg rewrites only the data files of
@@ -83,9 +81,6 @@ def merge_tier_sql(table: str, delta_view: str, with_tokens: bool = False,
         "t.first_ts = least(t.first_ts, s.first_ts)",
         "t.last_ts = greatest(t.last_ts, s.last_ts)",
     ]
-    if with_tokens:
-        # append contract: delta buckets are at/after existing content
-        set_clauses.append("t.tokens = concat(t.tokens, s.tokens)")
     if with_sketches:
         # union-k-smallest: EXACT merge (plans/rollup._sketch_merge_aggs)
         set_clauses.append(

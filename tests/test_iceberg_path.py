@@ -16,7 +16,6 @@ def test_ddl_shapes():
     assert "USING iceberg" in ddl
     assert "PARTITIONED BY (days(bucket))" in ddl
     assert "tokens" not in ddl
-    assert "tokens array<int>" in IB.create_tier_ddl("t", with_tokens=True)
     assert "part int" in IB.create_token_chunks_ddl("cat.db.tokens_1m")
 
 
@@ -30,8 +29,6 @@ def test_merge_sql_clauses():
     assert "t.max_n_tok = greatest(t.max_n_tok, s.max_n_tok)" in sql
     assert "WHEN NOT MATCHED THEN INSERT *" in sql
     assert "concat" not in sql
-    assert "t.tokens = concat(t.tokens, s.tokens)" in IB.merge_tier_sql(
-        "t", "_d", with_tokens=True)
     assert "VERSION AS OF 42" in IB.time_travel_sql("t", 42)
     assert "expire_snapshots" in IB.expire_snapshots_sql(
         "cat", "db.rollup_1m", "2024-02-01 00:00:00")
@@ -69,7 +66,7 @@ def test_merge_set_algebra_equals_merge_rollup(spark):
                             ["source", "bucket"], "left_anti")
     merged_via_sql = matched.unionByName(unmatched_t).unionByName(unmatched_s)
 
-    expected = merge_rollup(head, tail, with_tokens=False)
+    expected = merge_rollup(head, tail)
 
     def rows(df):
         return sorted(map(tuple, df.toPandas().itertuples(index=False)))
@@ -133,7 +130,7 @@ def test_merge_replay_3_batches_equals_parquet_store(spark, tmp_path):
     store = RollupStore(str(tmp_path / "pq"), spark)
     tiers = {}  # the "Iceberg tables", replayed batch by batch
     for b in batches:
-        store.ingest(b, tokens=None, with_lineage=False)
+        store.ingest(b, tokens=None)
         delta = rollup_from_raw(b, "1m", tokens=None)
         for tier in ("1m", "1h", "1d"):
             if tier != "1m":
@@ -195,7 +192,7 @@ def test_merge_set_algebra_sketches(spark):
                             ["source", "bucket"], "left_anti")
     merged_via_sql = matched.unionByName(unmatched_t).unionByName(unmatched_s)
 
-    expected = merge_rollup(head, tail, with_tokens=False)
+    expected = merge_rollup(head, tail)
 
     def rows(df):
         pdf = df.toPandas().sort_values(["source", "bucket"]).reset_index(drop=True)

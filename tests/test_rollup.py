@@ -68,8 +68,8 @@ def test_incremental_equals_full(spark, raw, tmp_path):
             f"incremental != full at tier {tier}"
         )
 
-    # the DEFAULT ingest mode is chunked: bounded token part-rows in
-    # tokens_1m, measures-only tiers (no unbounded array column)
+    # token payloads are bounded part-rows in tokens_1m; the tiers are
+    # measures-only (no unbounded array column)
     assert inc_store.read_table("tokens_1m") is not None
     for tier in ("1m", "1h", "1d"):
         assert "tokens" not in inc_tiers[tier].columns, tier
@@ -143,10 +143,9 @@ def test_read_table_is_one_scan(spark, tmp_path):
     raw = sequences(spark, 6_000, interval_s=90).persist()  # > 3 days on web
     store = RollupStore(str(tmp_path / "scan"), spark)
     days = [F.lit(d).cast("timestamp") for d in ("2024-01-02", "2024-01-03")]
-    store.ingest(raw.filter(F.col("ts") < days[0]), with_lineage=False)
-    store.ingest(raw.filter((F.col("ts") >= days[0]) & (F.col("ts") < days[1])),
-                 with_lineage=False)
-    store.ingest(raw.filter(F.col("ts") >= days[1]), with_lineage=False)
+    store.ingest(raw.filter(F.col("ts") < days[0]))
+    store.ingest(raw.filter((F.col("ts") >= days[0]) & (F.col("ts") < days[1])))
+    store.ingest(raw.filter(F.col("ts") >= days[1]))
     commits = {v for vs in store._m.parts("rollup_1h").values() for v in vs}
     assert commits == {1, 2, 3}
 
@@ -159,7 +158,7 @@ def test_read_table_is_one_scan(spark, tmp_path):
         plan = df._jdf.queryExecution().optimizedPlan().toString()
         assert len(re.findall(r"Relation \[", plan)) == 1, (name, plan)
         assert n_jobs <= 1, (name, n_jobs)
-    full = RollupStore(str(tmp_path / "scan_full"), spark).ingest(raw, with_lineage=False)
+    full = RollupStore(str(tmp_path / "scan_full"), spark).ingest(raw)
     assert rows_of(store.read_table("rollup_1h")) == rows_of(full["1h"])
     raw.unpersist()
 
@@ -185,17 +184,17 @@ def test_exact_rebuild_guarded_without_retained_raw(spark, raw, tmp_path):
 
 
 def test_chunked_tokens_incremental_equals_full(spark, raw, tmp_path):
-    """Chunked token mode: ingest(head)+ingest(tail) == ingest(full) on the
-    BOUNDED chunk table, and the read-time flatten equals the array-mode 1d
-    token payload exactly."""
+    """Token chunks: ingest(head)+ingest(tail) == ingest(full) on the
+    BOUNDED chunk table, and the read-time flatten equals the array-token
+    cascade's 1d payload exactly."""
     cut = F.lit("2024-01-01 03:00:30").cast("timestamp")  # mid-bucket cut
     cap = 512
 
     full = RollupStore(str(tmp_path / "cf"), spark)
-    full.ingest(raw, token_mode="chunked", chunk_cap=cap)
+    full.ingest(raw, chunk_cap=cap)
     inc = RollupStore(str(tmp_path / "ci"), spark)
-    inc.ingest(raw.filter(F.col("ts") < cut), token_mode="chunked", chunk_cap=cap)
-    inc.ingest(raw.filter(F.col("ts") >= cut), token_mode="chunked", chunk_cap=cap)
+    inc.ingest(raw.filter(F.col("ts") < cut), chunk_cap=cap)
+    inc.ingest(raw.filter(F.col("ts") >= cut), chunk_cap=cap)
 
     def chunk_rows(store):
         pdf = store.read_table("tokens_1m").toPandas().sort_values(
@@ -210,17 +209,15 @@ def test_chunked_tokens_incremental_equals_full(spark, raw, tmp_path):
     # measures-only tiers have no token column
     assert "tokens" not in inc.read_table("rollup_1d").columns
 
-    # flatten-at-read == the array-mode cascade's 1d payload
-    arr = RollupStore(str(tmp_path / "ca"), spark)
-    arr.ingest(raw, token_mode="array")
-    exp = arr.read_table("rollup_1d").select("source", "bucket", "tokens")
+    # flatten-at-read == the array-token cascade's 1d payload
+    exp = rollup_from_raw(raw, "1d").select("source", "bucket", "tokens")
     got = inc.read_tokens("1d")
     assert rows_of(got) == rows_of(exp)
 
 
 def test_chunked_tokens_hot_bucket_bounded(spark, tmp_path):
     """A single hot (source, day) with 10M+ tokens: the stored representation
-    stays ≤ cap tokens/row (the array-mode 1d row would be one 10M-element
+    stays ≤ cap tokens/row (an array-token 1d row would be one 10M-element
     array — the executor-OOM shape at real scale)."""
     import pandas as pd  # noqa: F401
 
@@ -238,7 +235,7 @@ def test_chunked_tokens_hot_bucket_bounded(spark, tmp_path):
         ).alias("tokens"),
     )
     store = RollupStore(str(tmp_path / "hot"), spark)
-    store.ingest(df, token_mode="chunked")
+    store.ingest(df)
     chunks = store.read_table("tokens_1m")
     stats = chunks.select(
         F.sum(F.size("tokens")).alias("total"),
@@ -260,10 +257,10 @@ def test_chunked_exact_rebuild_out_of_order(spark, raw, tmp_path):
     odd = raw.filter(F.col("seq") % 2 == 1)
     even = raw.filter(F.col("seq") % 2 == 0)
     inc = RollupStore(str(tmp_path / "oc"), spark)
-    inc.ingest(odd, token_mode="chunked", exact_rebuild=True, chunk_cap=256)
-    inc.ingest(even, token_mode="chunked", exact_rebuild=True, chunk_cap=256)
+    inc.ingest(odd, exact_rebuild=True, chunk_cap=256)
+    inc.ingest(even, exact_rebuild=True, chunk_cap=256)
     full = RollupStore(str(tmp_path / "of"), spark)
-    full.ingest(raw, token_mode="chunked", exact_rebuild=True, chunk_cap=256)
+    full.ingest(raw, exact_rebuild=True, chunk_cap=256)
     assert rows_of(inc.read_tokens("1m")) == rows_of(full.read_tokens("1m"))
     for tier in ("1m", "1h", "1d"):
         assert rows_of(inc.read_table(f"rollup_{tier}")) == rows_of(
@@ -320,7 +317,7 @@ def test_expire_is_metadata_only(spark, tmp_path):
 
     raw = sequences(spark, 20_000, interval_s=60).persist()  # ~7 days on web
     store = RollupStore(str(tmp_path / "meta_ttl"), spark)
-    store.ingest(raw, with_lineage=False)
+    store.ingest(raw)
     full = store.read_table("rollup_1m").persist()
     tokens = store.read_tokens("1m").persist()
     max_b = full.select(F.max("bucket")).first()[0]
@@ -379,7 +376,7 @@ def test_expire_empty_boundary_drops_not_commits(spark, tmp_path):
         "tokens", F.array(F.lit(1).cast("int"))
     )
     store = RollupStore(str(tmp_path / "gap"), spark)
-    store.ingest(raw2, with_lineage=False)
+    store.ingest(raw2)
     # keep ~2.2 days back from max (2024-01-03 12:29) → cutoff lands inside
     # 2024-01-01 but AFTER that day's last row (00:29)
     store.expire("1m", keep_buckets=2 * 1440 + 700)
@@ -414,7 +411,8 @@ def test_trim_predicate_lifecycle(spark, tmp_path):
     trimmed day re-points it (its expired rows stay hidden, its own rows
     show), and compact after an expire keeps the rows and clears it.  A
     second expire into the trimmed day narrows its predicate, and a
-    session in another timezone reads the same rows.  A
+    session in another timezone reads the same rows.  The unexpired 1h
+    and 1d tiers keep every row ingested.  A
     NULL-ts row (a partition without a date label) neither stops the
     expire nor expires."""
     days = ["2024-01-01", "2024-01-02", "2024-01-03", "2024-01-04"]
@@ -422,11 +420,11 @@ def test_trim_predicate_lifecycle(spark, tmp_path):
     late_old = _every_10_min("2024-01-02", minute=5, hours=(10, 11))
     into_trimmed = _every_10_min("2024-01-03", minute=5, hours=(6, 18))
     store = RollupStore(str(tmp_path / "trim"), spark)
-    store.ingest(_minutes(spark, base + [None]), with_lineage=False)
+    store.ingest(_minutes(spark, base + [None]))
 
     def check(stamps, label):
         ref = RollupStore(str(tmp_path / f"ref_{label}"), spark)
-        ref.ingest(_minutes(spark, stamps), with_lineage=False)
+        ref.ingest(_minutes(spark, stamps))
         assert rows_of(store.read_table("rollup_1m")) == rows_of(
             ref.read_table("rollup_1m")), label
         assert rows_of(store.read_tokens("1m")) == rows_of(ref.read_tokens("1m")), label
@@ -465,15 +463,22 @@ def test_trim_predicate_lifecycle(spark, tmp_path):
     finally:
         spark.conf.set(tz_key, old)
 
-    store.ingest(_minutes(spark, late_old), with_lineage=False)
+    store.ingest(_minutes(spark, late_old))
     check(kept + late_old, "late_old")
 
-    store.ingest(_minutes(spark, into_trimmed), with_lineage=False)
+    store.ingest(_minutes(spark, into_trimmed))
     version = store.meta["tables"]["rollup_1m"]["version"]
     assert store._m.parts("rollup_1m")["2024-01-03"] == [version]
     assert store._m._preds("rollup_1m") == {}
     assert store._m._preds("tokens_1m") == {}
     check(kept + late_old + into_trimmed, "into_trimmed")
+    # 1h and 1d were never expired: they hold every row ingested, late
+    # rows into expired 1m days merged into the full coarse cells
+    every = RollupStore(str(tmp_path / "ref_every"), spark)
+    every.ingest(_minutes(spark, base + [None] + late_old + into_trimmed))
+    for tier in ("1h", "1d"):
+        assert rows_of(store.read_table(f"rollup_{tier}")) == rows_of(
+            every.read_table(f"rollup_{tier}")), tier
 
     # a second expire trims 01-04; compact re-points it with the same rows
     pre = store.read_table("rollup_1m")  # its files stay: a lazy old view
@@ -498,7 +503,7 @@ def test_expire_reads_int96_footers(spark, tmp_path, monkeypatch):
     raw = _minutes(spark, [t for d in days for t in _every_10_min(d)])
     store = RollupStore(str(tmp_path / "int96"), spark)
     monkeypatch.setattr(M, "_TS_STORED", "INT96")
-    store.ingest(raw, with_lineage=False)
+    store.ingest(raw)
     monkeypatch.undo()
     assert store._m.file_stats("rollup_1m", 1, "bucket")["2024-01-02"][1:] == (None, None)
     store.expire("1m", keep_buckets=12 * 60 - 9)  # max 01-02 23:50 → cutoff 12:00
@@ -520,9 +525,9 @@ def test_ingest_scan_stats_opt_in(spark, raw, tmp_path):
 
     def jobs_of(label, store_dir, **kw):
         store = RollupStore(str(tmp_path / store_dir), spark)
-        store.ingest(head, with_lineage=False)
+        store.ingest(head)
         sc.setJobGroup(label, label)
-        store.ingest(tail, with_lineage=False, **kw)
+        store.ingest(tail, **kw)
         n = len(sc.statusTracker().getJobIdsForGroup(label))
         sc.setJobGroup(None, None)
         return n, store
@@ -782,12 +787,12 @@ def exact_rows(df):
 def test_merge_passes_one_row_cells_through(spark, raw):
     """The precondition of the one-aggregate merge: when every cell has
     exactly one row, merge_rollup returns its input bit-for-bit — long
-    sums, min/max, the KMV sketch, the bottom-k sample and the one-chunk
-    ordered concat of tokens — and stored multi-part chunk rows re-chunked
-    with an empty batch come back bit-for-bit too."""
+    sums, min/max, the KMV sketch and the bottom-k sample — and stored
+    multi-part chunk rows re-chunked with an empty batch come back
+    bit-for-bit too."""
     from pyg_timeseries_spark.plans.rollup import merge_rollup, token_chunk_rows
 
-    m1 = rollup_from_raw(raw, "1m", sketch_id="doc_id").persist()
+    m1 = rollup_from_raw(raw, "1m", tokens=None, sketch_id="doc_id").persist()
     web = F.col("source") == "web"
     merged = merge_rollup(m1.filter(web), m1.filter(~web))
     assert exact_rows(merged) == exact_rows(m1)
@@ -801,32 +806,27 @@ def test_merge_passes_one_row_cells_through(spark, raw):
 
 
 # Spark jobs of the fixture's merge batch (the tail ingest below, lineage
-# on or off): the bound pins the one-aggregate-per-tier commit path
+# included): the bound pins the one-aggregate-per-tier commit path
 MERGE_BATCH_JOBS = 12
 
 
 def test_ingest_job_counts(spark, raw, tmp_path):
-    """Lineage runs no Spark job of its own — raw rows come from an
-    Observation on the batch, commit rows from the written files' footers —
-    and a merge batch stays within its measured job count."""
+    """A merge batch stays within its measured job count with its lineage
+    recorded — raw rows come from an Observation on the batch, commit rows
+    from the written files' footers, so lineage runs no Spark job of its
+    own."""
     cut = F.lit("2024-01-01 03:00:30").cast("timestamp")  # mid-bucket
     head, tail = raw.filter(F.col("ts") < cut), raw.filter(F.col("ts") >= cut)
     sc = spark.sparkContext
-
-    def jobs_of(label, with_lineage):
-        store = RollupStore(str(tmp_path / label), spark)
-        store.ingest(head, with_lineage=False)
-        sc.setJobGroup(label, label)
-        store.ingest(tail, with_lineage=with_lineage)
-        n = len(sc.statusTracker().getJobIdsForGroup(label))
-        sc.setJobGroup(None, None)
-        return n, store
-
-    n_lin, store = jobs_of("lin", True)
-    n_off, _ = jobs_of("nolin", False)
-    assert n_lin == n_off
-    assert n_off <= MERGE_BATCH_JOBS
+    store = RollupStore(str(tmp_path / "jobs"), spark)
+    store.ingest(head)
+    sc.setJobGroup("merge", "merge")
+    store.ingest(tail)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup("merge"))
+    sc.setJobGroup(None, None)
+    assert n_jobs <= MERGE_BATCH_JOBS
     lin = store.lineage().toPandas()
+    lin = lin[lin.batch_id == 2]
     assert set(lin.stage) == {"raw", "commit_1m", "commit_1h", "commit_1d"}
     assert lin[lin.stage == "raw"].rows.sum() == tail.count()
     per_day = lin[lin.stage == "commit_1m"].set_index("p_day").rows.to_dict()

@@ -105,7 +105,7 @@ class Apply:
     @staticmethod
     def setup(spark, path, raw):
         engine = TimeseriesEngine(spark, path)
-        engine.ingest(raw, with_lineage=False)
+        engine.ingest(raw)
         return engine
 
     @staticmethod

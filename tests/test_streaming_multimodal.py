@@ -89,7 +89,7 @@ def test_foreach_batch_replayed_epoch_ingested_once(spark, tmp_path):
 
 
 def test_stream_ingest_chunked_tokens(spark, tmp_path):
-    """foreachBatch ingest in chunked token mode: streamed micro-batches
+    """foreachBatch ingest of token payloads: streamed micro-batches
     build the same bounded chunk table as one batch ingest."""
     from pyg_timeseries_spark.streaming.stream_rollup import foreach_batch_ingest
 
@@ -105,8 +105,7 @@ def test_stream_ingest_chunked_tokens(spark, tmp_path):
     def fn(batch_df, epoch_id):
         if batch_df.isEmpty():
             return
-        store.ingest(batch_df, tokens="tokens", token_mode="chunked",
-                     chunk_cap=256)
+        store.ingest(batch_df, tokens="tokens", chunk_cap=256)
 
     q = (
         spark.readStream.schema(schema)
@@ -118,8 +117,7 @@ def test_stream_ingest_chunked_tokens(spark, tmp_path):
     q.awaitTermination(180)
 
     batch_store = RollupStore(str(tmp_path / "ctok_batch"), spark)
-    batch_store.ingest(raw, tokens="tokens", token_mode="chunked",
-                       chunk_cap=256)
+    batch_store.ingest(raw, tokens="tokens", chunk_cap=256)
 
     def rows(st):
         pdf = st.read_table("tokens_1m").toPandas().sort_values(
