@@ -1461,8 +1461,10 @@ def q_retention_expire(spark, sf_dir):
     events ingest as two time-ordered batches into day-partitioned 1m tier
     manifests; expire('1m', keep_buckets=14430) drops whole day-partitions
     METADATA-ONLY (untouched survivors keep their original commit version)
-    and rewrites at most the one boundary day the cutoff bisects; compact()
-    then merges the fragmented boundary files without changing a row.  The
+    and rewrites nothing: the one boundary day the cutoff bisects keeps its
+    files and hides its expired rows by a row predicate applied at read;
+    compact() then merges the fragmented days' files into one commit per
+    day, reading the boundary day through its predicate.  The
     surviving tier must equal a plain bucket filter of the full 1m rollup —
     which is exactly what the oracle replays (cutoff = max bucket minus
     keep_buckets-1 minutes)."""

@@ -59,8 +59,10 @@ Layout::
                                    #  batches, raw_complete, lineage: [...],
                                    #  op_watermark: {op: bucket text}}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
-      tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows
-      raw/v{N}/*.parquet           # retained raw batches (exact_rebuild)
+      tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows; the ids
+                                   # DELTA_BINARY_PACKED (~2.2 B/token)
+      raw/v{N}/*.parquet           # retained raw batches (exact_rebuild
+                                   # with tokens)
       state_{op}/v{N}/*.parquet    # operator state rows (key, state[])
 """
 
@@ -264,7 +266,7 @@ class RollupStore:
         batches are retained in the store and any 1m token bucket touched
         by BOTH history and this batch (an interleaving late arrival) is
         re-chunked from retained raw.  Requires every prior batch to have
-        retained raw (guarded).
+        retained raw (guarded); a batch with ``tokens=None`` retains none.
 
         ``sketch_id`` names an id column of the raw batch (e.g. doc_id):
         every tier cell then also carries a KMV distinct-count sketch of
@@ -277,8 +279,11 @@ class RollupStore:
         with self._m.operation():
             batch_id = self.meta["batches"] + 1
             complete = self.meta.get("raw_complete")
-            self.meta["raw_complete"] = exact_rebuild and complete is not False
-            if exact_rebuild:
+            # raw is read only to re-chunk tokens: a batch without them
+            # retains none, and a later rebuild over it hits the guard
+            retain = exact_rebuild and tokens is not None
+            self.meta["raw_complete"] = retain and complete is not False
+            if retain:
                 self._m.commit("raw", raw, append=True)
 
             def chunk(r, prev=None):
@@ -367,8 +372,8 @@ class RollupStore:
         if not self.meta.get("raw_complete"):
             raise ValueError(
                 "exact_rebuild needs retained raw spanning the store's history, but "
-                "earlier batches were ingested with exact_rebuild=False — the "
-                "rebuild would undercount.")
+                "earlier batches were ingested with exact_rebuild=False or "
+                "tokens=None — the rebuild would undercount.")
         raw_all = self.read_table("raw")
         ov = ov_cells.select(F.col("source").alias("_os"), F.col("bucket").alias("_ob"))
         affected_raw = raw_all.join(

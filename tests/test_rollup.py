@@ -13,6 +13,7 @@ from pyg_timeseries_spark.plans.checkpoint import RollupStore
 from pyg_timeseries_spark.plans.rollup import (
     bucket_col, rollup_all_tiers, rollup_cascade, rollup_from_raw,
 )
+from tools.store_bytes import table_stats
 
 N_ROWS = 30_000  # ~8 hours of 1s data on the hot source
 
@@ -181,6 +182,47 @@ def test_exact_rebuild_guarded_without_retained_raw(spark, raw, tmp_path):
     store.ingest(raw.filter(F.col("ts") < cut), exact_rebuild=False)
     with pytest.raises(ValueError, match="exact_rebuild"):
         store.ingest(raw.filter(F.col("ts") >= cut), exact_rebuild=True)
+
+
+def test_no_raw_retained_without_tokens(spark, raw, tmp_path):
+    """Raw is read only to re-chunk tokens: ``ingest(tokens=None,
+    exact_rebuild=True)`` writes no raw table, and a later exact_rebuild
+    over such a batch refuses instead of undercounting."""
+    early = raw.filter(F.col("ts") < F.lit("2024-01-01 02:00:00").cast("timestamp"))
+    cut = F.lit("2024-01-01 01:00:30").cast("timestamp")  # mid-bucket cut
+    odd, even = (early.filter(F.col("seq") % 2 == p) for p in (1, 0))
+    path = tmp_path / "noraw"
+    store = RollupStore(str(path), spark)
+    store.ingest(odd, exact_rebuild=True)  # tokens: retains raw
+    assert store._m.version("raw") == 1 and store.meta["raw_complete"]
+    store.ingest(even.filter(F.col("ts") < cut), tokens=None, exact_rebuild=True)
+    assert store._m.version("raw") == 1 and store.meta["raw_complete"] is False
+    assert os.listdir(path / "raw") == ["v1"]
+    with pytest.raises(ValueError, match="exact_rebuild"):
+        store.ingest(even.filter(F.col("ts") >= cut), exact_rebuild=True)
+
+    bare = RollupStore(str(tmp_path / "bare"), spark)
+    bare.ingest(early, tokens=None, exact_rebuild=True)
+    assert not (tmp_path / "bare" / "raw").exists()
+    assert "raw" not in bare.meta["tables"]
+
+
+def test_token_payload_encodings(spark, raw, tmp_path):
+    """Commits write v2 pages with a 64 KiB dictionary budget: the token
+    ids outgrow it and fall back to DELTA_BINARY_PACKED, ``source`` keeps
+    its dictionary, and ``bucket`` keeps the footer min/max that
+    ``expire`` and the ``apply`` watermark read."""
+    store = RollupStore(str(tmp_path / "enc"), spark)
+    store.ingest(raw)
+    cols = table_stats(str(tmp_path / "enc" / "tokens_1m"))["chunks"]
+    assert all(set(c.encodings) == {"DELTA_BINARY_PACKED"}
+               for c in cols["tokens.list.element"])
+    assert all("RLE_DICTIONARY" in c.encodings for c in cols["source"])
+    assert all(c.statistics is not None and c.statistics.has_min_max
+               for c in cols["bucket"])
+    n_tok = raw.select(F.sum("n_tok")).first()[0]
+    stored = sum(c.total_compressed_size for c in cols["tokens.list.element"])
+    assert stored / n_tok <= 2.4
 
 
 def test_chunked_tokens_incremental_equals_full(spark, raw, tmp_path):

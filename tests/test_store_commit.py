@@ -22,6 +22,7 @@ from pyg_timeseries_spark.dedup.incremental import IncrementalDeduper
 from pyg_timeseries_spark.operators.ewm import ewma_
 from pyg_timeseries_spark.plans.checkpoint import RollupStore
 from pyg_timeseries_spark.plans.pipeline import TimeseriesEngine
+from tools.store_bytes import table_stats
 
 
 class Crash(Exception):
@@ -277,3 +278,40 @@ def test_crash_at_every_step_leaves_store_unchanged(spark, tmp_path, inject, nam
     assert k - 1 >= MIN_STEPS.get(name, DEFAULT_MIN_STEPS), (
         f"{name}: {k - 1} steps, fewer than its writes and swaps")
     raw.unpersist()
+
+
+# -- the codec every commit pins ------------------------------------------------
+
+CODEC = "spark.sql.parquet.compression.codec"
+
+
+def _many_docs(spark, n=4_000):
+    """``n`` distinct docs: more distinct content hashes than a 64 KiB
+    dictionary page holds, so ``h_exact`` falls back to DELTA_BYTE_ARRAY."""
+    words = [F.substring(F.md5((F.col("id") * k).cast("string")), 1, 6)
+             for k in (1, 3, 7, 11)]
+    return spark.range(n, numPartitions=1).select(
+        F.col("id").alias("doc_id"), F.concat_ws(" ", *words).alias("text"))
+
+
+def test_commit_pins_its_codec(spark, tmp_path):
+    """A session set to write uncompressed parquet must not change what a
+    store reads back: Spark's vectorized reader misreads the strings of
+    uncompressed v2 data pages, so every commit writes snappy."""
+    raw = _raw(spark)
+    got, old = {}, spark.conf.get(CODEC)
+    try:
+        for codec in ("snappy", "uncompressed"):
+            spark.conf.set(CODEC, codec)
+            store = rollup_setup(spark, str(tmp_path / codec / "rollup"), raw)
+            d = IncrementalDeduper(str(tmp_path / codec / "dedup"), spark, n_parts=1)
+            d.add_batch(_many_docs(spark))
+            got[codec] = {**rollup_contents(store), **DedupAdd.contents(d)}
+    finally:
+        spark.conf.set(CODEC, old)
+    raw.unpersist()
+    cols = table_stats(str(tmp_path / "uncompressed"))["chunks"]
+    # the hash column outgrew its dictionary: the page shape that misreads
+    assert any("DELTA_BYTE_ARRAY" in c.encodings for c in cols["h_exact"])
+    assert {c.compression for cs in cols.values() for c in cs} == {"SNAPPY"}
+    assert got["uncompressed"] == got["snappy"]
