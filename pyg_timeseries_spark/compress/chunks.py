@@ -1,24 +1,84 @@
 """Spark plumbing for Gorilla-compressed series chunks.
 
 A downsampled series (e.g. the 1m rollup's sum_n_tok per source) is packed
-into one BinaryType blob per (source, chunk_window) — delta-of-delta
-timestamps + XOR-compressed values — and unpacked back losslessly.  Encode
-and decode run as Arrow-batched grouped pandas UDFs; blobs live in the
-rollup store like any other table, so the state/retention machinery applies.
+into one BinaryType blob per (source, chunk) — delta-of-delta timestamps +
+XOR-compressed values — and unpacked back losslessly.  Encode and decode run
+as Arrow-batched grouped pandas UDFs; blobs live in the rollup store like
+any other table, so the state/retention machinery applies.
 
-Chunking by a coarse window (default 1 day per chunk) bounds blob size and
-preserves partition pruning: a time-range query only decodes the chunks whose
-window overlaps.
+Chunking by a coarse window (1 day per chunk: ``compress_series``' date_trunc
+window, or the store's day-partition in ``TimeseriesEngine.compress_tier``)
+bounds blob size and preserves partition pruning: a time-range query only
+decodes the chunks whose window overlaps.
+
+Timestamps cross Arrow only as integers.  Spark turns each one into epoch
+micros before the encode UDF (``unix_micros``: the instant of a TIMESTAMP;
+the wall time of a TIMESTAMP_NTZ) and back after the decode UDF
+(``timestamp_micros``), to the type the chunks were encoded from — the type
+of ``chunk_start``, the chunk's first timestamp.  No wall time is rendered
+on the session clock on either side, so a round trip is exact under any
+session timezone, across a DST fall-back, and with encode and decode in
+different sessions.  The blob holds whole epoch seconds; a sub-second
+timestamp raises rather than being rounded.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pyg_timeseries_spark.compress import gorilla
+
+_US = 1_000_000
+_EPOCH_NTZ = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+
+def _to_micros(c: Column, dtype: T.DataType) -> Column:
+    """Epoch micros: the instant (TIMESTAMP) or the wall time (NTZ)."""
+    if isinstance(dtype, T.TimestampNTZType):
+        return F.timestamp_diff("MICROSECOND", F.expr(_EPOCH_NTZ), c)
+    return F.unix_micros(c)
+
+
+def _from_micros(c: Column, dtype: T.DataType) -> Column:
+    """The inverse of ``_to_micros``."""
+    if isinstance(dtype, T.TimestampNTZType):
+        return F.timestamp_add("MICROSECOND", c, F.expr(_EPOCH_NTZ))
+    return F.timestamp_micros(c)
+
+
+def encode_chunks(
+    df: DataFrame, key: str, ts: str, v: str, by: str,
+) -> DataFrame:
+    """One Gorilla chunk per (``key``, ``by``) group of (key, ts, v) rows →
+    (key, by, chunk_start, n_points, blob) rows."""
+    t = df.schema[ts].dataType
+    src = df.select(key, by, _to_micros(F.col(ts), t).alias("_t"),
+                    F.col(v).cast("double").alias("_v"))
+    out_schema = T.StructType([
+        df.schema[key], df.schema[by],
+        T.StructField("_t0", T.LongType()),
+        T.StructField("n_points", T.LongType()),
+        T.StructField("blob", T.BinaryType()),
+    ])
+
+    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("_t")
+        us = pdf["_t"].to_numpy(np.int64)
+        if (us % _US).any():
+            raise ValueError("Gorilla chunks store whole epoch seconds; "
+                             f"{ts} has a sub-second timestamp")
+        blob = gorilla.encode_chunk(us // _US, pdf["_v"].to_numpy())
+        return pd.DataFrame({key: [pdf[key].iloc[0]], by: [pdf[by].iloc[0]],
+                             "_t0": [us[0]], "n_points": [len(pdf)],
+                             "blob": [blob]})
+
+    return src.groupBy(key, by).applyInPandas(enc, schema=out_schema).select(
+        key, by, _from_micros(F.col("_t0"), t).alias("chunk_start"),
+        "n_points", "blob")
 
 
 def compress_series(
@@ -28,34 +88,11 @@ def compress_series(
     v: str = "sum_n_tok",
     chunk: str = "day",
 ) -> DataFrame:
-    """(key, ts, v) rows → (key, chunk_start, n_points, blob) rows."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            T.StructField("chunk_start", T.TimestampType()),
-            T.StructField("n_points", T.LongType()),
-            T.StructField("blob", T.BinaryType()),
-        ]
-    )
-    src = df.select(
-        F.col(key), F.col(ts).alias("_ts"), F.col(v).cast("double").alias("_v"),
-        F.date_trunc(chunk, F.col(ts)).alias("chunk_start"),
-    )
-
-    def enc(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("_ts")
-        ts_int = pdf["_ts"].astype("int64").to_numpy() // 1_000_000_000
-        blob = gorilla.encode_chunk(ts_int, pdf["_v"].to_numpy())
-        return pd.DataFrame(
-            {
-                key: [pdf[key].iloc[0]],
-                "chunk_start": [pdf["chunk_start"].iloc[0]],
-                "n_points": [len(pdf)],
-                "blob": [blob],
-            }
-        )
-
-    return src.groupBy(key, "chunk_start").applyInPandas(enc, schema=out_schema)
+    """(key, ts, v) rows → (key, chunk_start, n_points, blob) rows, one per
+    key and ``chunk`` window (a ``date_trunc`` unit on the session clock)."""
+    t = df.schema[ts].dataType
+    win = _to_micros(F.date_trunc(chunk, F.col(ts)).cast(t), t)
+    return encode_chunks(df.withColumn("_w", win), key, ts, v, "_w").drop("_w")
 
 
 def decompress_series(
@@ -64,31 +101,25 @@ def decompress_series(
     ts_name: str = "bucket",
     v_name: str = "sum_n_tok",
 ) -> DataFrame:
-    """Inverse of compress_series — exact round-trip."""
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            T.StructField(ts_name, T.TimestampType()),
-            T.StructField(v_name, T.DoubleType()),
-        ]
-    )
+    """Inverse of compress_series — exact round-trip; the timestamps come
+    back with ``chunk_start``'s type."""
+    out_schema = T.StructType([
+        chunks.schema[key],
+        T.StructField("_t", T.LongType()),
+        T.StructField(v_name, T.DoubleType()),
+    ])
 
     def dec(pdf: pd.DataFrame) -> pd.DataFrame:
-        frames = []
-        for _, row in pdf.iterrows():
-            ts_int, vals = gorilla.decode_chunk(bytes(row["blob"]))
-            frames.append(
-                pd.DataFrame(
-                    {
-                        key: row[key],
-                        ts_name: pd.to_datetime(ts_int, unit="s"),
-                        v_name: vals,
-                    }
-                )
-            )
-        return pd.concat(frames, ignore_index=True)
+        ts, vals = zip(*(gorilla.decode_chunk(bytes(b)) for b in pdf["blob"]))
+        return pd.DataFrame({
+            key: np.repeat(pdf[key].to_numpy(), [len(x) for x in ts]),
+            "_t": np.concatenate(ts) * _US,
+            v_name: np.concatenate(vals),
+        })
 
-    return chunks.groupBy(key, "chunk_start").applyInPandas(dec, schema=out_schema)
+    t = chunks.schema["chunk_start"].dataType
+    return chunks.groupBy(key, "chunk_start").applyInPandas(dec, schema=out_schema) \
+        .select(key, _from_micros(F.col("_t"), t).alias(ts_name), v_name)
 
 
 def compression_report(chunks: DataFrame) -> DataFrame:

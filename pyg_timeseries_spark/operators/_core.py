@@ -6,14 +6,17 @@ nothing to the state and outputs NaN — /root/reference/src/pyg_timeseries/
 _rolling.py:454-463) are reproduced *without* a join: rows with a NULL value
 are split off, the window runs over valid rows only, and the NULL rows are
 unioned back with a NULL output.  This is the Spark-native rendition of the
-reference's "compute on nona(a), reindex back" identity
-(/root/reference/tests/test_ts.py:54-68), and it is cheap: the union is a
-plan-level concat, and the window's partitionBy shuffle happens either way.
+reference's "compute on nona(a), reindex back" identity (its
+tests/test_ts.py:54-68).
 
-At 100 TB the window shuffle on ``key`` is the dominant cost; callers that
-chain several operators over the same key should apply them in one pass (the
-frame is already hash-partitioned by key after the first window, and Catalyst
-reuses the exchange for subsequent windows with the same partitioning).
+At 100 TB the window shuffle on ``key`` is the dominant cost, and chaining
+operators does not share it today.  ``apply_on_valid`` reads its input
+twice (valid rows and NULL rows), so each NaN-skipping op doubles its
+upstream plan, and the union of the two branches drops the key
+partitioning, so the next window shuffles again: a chain of
+``rolling_mean → ffill → diff → cumsum`` plans 1, 2, 4 and then 8
+``Exchange hashpartitioning`` nodes.  ROADMAP #3 keeps NULL rows in place
+so that a chain shares one exchange.
 """
 
 from __future__ import annotations

@@ -204,30 +204,26 @@ def boilerplate_coverage(
     shingles and the boilerplate subset.
 
     Scale shape: shingles explode map-side; one (shingle) aggregate
-    computes document frequency; the boilerplate set joins back BY
-    BROADCAST while small (``broadcast_rows`` guard — boilerplate is by
-    definition the repeated minority of the shingle vocabulary), so the
-    corpus text never shuffles and the exploded shingle rows never ride
-    an exchange either: the only shuffle is the wordcount-shaped
-    doc-frequency aggregate (map-side partial combine), plus per-doc
-    count rows.  word_shingles applies array_distinct per document, so
-    the exploded (id, shingle) rows are ALREADY distinct — an explicit
-    distinct() here would re-shuffle the whole shingle table for
-    nothing."""
+    computes document frequency; the boilerplate set joins back, and AQE
+    picks the join from the aggregate's measured size: a broadcast while
+    small (boilerplate is by definition the repeated minority of the
+    shingle vocabulary), so the corpus text never shuffles and the
+    exploded shingle rows never ride an exchange either: the only shuffle
+    is the wordcount-shaped doc-frequency aggregate (map-side partial
+    combine), plus per-doc count rows.  word_shingles applies
+    array_distinct per document, so the exploded (id, shingle) rows are
+    ALREADY distinct — an explicit distinct() here would re-shuffle the
+    whole shingle table for nothing."""
     sh = docs.select(
         F.col(id_col).alias("id"),
         F.explode(word_shingles(F.col(text), shingle_k)).alias("s"),
     )
-    broadcast_rows = 5_000_000
     boiler = (
         sh.groupBy("s").agg(F.count("*").alias("__df"))
         .filter(F.col("__df") >= min_doc_freq).select("s")
         .withColumn("__b", F.lit(1))
-        .persist()
     )
-    n_boiler_rows = boiler.count()
-    _bcast = (lambda d: F.broadcast(d)) if n_boiler_rows <= broadcast_rows else (lambda d: d)
-    per_doc = sh.join(_bcast(boiler), "s", "left").groupBy(
+    per_doc = sh.join(boiler, "s", "left").groupBy(
         "id"
     ).agg(
         F.count("*").alias("n_grams"),

@@ -72,3 +72,46 @@ def F_round(c):
     from pyspark.sql import functions as F
 
     return F.col(c).cast("double").alias(c)
+
+
+def test_spark_chunk_roundtrip_on_any_session_clock(spark, tmp_path):
+    """240 1m points across the New York fall-back (2024-11-03 04:00-08:00
+    UTC) come back on their own instants under UTC, Asia/Kolkata and New
+    York, and with encode and decode in different sessions; an NTZ series
+    comes back as the same wall times, still NTZ."""
+    from pyspark.sql import functions as F
+
+    from pyg_timeseries_spark.compress.chunks import (
+        compress_series, decompress_series,
+    )
+
+    t0 = 1_730_606_400  # 2024-11-03 04:00:00 UTC
+    rows = [("a", (t0 + 60 * i) * 1_000_000, float(i % 7)) for i in range(240)]
+    zones = ("UTC", "Asia/Kolkata", "America/New_York")
+
+    def session(tz):
+        s = spark.newSession()
+        s.conf.set("spark.sql.session.timeZone", tz)
+        return s
+
+    for i, (enc_tz, dec_tz) in enumerate(
+            [(z, z) for z in zones] + [(zones[2], zones[0]), (zones[0], zones[1])]):
+        enc = session(enc_tz)
+        series = enc.createDataFrame(rows, "source string, us long, sum_n_tok double")
+        for ts_type in ("timestamp", "timestamp_ntz"):
+            path = str(tmp_path / f"{ts_type}{i}")
+            df = series.select("source", F.timestamp_micros("us").cast(ts_type)
+                               .alias("bucket"), "sum_n_tok")
+            want = sorted(df.select("source", F.col("bucket").cast("string"),
+                                    "sum_n_tok").collect())
+            compress_series(df).write.parquet(path)
+            back = decompress_series(session(dec_tz).read.parquet(path))
+            assert back.schema["bucket"].dataType == df.schema["bucket"].dataType
+            if ts_type == "timestamp":  # the instants
+                got = sorted(back.select("source", F.unix_micros("bucket"),
+                                         "sum_n_tok").collect())
+                assert got == sorted(rows), (enc_tz, dec_tz)
+            else:  # the wall times, whatever either session's clock
+                got = sorted(back.select("source", F.col("bucket").cast("string"),
+                                         "sum_n_tok").collect())
+                assert got == want, (enc_tz, dec_tz)
