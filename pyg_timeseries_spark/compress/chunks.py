@@ -6,10 +6,9 @@ XOR-compressed values — and unpacked back losslessly.  Encode and decode run
 as Arrow-batched grouped pandas UDFs; blobs live in the rollup store like
 any other table, so the state/retention machinery applies.
 
-Chunking by a coarse window (1 day per chunk: ``compress_series``' date_trunc
-window, or the store's day-partition in ``TimeseriesEngine.compress_tier``)
-bounds blob size and preserves partition pruning: a time-range query only
-decodes the chunks whose window overlaps.
+Chunking by a coarse window (default 1 day per chunk) bounds blob size and
+preserves partition pruning: a time-range query only decodes the chunks
+whose window overlaps.
 
 Timestamps cross Arrow only as integers.  Spark turns each one into epoch
 micros before the encode UDF (``unix_micros``: the instant of a TIMESTAMP;
@@ -50,16 +49,21 @@ def _from_micros(c: Column, dtype: T.DataType) -> Column:
     return F.timestamp_micros(c)
 
 
-def encode_chunks(
-    df: DataFrame, key: str, ts: str, v: str, by: str,
+def compress_series(
+    df: DataFrame,
+    key: str = "source",
+    ts: str = "bucket",
+    v: str = "sum_n_tok",
+    chunk: str = "day",
 ) -> DataFrame:
-    """One Gorilla chunk per (``key``, ``by``) group of (key, ts, v) rows →
-    (key, by, chunk_start, n_points, blob) rows."""
+    """(key, ts, v) rows → (key, chunk_start, n_points, blob) rows, one per
+    key and ``chunk`` window (a ``date_trunc`` unit on the session clock)."""
     t = df.schema[ts].dataType
-    src = df.select(key, by, _to_micros(F.col(ts), t).alias("_t"),
+    win = _to_micros(F.date_trunc(chunk, F.col(ts)).cast(t), t)
+    src = df.select(key, win.alias("_w"), _to_micros(F.col(ts), t).alias("_t"),
                     F.col(v).cast("double").alias("_v"))
     out_schema = T.StructType([
-        df.schema[key], df.schema[by],
+        df.schema[key],
         T.StructField("_t0", T.LongType()),
         T.StructField("n_points", T.LongType()),
         T.StructField("blob", T.BinaryType()),
@@ -72,27 +76,12 @@ def encode_chunks(
             raise ValueError("Gorilla chunks store whole epoch seconds; "
                              f"{ts} has a sub-second timestamp")
         blob = gorilla.encode_chunk(us // _US, pdf["_v"].to_numpy())
-        return pd.DataFrame({key: [pdf[key].iloc[0]], by: [pdf[by].iloc[0]],
-                             "_t0": [us[0]], "n_points": [len(pdf)],
-                             "blob": [blob]})
+        return pd.DataFrame({key: [pdf[key].iloc[0]], "_t0": [us[0]],
+                             "n_points": [len(pdf)], "blob": [blob]})
 
-    return src.groupBy(key, by).applyInPandas(enc, schema=out_schema).select(
-        key, by, _from_micros(F.col("_t0"), t).alias("chunk_start"),
+    return src.groupBy(key, "_w").applyInPandas(enc, schema=out_schema).select(
+        key, _from_micros(F.col("_t0"), t).alias("chunk_start"),
         "n_points", "blob")
-
-
-def compress_series(
-    df: DataFrame,
-    key: str = "source",
-    ts: str = "bucket",
-    v: str = "sum_n_tok",
-    chunk: str = "day",
-) -> DataFrame:
-    """(key, ts, v) rows → (key, chunk_start, n_points, blob) rows, one per
-    key and ``chunk`` window (a ``date_trunc`` unit on the session clock)."""
-    t = df.schema[ts].dataType
-    win = _to_micros(F.date_trunc(chunk, F.col(ts)).cast(t), t)
-    return encode_chunks(df.withColumn("_w", win), key, ts, v, "_w").drop("_w")
 
 
 def decompress_series(

@@ -58,13 +58,13 @@ Layout::
                                    #    preds: {p_day: row predicate}}}},
                                    #  batches, raw_complete, lineage: [...],
                                    #  op_watermark: {op: bucket text},
-                                   #  derived: {table: {p_day:
-                                   #    [source commits, source pred]}}}
+                                   #  derived: {table: {parts, preds
+                                   #    of the table it was built from}}}
       rollup_1m/v{N}/p_day=…/…     # immutable commits, only touched days
       tokens_1m/v{N}/p_day=…/…     # bounded token chunk rows; the ids
                                    # DELTA_BINARY_PACKED (~2.2 B/token)
-      chunks_1m_{v}/v{N}/p_day=…/… # Gorilla chunks of a tier (derive:
-                                   # only the tier days that changed)
+      chunks_1m_{v}/v{N}/*.parquet # Gorilla chunks of a tier (derive:
+                                   # rebuilt only when the tier changed)
       raw/v{N}/*.parquet           # retained raw batches (exact_rebuild
                                    # with tokens)
       state_{op}/v{N}/*.parquet    # operator state rows (key, state[])
@@ -197,12 +197,8 @@ class RollupStore:
                           touched_parts: list[str]) -> int:
         """Write ``df`` (the full new content of ``touched_parts``) as an
         immutable commit and flip those partitions' manifest entries; a
-        touched partition with no rows in ``df`` leaves the manifest.  A
-        row's partition is its ``p_day`` column, or, without one, the day
-        of its ``bucket``."""
-        if PART_COL not in df.columns:
-            df = _with_pday(df)
-        return self._m.commit(name, df, PART_COL, touched_parts)
+        touched partition with no rows in ``df`` leaves the manifest."""
+        return self._m.commit(name, _with_pday(df), PART_COL, touched_parts)
 
     def drop_partitions(self, name: str, parts: list[str]) -> int:
         """Metadata-only commit: remove ``parts`` from the live manifest.
@@ -223,35 +219,24 @@ class RollupStore:
         return self._m.read(name, version, parts)
 
     def derive(self, name: str, src: str,
-               build: Callable[[DataFrame], DataFrame]) -> DataFrame | None:
-        """The table ``name`` built day by day from the day-partitioned
-        table ``src`` and kept up to date incrementally; ``build`` maps rows
-        of some of ``src``'s day-partitions, each with its ``p_day`` label
-        as stored, to the rows of the same days of ``name``.
+               build: Callable[[DataFrame], DataFrame]) -> DataFrame:
+        """The whole table ``name`` = ``build`` of ``src``'s live rows,
+        rebuilt only when ``src`` changed.
 
-        The store records, per day of ``name``, the commit versions and the
-        trim predicate of ``src``'s day it was built from.  A call rebuilds
-        only the days whose record differs from ``src``'s live one (a day
-        an ingest re-pointed or an expire trimmed) and drops the days that
-        left ``src``, in one manifest swap; on an unchanged ``src`` it runs
-        no Spark job and writes no file.  A day of ``name`` is a pure
-        function of the rows of its ``src`` day, so the table equals a
-        rebuild of every day."""
-        preds = self._m._preds(src)
-        live = {p: [vs, preds.get(p)] for p, vs in self._m.parts(src).items()}
-        done = self.meta.get("derived", {}).get(name, {})
-        changed = sorted(p for p in live if done.get(p) != live[p])
-        gone = sorted(set(done) - set(live))
-        if changed or gone:
+        The store records the snapshot of ``src`` (its live {partition:
+        commit versions} and trim predicates) that ``name`` was built from,
+        in the same swap as ``name``'s commit.  A call whose record equals
+        ``src``'s live snapshot runs no Spark job and writes no file; any
+        commit, drop or trim of ``src`` since (an ingest, an expire) makes
+        the call rebuild the whole table.  A table written without a record
+        is rebuilt once."""
+        live = {"parts": self._m.parts(src), "preds": dict(self._m._preds(src))}
+        if self.meta.get("derived", {}).get(name) != live:
+            rows = self.read_table(src)
+            if rows is None:
+                raise ValueError(f"{src} is empty — ingest first")
             with self._m.operation():
-                if changed:
-                    # the label as stored, whatever the session timezone
-                    rows = self.read_table(src, parts=changed).withColumn(
-                        PART_COL, F.regexp_extract(
-                            "_metadata.file_path", f"/{PART_COL}=([^/]+)/", 1))
-                    self.commit_partitions(name, build(rows), changed)
-                if gone:
-                    self.drop_partitions(name, gone)
+                self.write_table(name, build(rows))
                 self.meta.setdefault("derived", {})[name] = live
         return self.read_table(name)
 

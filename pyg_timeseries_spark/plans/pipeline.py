@@ -10,7 +10,7 @@ This is the integration layer a user drives (SURVEY.md §3.4): a
                                    persisting its state in the store under
                                    op_name; next call resumes exactly
   compress_tier(tier)            — Gorilla chunk table for the tier,
-                                   re-encoded only for the days that changed
+                                   re-encoded only when the tier changed
   lineage()                      — per-batch, per-stage row counts of each
                                    committed day-partition
 """
@@ -22,8 +22,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyg_timeseries_spark.compress.chunks import encode_chunks
-from pyg_timeseries_spark.plans.checkpoint import PART_COL, RollupStore
+from pyg_timeseries_spark.compress.chunks import compress_series
+from pyg_timeseries_spark.plans.checkpoint import RollupStore
 
 
 class TimeseriesEngine:
@@ -82,18 +82,15 @@ class TimeseriesEngine:
         return data
 
     # -- compression --------------------------------------------------------
-    def compress_tier(self, tier: str, v: str = "sum_n_tok") -> DataFrame | None:
-        """The tier's ``v`` series as Gorilla chunks, one per (source,
-        day-partition), in the day-partitioned table ``chunks_{tier}_{v}``
-        (Gorilla's closed block: a day's chunk is rebuilt only when the
-        day's rows change).  Kept by ``RollupStore.derive``: a call
-        re-encodes only the days an ingest or an expire changed since the
-        last call and drops the days that left the tier; on an unchanged
-        tier it runs no Spark job and writes no file.  None on an empty
-        tier."""
+    def compress_tier(self, tier: str, v: str = "sum_n_tok") -> DataFrame:
+        """The tier's ``v`` series as Gorilla chunks, one per (source, day),
+        in the table ``chunks_{tier}_{v}``.  Kept by ``RollupStore.derive``:
+        the chunks are re-encoded only when an ingest or an expire changed
+        the tier since the last call; on an unchanged tier a call runs no
+        Spark job and writes no file."""
         return self.store.derive(
             f"chunks_{tier}_{v}", f"rollup_{tier}",
-            lambda rows: encode_chunks(rows, "source", "bucket", v, PART_COL))
+            lambda df: compress_series(df, key="source", ts="bucket", v=v))
 
     def lineage(self) -> DataFrame:
         return self.store.lineage()

@@ -205,12 +205,15 @@ def boilerplate_coverage(
 
     Scale shape: shingles explode map-side; one (shingle) aggregate
     computes document frequency; the boilerplate set joins back, and AQE
-    picks the join from the aggregate's measured size: a broadcast while
-    small (boilerplate is by definition the repeated minority of the
-    shingle vocabulary), so the corpus text never shuffles and the
+    picks the join from the aggregate's measured size.  Below
+    ``spark.sql.adaptive.autoBroadcastJoinThreshold`` (10 MB by default)
+    it is a broadcast (boilerplate is by definition the repeated minority
+    of the shingle vocabulary), so the corpus text never shuffles and the
     exploded shingle rows never ride an exchange either: the only shuffle
     is the wordcount-shaped doc-frequency aggregate (map-side partial
-    combine), plus per-doc count rows.  word_shingles applies
+    combine), plus per-doc count rows.  Above it the join is a shuffled
+    one, and the exploded shingle rows go through an exchange to meet the
+    boilerplate set.  word_shingles applies
     array_distinct per document, so the exploded (id, shingle) rows are
     ALREADY distinct — an explicit distinct() here would re-shuffle the
     whole shingle table for nothing."""
